@@ -2,8 +2,11 @@ package graft.pipeline
 
 import graft.functions.DetHash
 import graft.text.TextOps
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
+
+import scala.reflect.ClassTag
 
 /** Public dedup API over any (doc_id, text) corpus — the library
   * surface behind the px02/px03/px19/px21 gated queries (which remain
@@ -203,22 +206,56 @@ object Dedup {
     labels
   }
 
+  /** Block budget of [[connectedComponents]]: blocks shorten label
+    * chains geometrically (O(log diameter) blocks), so no real graph
+    * comes near it; running out refuses instead of returning partial
+    * labels.
+    */
+  private final val MaxBlocks = 50
+
+  /** Edges per union-find chunk in [[contractEdges]]: a task holds the
+    * arrays of at most this many edges (a few MB) at any partition
+    * size.
+    */
+  private[pipeline] final val ContractChunk = 1 << 16
+
   /** EXACT connected components over a candidate edge list: min-label
     * propagation WITH POINTER JUMPING to fixpoint — the scale-correct
     * upgrade of [[clusters]]' fixed-round approximation (a 3-round
     * pass mislabels any component of diameter > 3, and real dup graphs
     * get big: the sf0.1 LSH graph has a 1942-doc component of diameter
-    * ≥ 37 from near-dup transitivity). Each block does one neighbor
-    * propagation plus two label-shortcut steps (lbl ← lbl(lbl)), so
-    * label chains collapse geometrically: O(log diameter) blocks, not
-    * O(diameter) rounds. `localCheckpoint` per block keeps the plan
-    * depth constant; `maxIter` bounds blocks.
-    * → (doc_id, lbl) with lbl = component minimum doc_id.
+    * ≥ 37 from near-dup transitivity).
+    *
+    * Three phases (the contract-then-propagate shape of Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC 2014):
+    *  1. [[contractEdges]] replaces each partition's edges by star
+    *     edges to their local component minimum — narrow, inside the
+    *     edge frame's checkpoint job.
+    *  2. Seed labels with one propagation from the docs' identity
+    *     labels (each node's closed-neighbourhood minimum) and certify
+    *     them: a graph the contraction solved (every component inside
+    *     one chunk of one partition) stops here, after two
+    *     propagations and one count.
+    *  3. Otherwise run blocks of four propagations, two label
+    *     shortcuts (lbl ← lbl(lbl)) and one certifying propagation,
+    *     each block checkpointed so the plan depth stays constant,
+    *     until the certificate holds.
+    *
+    * Labels start from `docs` only: an edge endpoint absent from
+    * `docs` is labeled if its component holds a doc and left out
+    * otherwise, and edges with a NULL endpoint connect nothing.
+    * → (doc_id, lbl) with lbl = the component's minimum doc_id, doc_id
+    * of the caller's type (bigint, or string from `Jobs.loadDocs`).
     */
-  def connectedComponents(docs: DataFrame, edges: DataFrame,
-                          maxIter: Int = 50): DataFrame = {
+  def connectedComponents(docs: DataFrame, edges: DataFrame): DataFrame = {
+    // Every checkpoint is taken LAZILY and materialized by the one job
+    // that follows it, so the frame exists before that job can fail and
+    // the finally below releases it on every exit path. The
+    // materializing job is a block's only consumer until it ends
+    // (r3/r4 lesson: lazily-checkpointed blocks with CONCURRENT consumer
+    // scans hit the block-level compute-or-wait lock storm).
     val ids = docs.select("doc_id")
-    val bi = biEdges(ids, edges).localCheckpoint()
+    val bi = biEdges(ids, contractEdges(edges)).localCheckpoint(eager = false)
     def step(l: DataFrame): DataFrame = propagate(bi, l)
     // Pointer jump: lbl(u) ← lbl(lbl(u)). Labels are doc ids, every
     // doc is present in l, and lbl(u) is in u's component, so the
@@ -239,83 +276,135 @@ object Dedup {
     // an incident edge whose endpoints disagree; zero such nodes ⟺
     // every edge is label-consistent (the identity edges make the
     // neighborhood closed, so both directions of each edge are seen).
-    // The certificate thus rides the step's own shuffle — the check
-    // costs a narrow scan of the checkpointed block output instead of
-    // the former bi⋈labels⋈labels second action per block (r4 verdict
-    // item 4).
+    // The certificate rides the step's own shuffle, and it certifies
+    // the returned labels too: if its input labels are edge-consistent,
+    // each component is uniformly labeled and the step is the identity.
     def certify(l: DataFrame): DataFrame = bi
       .join(l.select(col("doc_id").as("other"), col("lbl").as("olbl")),
         Seq("other"))
       .groupBy(col("node").as("doc_id"))
       .agg(min("olbl").as("lbl"), max("olbl").as("mx"))
-    var labels = ids.select(col("doc_id"), col("doc_id").as("lbl"))
-    var prevCkpt: DataFrame = null
-    var block = 0
-    var inconsistent = 1L
-    while (inconsistent > 0 && block < maxIter) {
-      // five propagations + two shortcuts per CHECKPOINTED block: the
-      // per-action scheduling constant dominates at small scale, so
-      // work-per-action is the lever (measured: 17 one-step blocks ≈
-      // 10 s, 6 three-step blocks ≈ 5 s on the sf0.1 giant component;
-      // with the certifying step riding the block, ProbeCc showed the
-      // one-action loop beats the separate-count loop 3.4–3.7 vs
-      // 4.1–4.4 s, and the ProbeCcMix sweep over (steps, jumps) mixes
-      // found 4 steps + 2 jumps converging in 4 blocks instead of 5 —
-      // best mix both rounds, 3.3–4.0 s vs 3.7–6.5 s for 3 steps on
-      // checkpointed edges, identical labels for every mix; inside the
-      // full query the LSH-candidate build dominates and the in-bench
-      // pair A/B is a wash, so the win is the removed action, not
-      // wall time at this SF).
-      // EAGER checkpoint (r3/r4 lesson): lazily-checkpointed blocks
-      // with concurrent consumer scans hit the block-level
-      // compute-or-wait lock storm; one bounded materialization per
-      // block is deterministic. The certifying step runs LAST: its mx
-      // column certifies the post-jump labels — if those are already
-      // edge-consistent, every component is uniformly labeled by a
-      // member id, so the final min-propagation is the identity and
-      // the certificate transfers to the returned labels; if not, the
-      // final step still advances the fixpoint.
-      val flagged = certify(jump(jump(step(step(step(step(labels)))))))
-        .localCheckpoint() // truncate lineage: plan depth stays O(1)
-      inconsistent = flagged.filter(col("lbl") =!= col("mx")).count()
-      labels = flagged.drop("mx")
-      // release the SUPERSEDED block's checkpoint storage (review r19,
-      // the NearDupStream.resolveKeepersCounted r18 rule): the new
-      // block is already materialized (localCheckpoint is eager), so
-      // the previous block's RDD blocks would otherwise pin executor
-      // storage for the whole session — up to maxIter frames per call
-      // in a long-lived service
-      if (prevCkpt != null) unpersistCheckpoint(prevCkpt)
-      prevCkpt = flagged
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] block=$block inconsistent=$inconsistent t=${System.nanoTime()/1e9}")
-      block += 1
+
+    var blocks = List.empty[DataFrame] // block checkpoints owned, newest first
+    // checkpoint a certifying block → its inconsistent-node count, then
+    // release the block it superseded (review r19: superseded blocks
+    // would otherwise pin executor storage for the session)
+    def certified(block: DataFrame): Long = {
+      blocks = block.localCheckpoint(eager = false) :: blocks
+      val inconsistent = blocks.head.filter(col("lbl") =!= col("mx")).count()
+      blocks.tail.foreach(unpersistCheckpoint)
+      blocks = blocks.take(1)
+      inconsistent
     }
-    // the contract is EXACT components — refusing beats silently
-    // returning partial labels when the block budget runs out; every
-    // throw path releases the blocks the loop owns (r18 rule), and on
-    // success the edge frame is released too (the returned labels ride
-    // ONLY their own final checkpoint)
-    if (inconsistent != 0) {
+    try {
+      checkpointRdds(bi).foreach(_.count())
+      // seed: one propagation from the docs' identity labels
+      var inconsistent = certified(certify(
+        step(ids.select(col("doc_id"), col("doc_id").as("lbl")))))
+      var n = 0
+      while (inconsistent > 0) {
+        // the contract is EXACT components
+        if (n == MaxBlocks) throw new IllegalArgumentException(
+          s"requirement failed: connectedComponents did not converge " +
+            s"within $MaxBlocks blocks ($inconsistent nodes still have a " +
+            "label-inconsistent edge)")
+        // four propagations + two shortcuts per CHECKPOINTED block: the
+        // per-action scheduling constant dominates at small scale, so
+        // work-per-action is the lever (measured: 17 one-step blocks ≈
+        // 10 s, 6 three-step blocks ≈ 5 s on the sf0.1 giant component;
+        // a sweep over (steps, jumps) mixes found 4 + 2 converging in 4
+        // blocks instead of 5, identical labels for every mix)
+        inconsistent = certified(certify(
+          jump(jump(step(step(step(step(blocks.head.drop("mx")))))))))
+        n += 1
+      }
+      val labels = blocks.head.drop("mx")
+      blocks = Nil // the returned labels ride their own checkpoint
+      labels
+    } finally {
+      blocks.foreach(unpersistCheckpoint)
       unpersistCheckpoint(bi)
-      if (prevCkpt != null) unpersistCheckpoint(prevCkpt)
-      throw new IllegalArgumentException(
-        s"requirement failed: connectedComponents did not converge " +
-          s"within $maxIter blocks ($inconsistent nodes still have a " +
-          "label-inconsistent edge); raise maxIter")
     }
-    unpersistCheckpoint(bi)
-    labels
   }
 
-  /** Unpersist the localCheckpoint block storage behind `df` (every
-    * LogicalRDD in its analyzed plan). Only called on frames this
-    * object created and owns — the NearDupStream r18 pattern.
+  /** Partition-local contraction of a (d1, d2) edge list: a union-find
+    * over each chunk of [[ContractChunk]] edges of a partition replaces
+    * them by (local root, node) star edges. Narrow, never more rows
+    * than it reads, and component-exact: each star spans nodes the
+    * input connects, and its root is their minimum id, so a component
+    * that lies in one chunk becomes one star. `mapPartitions`, because
+    * union-find is sequential within a partition and no built-in
+    * expresses it (PLANS.md). Bigint and string ids keep their type;
+    * any other id type passes through uncontracted (still exact).
+    */
+  private def contractEdges(edges: DataFrame): DataFrame = {
+    val e = edges.select("d1", "d2")
+      .filter(col("d1").isNotNull && col("d2").isNotNull)
+    val enc = org.apache.spark.sql.Encoders.row(e.schema)
+    e.schema.map(_.dataType) match {
+      case Seq(LongType, LongType) => e.mapPartitions(localStars[Long] _)(enc)
+      case Seq(StringType, StringType) =>
+        e.mapPartitions(localStars[String] _)(enc)
+      case _ => e
+    }
+  }
+
+  /** One partition's (d1, d2) rows → (root, node) star edges, chunk by
+    * chunk: the chunk's distinct ids sorted into a primitive array (so
+    * index order is id order), a union-find over their indices that
+    * always links the larger root under the smaller (every root is its
+    * set's minimum id), then one star edge per non-root id. For string
+    * ids the local order is Java's UTF-16 order, which can differ from
+    * Spark's UTF-8 byte order on supplementary characters; a root is
+    * then a non-minimum member, which costs propagation, never a
+    * label.
+    */
+  private def localStars[T: ClassTag: Ordering](rows: Iterator[Row]): Iterator[Row] =
+    Iterator.continually {
+      val ends = Array.newBuilder[T]
+      var n = 0
+      while (n < ContractChunk && rows.hasNext) {
+        val r = rows.next()
+        ends += r.getAs[T](0) += r.getAs[T](1)
+        n += 1
+      }
+      ends.result()
+    }.takeWhile(_.nonEmpty).flatMap { ends =>
+      val ids = ends.sorted
+      var m = 0
+      for (i <- ids.indices)
+        if (m == 0 || ids(i) != ids(m - 1)) { ids(m) = ids(i); m += 1 }
+      val parent = Array.range(0, m)
+      def find(i0: Int): Int = {
+        var i = i0
+        while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+        i
+      }
+      def index(x: T): Int = ids.search(x, 0, m).insertionPoint
+      for (k <- ends.indices by 2) {
+        val a = find(index(ends(k)))
+        val b = find(index(ends(k + 1)))
+        if (a < b) parent(b) = a else parent(a) = b
+      }
+      Iterator.range(0, m).map(i => (find(i), i)).collect {
+        case (r, i) if r != i => Row(ids(r), ids(i))
+      }
+    }
+
+  /** The localCheckpoint RDDs behind `df` (every LogicalRDD in its
+    * analyzed plan).
+    */
+  private def checkpointRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }
+
+  /** Unpersist the localCheckpoint block storage behind `df`. Only
+    * called on frames this object created and owns — the NearDupStream
+    * r18 pattern.
     */
   private def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr
-    }.foreach(_.rdd.unpersist(blocking = false))
+    checkpointRdds(df).foreach(_.unpersist(blocking = false))
 
   /** Near-dup survivor filter: keep each cluster's min-id doc.
     * → the kept (doc_id) set as a one-column frame for a semi-join.

@@ -45,7 +45,7 @@ object ProbeAnchorCap {
         concat_ws("\t", array_sort(collect_list(col("anchor")))),
         1, cap).as("anchortext"))
 
-    // alternate the arm order per rep (the ProbeCc/ProbePx04d
+    // alternate the arm order per rep (the ProbePx04d
     // discipline): a fixed old→new order makes run-1 old absorb the
     // shape family's first-codegen/JIT cost and overstates the new
     // shape's win

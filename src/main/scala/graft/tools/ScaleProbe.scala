@@ -140,7 +140,7 @@ object ScaleProbe {
       // The r5 verdict's headline item: the COMPOSED curation +
       // retrieval chain at N=500 (~2.5M docs), measured per-phase with
       // spill/memory columns (PhaseListener), instead of per-piece
-      // probes. Run with GRAFT_CC_DEBUG=1 to also log CC block counts.
+      // probes.
       import graft.ir.Retrieval
       import graft.pipeline.Dedup
       val pl = new PhaseListener
@@ -197,9 +197,9 @@ object ScaleProbe {
           Retrieval.bm25Final, conjunctive = false, k = 10).count())
 
       // the two growth curves the verdict flagged: LSH edge count and
-      // CC convergence (blocks via GRAFT_CC_DEBUG, components as rows
-      // here). The replicated corpus is ALL mega-buckets (500 copies
-      // of every doc share every signature), so the clique pair count
+      // CC convergence (components as rows here). The replicated
+      // corpus is ALL mega-buckets (500 copies of every doc share
+      // every signature), so the clique pair count
       // is computed arithmetically per bucket — materializing it is
       // exactly the quadratic blowup the star edges exist to avoid.
       tm("lsh_clique_pairs_upper")(

@@ -1,6 +1,11 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+
+import scala.reflect.ClassTag
+import scala.util.Random
 
 /** Exact CC vs the fixed-round approximation: a dup CHAIN (near-dup
   * transitivity A≈B≈C≈…) of diameter > 3 is exactly the case the
@@ -173,5 +178,170 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(after <= before + 1,
       s"persistent RDDs grew $before -> $after: superseded " +
         "connectedComponents checkpoints are leaking")
+  }
+
+  /** Driver-side oracle: union-find over docs ∪ edge endpoints, every
+    * root its set's minimum → node -> component minimum id.
+    */
+  private def oracle[T: Ordering](docs: Seq[T], edges: Seq[(T, T)]): Map[T, T] = {
+    val parent = scala.collection.mutable.HashMap.empty[T, T]
+    def find(x0: T): T = {
+      var x = x0
+      while (parent(x) != x) x = parent(x)
+      var y = x0 // compress the path just walked
+      while (parent(y) != x) { val next = parent(y); parent(y) = x; y = next }
+      x
+    }
+    (docs ++ edges.flatMap(e => Seq(e._1, e._2))).foreach(x => parent.getOrElseUpdate(x, x))
+    for ((a, b) <- edges) {
+      val (ra, rb) = (find(a), find(b))
+      if (Ordering[T].lt(ra, rb)) parent(rb) = ra else parent(ra) = rb
+    }
+    parent.keys.map(k => k -> find(k)).toMap
+  }
+
+  /** A seeded adversarial graph over ids 0..n-1, relabeled by a random
+    * permutation: a chain of diameter ≥ 64, a cycle, a star whose
+    * center is not its minimum, small random components, duplicate,
+    * reversed and self-loop edges, and isolated docs; edge order
+    * shuffled. → (doc ids, edges).
+    */
+  private def adversarialGraph(seed: Int): (Seq[Long], Seq[(Long, Long)]) = {
+    val rnd = new Random(seed)
+    val n = 400
+    val id = rnd.shuffle((0L until n.toLong).toVector).map(_ * 7919L + 13L)
+    val chain = (0 until 80).map(i => (id(i), id(i + 1)))
+    val cycle = (100 until 130).map(i => (id(i), id(if (i == 129) 100 else i + 1)))
+    val star = (141 until 165).map(i => (id(140), id(i)))
+    val small = (200 until 300).map(i => (id(i), id(200 + rnd.nextInt(100))))
+    val base = chain ++ cycle ++ star ++ small
+    val dups = base.take(40) ++ base.takeRight(40).map(_.swap) ++
+      (0 until 20).map(_ => { val x = id(rnd.nextInt(n)); (x, x) })
+    // ids 81-99, 130-139, 165-199 and 300-399 carry at most a
+    // self-loop: isolated docs
+    (id, rnd.shuffle(base ++ dups))
+  }
+
+  private def ccLabels[T: ClassTag](docs: Seq[T], edges: Seq[(T, T)],
+                                    parts: Int): Map[T, T] = {
+    import spark.implicits._
+    val (docDf, edgeDf) = implicitly[ClassTag[T]].runtimeClass match {
+      case c if c == classOf[Long] =>
+        (docs.asInstanceOf[Seq[Long]].toDF("doc_id"),
+          edges.asInstanceOf[Seq[(Long, Long)]].toDF("d1", "d2"))
+      case _ =>
+        (docs.asInstanceOf[Seq[String]].toDF("doc_id"),
+          edges.asInstanceOf[Seq[(String, String)]].toDF("d1", "d2"))
+    }
+    Dedup.connectedComponents(docDf, edgeDf.repartition(parts)).collect()
+      .map(r => r.getAs[T](0) -> r.getAs[T](1)).toMap
+  }
+
+  test("property: labels equal a driver-side union-find oracle " +
+    "(bigint and string ids; 1, 3 and 16 edge partitions)") {
+    for (parts <- Seq(1, 3, 16); seed <- Seq(parts, parts + 100)) {
+      val (ids, edges) = adversarialGraph(seed)
+      assert(ccLabels(ids, edges, parts) == oracle(ids, edges),
+        s"bigint ids, seed $seed, $parts partitions")
+      // string ids whose order differs from the numeric one ("n13" <
+      // "n7"): the contraction must keep the type and the string order
+      val sIds = ids.map(i => s"n$i")
+      val sEdges = edges.map { case (a, b) => (s"n$a", s"n$b") }
+      assert(ccLabels(sIds, sEdges, parts) == oracle(sIds, sEdges),
+        s"string ids, seed $seed, $parts partitions")
+    }
+  }
+
+  test("endpoints outside docs: labels start from docs only") {
+    import spark.implicits._
+    // 50 and 80-90 hang off docs; 60-70 is a component with no doc,
+    // which the contraction turns into a star like any other
+    val docs = Seq(1L, 2L).toDF("doc_id")
+    val edges = Seq((1L, 50L), (60L, 70L), (2L, 80L), (80L, 90L))
+      .toDF("d1", "d2")
+    for (parts <- Seq(1, 3))
+      assert(labelsOf(Dedup.connectedComponents(docs, edges.repartition(parts)))
+        == Map(1L -> 1L, 50L -> 1L, 2L -> 2L, 80L -> 2L, 90L -> 2L))
+  }
+
+  test("property: an empty edge set labels every doc by itself") {
+    val ids = Seq(5L, 3L, 9L)
+    assert(ccLabels(ids, Seq.empty[(Long, Long)], 1) ==
+      ids.map(i => i -> i).toMap)
+  }
+
+  test("property: a partition larger than the contraction chunk " +
+    "still gets exact labels") {
+    val n = Dedup.ContractChunk + 1500
+    val rnd = new Random(7)
+    val id = rnd.shuffle((0L to n.toLong).toVector)
+    // a relabeled chain: no chunk holds a whole component
+    val edges = (0 until n).map(i => (id(i), id(i + 1)))
+    assert(ccLabels(id, edges, 1) == oracle(id, edges))
+  }
+
+  /** Jobs one call to connectedComponents runs, counted by a listener. */
+  private def ccJobs(docs: DataFrame, edges: DataFrame): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.graft.Listeners.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      Dedup.connectedComponents(docs, edges)
+      org.apache.spark.graft.Listeners.drain(sc)
+    } finally sc.removeSparkListener(l)
+    jobs.get
+  }
+
+  test("one edge partition: contraction solves the graph and CC runs " +
+    "no full block (listener-counted jobs)") {
+    import spark.implicits._
+    // a chain of diameter 299: min-label propagation alone needs
+    // O(log 299) blocks, the one-partition contraction needs none
+    val n = 300L
+    val docs = spark.range(n).select($"id".as("doc_id"))
+    val edges = spark.range(n - 1).select($"id".as("d1"), ($"id" + 1L).as("d2"))
+    // the edge checkpoint's job, the seed-and-certify stages and the
+    // certificate count
+    val solved = ccJobs(docs, edges.repartition(1))
+    assert(solved <= 8, s"$solved jobs: a one-partition CC ran a full block")
+    // non-vacuity: over 16 partitions the chain needs blocks, and they
+    // cost more jobs than the whole one-partition call
+    val blocked = ccJobs(docs, edges.repartition(16))
+    assert(blocked - solved > 8, s"blocked $blocked vs solved $solved")
+  }
+
+  test("a failing block action releases every checkpoint the call took") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // a chain over 16 edge partitions: full blocks follow the seed
+    val n = 3000L
+    val docs = spark.range(n).select($"id".as("doc_id"))
+    val edges = spark.range(n - 1)
+      .select($"id".as("d1"), ($"id" + 1L).as("d2")).repartition(16)
+    org.apache.spark.graft.Listeners.drain(sc)
+    val before = sc.getPersistentRDDs.size
+    // once the edge frame and a block checkpoint are held, cancel every
+    // job: the call fails inside a block action
+    @volatile var heldAtFailure = -1
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        if (heldAtFailure < 0 && sc.getPersistentRDDs.size >= before + 2)
+          heldAtFailure = sc.getPersistentRDDs.size
+        if (heldAtFailure >= 0) sc.cancelJob(e.jobId)
+      }
+    }
+    sc.addSparkListener(l)
+    try intercept[Exception](Dedup.connectedComponents(docs, edges))
+    finally sc.removeSparkListener(l)
+    assert(heldAtFailure >= before + 2,
+      s"the failure hit before a block checkpoint existed ($heldAtFailure)")
+    assert(sc.getPersistentRDDs.size == before,
+      "a failed connectedComponents leaked checkpoints")
   }
 }
