@@ -5,6 +5,7 @@ import graft.text.TextOps
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.util.LongAccumulator
 
 import scala.reflect.ClassTag
 
@@ -161,11 +162,15 @@ object Dedup {
   /** Bidirectional (node, other) edge list plus identity edges — the
     * propagation graph shared by [[clusters]] and
     * [[connectedComponents]] (one definition so edge symmetrization
-    * can never diverge between the two paths).
+    * can never diverge between the two paths). Both directions come
+    * from ONE read of `edges`, so a narrow step behind them (the
+    * contraction in [[connectedComponents]]) runs once per partition.
     */
   private def biEdges(ids: DataFrame, edges: DataFrame): DataFrame =
-    edges.select(col("d1").as("node"), col("d2").as("other"))
-      .unionByName(edges.select(col("d2").as("node"), col("d1").as("other")))
+    edges.select(explode(array(
+        struct(col("d1").as("node"), col("d2").as("other")),
+        struct(col("d2").as("node"), col("d1").as("other")))).as("e"))
+      .select("e.node", "e.other")
       .unionByName(ids.select(col("doc_id").as("node"),
         col("doc_id").as("other")))
 
@@ -231,15 +236,17 @@ object Dedup {
     *  1. [[contractEdges]] replaces each partition's edges by star
     *     edges to their local component minimum — narrow, inside the
     *     edge frame's checkpoint job.
-    *  2. Seed labels with one propagation from the docs' identity
-    *     labels (each node's closed-neighbourhood minimum) and certify
-    *     them: a graph the contraction solved (every component inside
-    *     one chunk of one partition) stops here, after two
-    *     propagations and one count.
-    *  3. Otherwise run blocks of four propagations, two label
-    *     shortcuts (lbl ← lbl(lbl)) and one certifying propagation,
-    *     each block checkpointed so the plan depth stays constant,
-    *     until the certificate holds.
+    *  2. Only when one chunk held every edge, so that each component
+    *     is now a star around its minimum: seed labels with one
+    *     propagation from the docs' identity labels and certify them.
+    *     Such a graph stops here, after two propagations and one count.
+    *  3. Otherwise, or if the seed is not certified, run blocks of four
+    *     propagations, two label shortcuts (lbl ← lbl(lbl)) and one
+    *     certifying propagation, each block checkpointed so the plan
+    *     depth stays constant, until the certificate holds. Without a
+    *     seed the first block starts from the identity labels, as it
+    *     did before the contraction: edges spread over several chunks
+    *     pay no seed round.
     *
     * Labels start from `docs` only: an edge endpoint absent from
     * `docs` is labeled if its component holds a doc and left out
@@ -255,7 +262,10 @@ object Dedup {
     // (r3/r4 lesson: lazily-checkpointed blocks with CONCURRENT consumer
     // scans hit the block-level compute-or-wait lock storm).
     val ids = docs.select("doc_id")
-    val bi = biEdges(ids, contractEdges(edges)).localCheckpoint(eager = false)
+    val chunks = docs.sparkSession.sparkContext.longAccumulator
+    val contracted = contractEdges(edges, chunks)
+    val bi = biEdges(ids, contracted.getOrElse(edges))
+      .localCheckpoint(eager = false)
     def step(l: DataFrame): DataFrame = propagate(bi, l)
     // Pointer jump: lbl(u) ← lbl(lbl(u)). Labels are doc ids, every
     // doc is present in l, and lbl(u) is in u's component, so the
@@ -298,11 +308,16 @@ object Dedup {
     }
     try {
       checkpointRdds(bi).foreach(_.count())
-      // seed: one propagation from the docs' identity labels
-      var inconsistent = certified(certify(
-        step(ids.select(col("doc_id"), col("doc_id").as("lbl")))))
+      val identity = ids.select(col("doc_id"), col("doc_id").as("lbl"))
+      // the seed round, only where the contraction made every component
+      // a star (-1: not certified yet). A retried task can only raise
+      // the chunk count: that skips the seed, never changes a label.
+      var inconsistent =
+        if (contracted.isDefined && chunks.value <= 1)
+          certified(certify(step(identity)))
+        else -1L
       var n = 0
-      while (inconsistent > 0) {
+      while (inconsistent != 0) {
         // the contract is EXACT components
         if (n == MaxBlocks) throw new IllegalArgumentException(
           s"requirement failed: connectedComponents did not converge " +
@@ -314,8 +329,9 @@ object Dedup {
         // 10 s, 6 three-step blocks ≈ 5 s on the sf0.1 giant component;
         // a sweep over (steps, jumps) mixes found 4 + 2 converging in 4
         // blocks instead of 5, identical labels for every mix)
+        val from = blocks.headOption.fold(identity)(_.drop("mx"))
         inconsistent = certified(certify(
-          jump(jump(step(step(step(step(blocks.head.drop("mx")))))))))
+          jump(jump(step(step(step(step(from))))))))
         n += 1
       }
       val labels = blocks.head.drop("mx")
@@ -334,18 +350,22 @@ object Dedup {
     * input connects, and its root is their minimum id, so a component
     * that lies in one chunk becomes one star. `mapPartitions`, because
     * union-find is sequential within a partition and no built-in
-    * expresses it (PLANS.md). Bigint and string ids keep their type;
-    * any other id type passes through uncontracted (still exact).
+    * expresses it (PLANS.md). `chunks` counts the non-empty chunks the
+    * job that computes the result saw. Bigint and string ids keep
+    * their type; any other id type → None (callers use the edges
+    * uncontracted, still exact).
     */
-  private def contractEdges(edges: DataFrame): DataFrame = {
+  private def contractEdges(edges: DataFrame,
+                            chunks: LongAccumulator): Option[DataFrame] = {
     val e = edges.select("d1", "d2")
       .filter(col("d1").isNotNull && col("d2").isNotNull)
     val enc = org.apache.spark.sql.Encoders.row(e.schema)
     e.schema.map(_.dataType) match {
-      case Seq(LongType, LongType) => e.mapPartitions(localStars[Long] _)(enc)
+      case Seq(LongType, LongType) =>
+        Some(e.mapPartitions(localStars[Long](_, chunks))(enc))
       case Seq(StringType, StringType) =>
-        e.mapPartitions(localStars[String] _)(enc)
-      case _ => e
+        Some(e.mapPartitions(localStars[String](_, chunks))(enc))
+      case _ => None
     }
   }
 
@@ -359,7 +379,8 @@ object Dedup {
     * then a non-minimum member, which costs propagation, never a
     * label.
     */
-  private def localStars[T: ClassTag: Ordering](rows: Iterator[Row]): Iterator[Row] =
+  private def localStars[T: ClassTag: Ordering](
+      rows: Iterator[Row], chunks: LongAccumulator): Iterator[Row] =
     Iterator.continually {
       val ends = Array.newBuilder[T]
       var n = 0
@@ -370,6 +391,7 @@ object Dedup {
       }
       ends.result()
     }.takeWhile(_.nonEmpty).flatMap { ends =>
+      chunks.add(1)
       val ids = ends.sorted
       var m = 0
       for (i <- ids.indices)

@@ -316,6 +316,43 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(blocked - solved > 8, s"blocked $blocked vs solved $solved")
   }
 
+  /** Label rounds one call to connectedComponents runs: the
+    * checkpoints it creates (seen by a listener at each job start),
+    * less the edge frame's. The seed round and each block take one.
+    */
+  private def ccRounds(docs: DataFrame, edges: DataFrame): (Map[Long, Long], Int) = {
+    val sc = spark.sparkContext
+    org.apache.spark.graft.Listeners.drain(sc)
+    val before = sc.getPersistentRDDs.keySet
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        sc.getPersistentRDDs.keys.foreach(k => if (!before(k)) seen.add(k))
+    }
+    sc.addSparkListener(l)
+    val labels = try {
+      val r = Dedup.connectedComponents(docs, edges)
+      org.apache.spark.graft.Listeners.drain(sc)
+      labelsOf(r)
+    } finally sc.removeSparkListener(l)
+    (labels, seen.size - 1)
+  }
+
+  test("edges over several chunks skip the seed round: the first " +
+    "block starts from the identity labels") {
+    import spark.implicits._
+    // a chain of diameter 5: one block certifies it, the seed round
+    // (two propagations) cannot
+    val docs = (0L to 5L).toDF("doc_id")
+    val edges = (0L until 5L).map(i => (i, i + 1)).toDF("d1", "d2")
+    val chain = (0L to 5L).map(_ -> 0L).toMap
+    // five edges over 16 partitions: several chunks, no seed round, so
+    // the only round is one block
+    assert(ccRounds(docs, edges.repartition(16)) == (chain, 1))
+    // one partition: the seed round solves the chain
+    assert(ccRounds(docs, edges.repartition(1)) == (chain, 1))
+  }
+
   test("a failing block action releases every checkpoint the call took") {
     import spark.implicits._
     val sc = spark.sparkContext
