@@ -29,11 +29,12 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // AQE coalescing knobs, env-overridable for A/B (§0s): with
-      // parallelismFirst=true (Spark default) AQE refuses to coalesce
-      // below the cluster's parallelism, so a kB-sized exchange still
-      // schedules `cores` reduce tasks — a pure constant on tiny
-      // intermediate shuffles (the px42 CC loop runs ~10 exchanges per
-      // block over 5k rows). false coalesces by advisory size instead.
+      // parallelismFirst=true (Spark default) AQE aims at total bytes /
+      // parallelism per reduce task, but never below the 1 MB
+      // coalescePartitions.minPartitionSize, so an exchange under ~1 MB
+      // is read by ONE task (the `AQEShuffleRead coalesced` reads in
+      // the executed plans) and only larger ones spread over up to
+      // `cores` tasks. false coalesces to the advisory size instead.
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
         sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",

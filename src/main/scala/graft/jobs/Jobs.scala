@@ -1384,9 +1384,14 @@ object Jobs {
                       nShards: Int = 8): Unit = {
     import graft.pipeline.{Bpe, Sharding}
     val docs = loadDocs(spark, in)
-    val merges = Bpe.trainLocal(docs, kMerges, minCount = minCount)
+    // the one corpus pass: the FULL word dictionary, trained on through
+    // its minCount view and encoded whole
+    val words = Bpe.wordDict(docs).persist()
+    val merges =
+      try Bpe.trainLocalWords(words.filter(col("wc") >= minCount), kMerges)
+      catch { case e: Throwable => words.unpersist(); throw e }
     // one dictionary-sized encode (FULL vocab); word → ordered id array
-    val dict = Bpe.encodeWords(Bpe.wordDict(docs), merges)
+    val dict = Bpe.encodeWords(words, merges)
       .persist() // consumed by vocab AND the word-id table
     val voc = Bpe.vocab(dict).persist()
     try {
@@ -1414,9 +1419,9 @@ object Jobs {
       // seqLen ids, whatever the doc length.
       import org.apache.spark.sql.expressions.Window
       val words = docs
-        .select(col("doc_id"), posexplode(expr(
-          "filter(split(lower(text), '[^0-9a-z]+'), x -> x <> '')"))
-          .as(Seq("p", "w")))
+        .select(col("doc_id"),
+          posexplode(TextOps.cleanTokensCol(col("text")))
+            .as(Seq("p", "w")))
         .join(wid, Seq("w"))
         .withColumn("nid", size(col("wids")))
         .withColumn("off", sum("nid").over(
@@ -1464,7 +1469,7 @@ object Jobs {
           .toDF("value").coalesce(1).write.mode("overwrite")
           .text(out + "_report")
       } finally { examples.unpersist(); () }
-    } finally { voc.unpersist(); dict.unpersist(); () }
+    } finally { voc.unpersist(); dict.unpersist(); words.unpersist(); () }
   }
 
   /** Reproducible epoch layout for training: the corpus resharded by

@@ -17,10 +17,12 @@ import scala.collection.mutable.ArrayBuffer
   * Scale design (100 TB):
   *  - Training runs on the distinct-WORD dictionary weighted by word
   *    count — the only corpus-sized pass is the dictionary aggregation
-  *    itself (one shuffle on the word). Every round after that touches
-  *    vocab-sized data only, eager-checkpointed per round (the
-  *    `Dedup.connectedComponents` treatment) so round i+1 never
-  *    re-derives round i's chain.
+  *    itself (one shuffle on the word), checkpointed once. A dictionary
+  *    of at most [[MaxLocalDict]] words (after `minCount`) is collected
+  *    and the exact merge loop runs in driver memory, so training costs
+  *    the same few Spark jobs whatever the merge count. Only a larger
+  *    dictionary runs one Spark action per merge, each round a lazy
+  *    local checkpoint of the vocab-sized frame.
   *  - Encoding with a LEARNED merge table is a pure narrow map: the
   *    merges are driver-side literals (a merge table is a few thousand
   *    rows at GPT-2 scale and k entries here), so the per-word fold
@@ -126,90 +128,149 @@ object Bpe {
     out.toArray
   }
 
-  /** Learn `k` merges from the corpus. Driver loop with ONE action per
-    * round: the 1-row top-pair collect doubles as the materializer of
-    * that round's lazily-localCheckpointed vocab frame (w, wc, cs), so
-    * rounds chain without subtree re-derivation and without a separate
-    * eager-checkpoint job. Stops early when no adjacent pair remains.
-    * Returns the merge list and the FINAL encoded dictionary — the
-    * corpus under the learned encoding, already materialized.
+  /** The largest dictionary (distinct words after `minCount`) the merge
+    * loop runs on in driver memory: [[trainEncoded]] hands a larger one
+    * to the per-merge Spark loop, and [[trainLocal]] refuses it.
+    */
+  val MaxLocalDict: Int = 10000000
+
+  /** Learn `k` merges from the corpus. Returns the merge list and the
+    * FINAL encoded dictionary (w, wc, cs): every dictionary word under
+    * the learned encoding.
+    *
+    * The dictionary is checkpointed once and counted (the count
+    * materializes the checkpoint). Up to [[MaxLocalDict]] words it is
+    * collected and the exact loop ([[trainLocalFromDict]]) learns the
+    * merges in driver memory; the encoded dictionary is then the
+    * learned merges applied as one narrow map over the checkpoint
+    * ([[encodeWords]]), the same fold passes the per-merge loop applies
+    * one round at a time, so every word's `cs` is identical to that
+    * loop's. The Spark jobs are the same for any `k`. A larger
+    * dictionary runs [[trainDistributed]].
     */
   def trainEncoded(docs: DataFrame, k: Int, textCol: String = "text",
                    minCount: Long = 1L)
       : (Seq[(String, String)], DataFrame) = {
-    var cur = wordDict(docs, textCol, minCount)
-      .withColumn("cs", expr(charsExpr("w")))
-      .coalesce(8) // vocab-sized from here on; don't pay 32 tasks/round
-      .localCheckpoint(false)
-    val merges = ArrayBuffer.empty[(String, String)]
-    var done = false
-    for (_ <- 1 to k if !done) {
-      val top = cur
-        .select(col("wc"), explode(expr(pairsExpr("cs"))).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum("wc").as("cnt"))
-        .orderBy(desc("cnt"), asc("a"), asc("b"))
-        .limit(1).collect()
-      if (top.isEmpty) done = true
-      else {
-        val (a, b) = (top(0).getString(0), top(0).getString(1))
-        merges += ((a, b))
-        cur = cur
-          .withColumn("cs", expr(splitExpr(
-            foldPassExpr("cs", s"'${esc(a)}'", s"'${esc(b)}'"))))
-          .localCheckpoint(false)
-      }
+    val dict = dictCheckpoint(wordDict(docs, textCol, minCount))
+    try {
+      if (countDict(dict) > MaxLocalDict) trainDistributed(dict, k)
+      else trainInMemory(dict, k)
+    } catch {
+      case e: Throwable => Dedup.unpersistCheckpoint(dict); throw e
     }
-    (merges.toSeq, cur)
   }
 
-  /** Learn `k` merges from the corpus (see [[trainEncoded]]). */
+  /** Learn `k` merges from the corpus (see [[trainEncoded]]); the
+    * encoded dictionary's checkpoint is released.
+    */
   def train(docs: DataFrame, k: Int, textCol: String = "text",
-            minCount: Long = 1L): Seq[(String, String)] =
-    trainEncoded(docs, k, textCol, minCount)._1
+            minCount: Long = 1L): Seq[(String, String)] = {
+    val (merges, encoded) = trainEncoded(docs, k, textCol, minCount)
+    Dedup.unpersistCheckpoint(encoded)
+    merges
+  }
 
-  /** The k ≫ 8 trainer: ONE corpus-sized Spark pass (the [[wordDict]]
-    * aggregation), then the exact merge loop IN DRIVER MEMORY.
-    *
-    * Why this exists: [[trainEncoded]] runs one Spark action per merge
-    * round, which is the right shape while the dictionary is larger
-    * than a driver — but a production tokenizer is k ≈ 32,000 merges,
-    * i.e. 32,000 sequential driver-coordinated jobs whose per-round
-    * scheduling constant dwarfs the per-round work (the r11 probe,
-    * BENCH_NOTES §3j, measures the curve: the distributed loop's cost
-    * is linear in k at ~0.1–0.2 s/round while the in-memory loop runs
-    * thousands of rounds per second on the same dictionary). After the
-    * `minCount` cap the dictionary IS driver-sized — that cap is the
-    * same head-vocabulary lever every production BPE trainer exposes —
-    * so the exact loop (identical pair counting, identical
-    * (cnt desc, a, b) tie-break, identical left-to-right
-    * non-overlapping merge application) fits in memory and emits the
-    * same merge table bit-for-bit (BpeSpec pins equality against the
-    * distributed loop).
-    *
-    * `maxDict` guards the collect: training is refused (loudly) if the
-    * capped dictionary still exceeds it — raise `minCount`, don't
-    * raise the cap, is almost always the right response at 100 TB.
+  /** The merges alone, always in driver memory: the [[trainEncoded]]
+    * in-memory branch, but a dictionary of more than `maxDict` words
+    * is refused (loudly) instead of trained round by round — raise
+    * `minCount`, don't raise the cap, is almost always the right
+    * response at 100 TB. `minCount` is the same head-vocabulary lever
+    * every production BPE trainer exposes.
     */
   def trainLocal(docs: DataFrame, k: Int, textCol: String = "text",
                  minCount: Long = 1L,
-                 maxDict: Int = 10000000): Seq[(String, String)] = {
-    // persist the AGG OUTPUT (dict-sized, ≤ maxDict rows) so the
-    // count-before-collect guard ordering doesn't run the corpus-sized
-    // wordDict aggregation TWICE — without it, count() and collect()
-    // each execute the full tokenize+explode+groupBy pass, breaking
-    // this method's one-corpus-pass contract
-    val dictDf = wordDict(docs, textCol, minCount)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                 maxDict: Int = MaxLocalDict): Seq[(String, String)] =
+    trainLocalWords(wordDict(docs, textCol, minCount), k, maxDict)
+
+  /** [[trainLocal]] over a ready (w, wc) word dictionary, so a caller
+    * that also encodes the dictionary builds it once.
+    */
+  def trainLocalWords(words: DataFrame, k: Int,
+                      maxDict: Int = MaxLocalDict): Seq[(String, String)] = {
+    val dict = dictCheckpoint(words)
     try {
-      val n = dictDf.count()
+      val n = countDict(dict)
       require(n <= maxDict,
-        s"dictionary has $n words (> maxDict=$maxDict) after minCount=" +
-          s"$minCount; raise minCount so the head vocabulary fits the driver")
-      val dict = dictDf.collect()
-        .map(r => (codePointSyms(r.getString(0)), r.getLong(1)))
-      trainLocalFromDict(dict, k)
-    } finally dictDf.unpersist(blocking = false)
+        s"dictionary has $n words (> maxDict=$maxDict); raise minCount " +
+          "so the head vocabulary fits the driver")
+      trainLocalFromDict(collectDict(dict), k)
+    } finally Dedup.unpersistCheckpoint(dict)
+  }
+
+  /** The (w, wc, cs) training dictionary of a (w, wc) word frame, `cs`
+    * the word's character symbols, as a lazy local checkpoint.
+    */
+  private[pipeline] def dictCheckpoint(words: DataFrame): DataFrame =
+    words.withColumn("cs", expr(charsExpr("w")))
+      .coalesce(8) // vocab-sized from here on; don't pay 32 tasks/round
+      .localCheckpoint(false)
+
+  /** Words in a [[dictCheckpoint]], counted on its RDD: one job, which
+    * also materializes the checkpoint (a Dataset count adds a shuffle
+    * for its global aggregate).
+    */
+  private def countDict(dict: DataFrame): Long =
+    Dedup.checkpointRdds(dict).map(_.count()).sum
+
+  private def collectDict(dict: DataFrame): Array[(Array[String], Long)] =
+    dict.select("cs", "wc").collect()
+      .map(r => (r.getSeq[String](0).toArray, r.getLong(1)))
+
+  /** The in-memory branch of [[trainEncoded]] over a [[dictCheckpoint]]:
+    * one collect, the driver loop, then the merges as one narrow map
+    * over the checkpoint, which stays held under the returned frame.
+    */
+  private[pipeline] def trainInMemory(dict: DataFrame, k: Int)
+      : (Seq[(String, String)], DataFrame) = {
+    val merges = trainLocalFromDict(collectDict(dict), k)
+    (merges, encodeWords(dict.drop("cs"), merges)
+      .withColumnRenamed("syms", "cs"))
+  }
+
+  /** The per-merge Spark loop over a [[dictCheckpoint]] of more than
+    * [[MaxLocalDict]] words: ONE action per round. The 1-row top-pair
+    * collect materializes that round's lazily checkpointed (w, wc, cs)
+    * frame, so rounds chain without re-deriving one another, and the
+    * round it replaced is released right after. The last merge is
+    * returned as a narrow map over the last checkpoint, the only one
+    * left held; a failure releases them all. Stops early when no
+    * adjacent pair remains.
+    */
+  private[pipeline] def trainDistributed(dict: DataFrame, k: Int)
+      : (Seq[(String, String)], DataFrame) = {
+    var cur = dict
+    var replaced: Option[DataFrame] = None // held until cur materializes
+    val merges = ArrayBuffer.empty[(String, String)]
+    var done = false
+    try {
+      while (!done && merges.size < k) {
+        val top = cur
+          .select(col("wc"), explode(expr(pairsExpr("cs"))).as("p"))
+          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+          .agg(sum("wc").as("cnt"))
+          .orderBy(desc("cnt"), asc("a"), asc("b"))
+          .limit(1).collect()
+        replaced.foreach(Dedup.unpersistCheckpoint)
+        replaced = None
+        if (top.isEmpty) done = true
+        else {
+          val (a, b) = (top(0).getString(0), top(0).getString(1))
+          merges += ((a, b))
+          val next = cur.withColumn("cs", expr(splitExpr(
+            foldPassExpr("cs", s"'${esc(a)}'", s"'${esc(b)}'"))))
+          if (merges.size == k) cur = next
+          else {
+            replaced = Some(cur)
+            cur = next.localCheckpoint(false)
+          }
+        }
+      }
+      (merges.toSeq, cur)
+    } catch {
+      case e: Throwable =>
+        (replaced.toSeq :+ cur).foreach(Dedup.unpersistCheckpoint)
+        throw e
+    }
   }
 
   /** The exact merge loop over an in-memory (symbols, weight)

@@ -416,16 +416,16 @@ object Dedup {
   /** The localCheckpoint RDDs behind `df` (every LogicalRDD in its
     * analyzed plan).
     */
-  private def checkpointRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
+  private[pipeline] def checkpointRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }
 
   /** Unpersist the localCheckpoint block storage behind `df`. Only
-    * called on frames this object created and owns — the NearDupStream
-    * r18 pattern.
+    * called on frames the caller created and owns (here and in
+    * [[Bpe]]) — the NearDupStream r18 pattern.
     */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
+  private[pipeline] def unpersistCheckpoint(df: DataFrame): Unit =
     checkpointRdds(df).foreach(_.unpersist(blocking = false))
 
   /** Near-dup survivor filter: keep each cluster's min-id doc.

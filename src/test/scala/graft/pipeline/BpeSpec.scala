@@ -1,6 +1,8 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** BPE train/encode semantics: iterative merge learning (recount per
@@ -56,11 +58,33 @@ class BpeSpec extends SparkSpec {
       .count() == 0)
   }
 
+  /** One branch of trainEncoded over a (w, wc) word frame: its merges
+    * and its final encoded dictionary as w -> cs.
+    */
+  private def branch(train: (DataFrame, Int) => (Seq[(String, String)], DataFrame),
+                     words: DataFrame, k: Int)
+      : (Seq[(String, String)], Map[String, Seq[String]]) = {
+    val (merges, enc) = train(Bpe.dictCheckpoint(words), k)
+    try (merges, enc.select("w", "cs").as[(String, Seq[String])].collect().toMap)
+    finally Dedup.unpersistCheckpoint(enc)
+  }
+
+  private def sameBranches(words: DataFrame, k: Int, what: String): Int = {
+    val local = branch(Bpe.trainInMemory, words, k)
+    val dist = branch(Bpe.trainDistributed, words, k)
+    assert(local == dist, s"k=$k $what")
+    local._1.size
+  }
+
+  /** Tiny-SF documents: a corpus with well over 50 learnable merges. */
+  private def tinyDocs: DataFrame =
+    graft.Tables(spark, sfTiny, "documents").limit(120).select("doc_id", "text")
+
   test("trainLocal == the distributed loop, merge-for-merge") {
-    // the k >> 8 escape hatch (one corpus pass + in-memory rounds)
-    // must emit the identical merge table: same pair counts, same
-    // (cnt desc, a, b) tie-break, same greedy left-to-right apply —
-    // across composing merges, ties, early stop, and minCount
+    // the in-memory loop must emit the identical merge table (same pair
+    // counts, same (cnt desc, a, b) tie-break, same greedy left-to-right
+    // apply) across composing merges, ties, early stop and minCount, and
+    // its one-map encoding must give every word the per-merge loop's cs
     val fixtures = Seq(
       Seq((1L, "aaab aaab ab")),                     // composing merges
       Seq((1L, "ba ab")),                            // tie-break
@@ -68,19 +92,96 @@ class BpeSpec extends SparkSpec {
       Seq((1L, "the cat sat on the mat the cat ran"),
         (2L, "a cat and a rat sat"),
         (3L, "then the bat sat on that mat")))       // realistic mix
-    for (rows <- fixtures; k <- Seq(3, 8, 50)) {
-      val docs = rows.toDF("doc_id", "text")
-      assert(Bpe.trainLocal(docs, k) == Bpe.train(docs, k),
-        s"k=$k rows=$rows")
-    }
+    for (rows <- fixtures; k <- Seq(3, 8, 50))
+      sameBranches(Bpe.wordDict(rows.toDF("doc_id", "text")), k, s"rows=$rows")
     val hapax = Seq((1L, "zq zq ab")).toDF("doc_id", "text")
+    sameBranches(Bpe.wordDict(hapax, "text", 2L), 4, "minCount=2")
     assert(Bpe.trainLocal(hapax, 4, minCount = 2L) ==
-      Bpe.train(hapax, 4, minCount = 2L))
+      branch(Bpe.trainDistributed, Bpe.wordDict(hapax, "text", 2L), 4)._1)
+    // past the expression ceiling the in-memory branch encodes with the
+    // broadcast encoder, the per-merge loop still with fold expressions
+    assert(sameBranches(Bpe.wordDict(tinyDocs), 40, "tiny docs") == 40)
+    // non-BMP symbols (the tokenizer strips them, so a word frame):
+    // both the tie-break order and the code-point split must agree
+    val emoji = new String(Character.toChars(0x1F600))
+    val cjk = new String(Character.toChars(0x20BB7))
+    val rnd = new scala.util.Random(7)
+    val alphabet = Seq("a", "b", "\u00e9", "\uffe0", emoji, cjk)
+    val words = Seq.fill(60)(Seq.fill(2 + rnd.nextInt(7))(
+      alphabet(rnd.nextInt(alphabet.size))).mkString)
+      .distinct.map(w => (w, 1L + rnd.nextInt(4))).toDF("w", "wc")
+    assert(sameBranches(words, 40, "non-BMP words") == 40)
+    assert(sameBranches(words, 8, "non-BMP words") == 8)
     // the maxDict guard refuses un-collectable dictionaries loudly
     val e = intercept[IllegalArgumentException] {
       Bpe.trainLocal(hapax, 2, maxDict = 1)
     }
     assert(e.getMessage.contains("minCount"))
+  }
+
+  test("trainEncoded runs the same Spark jobs for k = 8 and k = 50") {
+    val sc = spark.sparkContext
+    val docs = tinyDocs.cache()
+    docs.count()
+    def jobs(k: Int): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = {
+          n.incrementAndGet(); ()
+        }
+      }
+      org.apache.spark.graft.Listeners.drain(sc)
+      sc.addSparkListener(l)
+      try {
+        val (merges, enc) = Bpe.trainEncoded(docs, k)
+        assert(merges.size == k)
+        enc.count()
+        Dedup.unpersistCheckpoint(enc)
+        org.apache.spark.graft.Listeners.drain(sc)
+      } finally sc.removeSparkListener(l)
+      n.get
+    }
+    val (j8, j50) = try (jobs(8), jobs(50)) finally { docs.unpersist(); () }
+    assert(j8 == j50, s"k=8: $j8 jobs, k=50: $j50 jobs")
+    assert(j8 <= 6, s"$j8 jobs: training no longer runs in one pass")
+  }
+
+  test("trainDistributed holds only the returned frame's checkpoint, " +
+    "and none after a failure") {
+    val sc = spark.sparkContext
+    val words = Bpe.wordDict(tinyDocs).cache()
+    try {
+      words.count()
+      org.apache.spark.graft.Listeners.drain(sc)
+      // only RDDs the calls persist: the ContextCleaner may release RDDs
+      // that earlier tests left persisted at any GC
+      val before = sc.getPersistentRDDs.keySet
+      def held: Int = sc.getPersistentRDDs.keys.count(k => !before(k))
+      // k rounds, and an early stop (a 2-word dict runs out of pairs)
+      for ((w, k) <- Seq((words, 12), (words.limit(2), 30))) {
+        val (_, enc) = Bpe.trainDistributed(Bpe.dictCheckpoint(w), k)
+        assert(held == 1, s"k=$k: $held checkpoints held")
+        assert(enc.count() == w.count()) // the held checkpoint serves it
+        Dedup.unpersistCheckpoint(enc)
+        assert(held == 0)
+      }
+      // once a round has replaced the dictionary (two checkpoints held),
+      // cancel every job: the call fails inside a round's collect
+      @volatile var heldAtFailure = -1
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = {
+          if (heldAtFailure < 0 && held >= 2) heldAtFailure = held
+          if (heldAtFailure >= 0) sc.cancelJob(e.jobId)
+        }
+      }
+      sc.addSparkListener(l)
+      try intercept[Exception](
+        Bpe.trainDistributed(Bpe.dictCheckpoint(words), 40))
+      finally sc.removeSparkListener(l)
+      assert(heldAtFailure >= 2,
+        s"the failure hit before a round checkpoint existed ($heldAtFailure)")
+      assert(held == 0, "a failed trainDistributed leaked checkpoints")
+    } finally { words.unpersist(); () }
   }
 
   test("minCount drops tail words from the dict before the rounds") {

@@ -362,23 +362,24 @@ class ConnectedComponentsSpec extends SparkSpec {
     val edges = spark.range(n - 1)
       .select($"id".as("d1"), ($"id" + 1L).as("d2")).repartition(16)
     org.apache.spark.graft.Listeners.drain(sc)
-    val before = sc.getPersistentRDDs.size
+    // only RDDs the call persists: the ContextCleaner may release RDDs
+    // that earlier tests left persisted at any GC, mid-call
+    val before = sc.getPersistentRDDs.keySet
+    def held: Int = sc.getPersistentRDDs.keys.count(k => !before(k))
     // once the edge frame and a block checkpoint are held, cancel every
     // job: the call fails inside a block action
     @volatile var heldAtFailure = -1
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        if (heldAtFailure < 0 && sc.getPersistentRDDs.size >= before + 2)
-          heldAtFailure = sc.getPersistentRDDs.size
+        if (heldAtFailure < 0 && held >= 2) heldAtFailure = held
         if (heldAtFailure >= 0) sc.cancelJob(e.jobId)
       }
     }
     sc.addSparkListener(l)
     try intercept[Exception](Dedup.connectedComponents(docs, edges))
     finally sc.removeSparkListener(l)
-    assert(heldAtFailure >= before + 2,
+    assert(heldAtFailure >= 2,
       s"the failure hit before a block checkpoint existed ($heldAtFailure)")
-    assert(sc.getPersistentRDDs.size == before,
-      "a failed connectedComponents leaked checkpoints")
+    assert(held == 0, "a failed connectedComponents leaked checkpoints")
   }
 }
