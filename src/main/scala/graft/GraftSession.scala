@@ -28,17 +28,14 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // AQE coalescing knobs, env-overridable for A/B (§0s): with
-      // parallelismFirst=true (Spark default) AQE aims at total bytes /
-      // parallelism per reduce task, but never below the 1 MB
-      // coalescePartitions.minPartitionSize, so an exchange under ~1 MB
-      // is read by ONE task (the `AQEShuffleRead coalesced` reads in
-      // the executed plans) and only larger ones spread over up to
-      // `cores` tasks. false coalesces to the advisory size instead.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION", "64MB"))
+      // AQE coalescing (§0s): with parallelismFirst=true (Spark
+      // default) AQE aims at total bytes / parallelism per reduce task,
+      // but never below the 1 MB coalescePartitions.minPartitionSize,
+      // so an exchange under ~1 MB is read by ONE task (the
+      // `AQEShuffleRead coalesced` reads in the executed plans) and
+      // only larger ones spread over up to `cores` tasks.
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -52,23 +49,12 @@ object GraftSession {
       // for a few thousand compiled classes (tens of MB). Same story
       // on a 1000-executor cluster: every executor JVM carries this
       // cache, and a multi-tenant analytics driver replays far more
-      // than 100 distinct plan shapes. Env-overridable.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      // Keep Spark's default 30min periodic-GC interval. Round 3 ran 90s
-      // here to bound shuffle-file accumulation; thread-level capture of
-      // the intermittent 5–25× per-query inflations showed the cost:
-      // each forced System.gc() runs a G1 concurrent cycle that unloads
-      // stale generated (Janino) classes, the code-cache sweeper then
-      // flushes their nmethods, and the resulting code-page
-      // mprotect/unmap churn burns KERNEL cpu (C2/sweeper threads
-      // measured at ~1 core of sys time; TLB shootdowns are VM-exits
-      // under virtualization) while query tasks sit idle. A/B over 11
-      // full bench runs: 90s GC → totals 121–216s with 4 storm queries;
-      // default → 107–154s with 1. Disk accumulation over a ~2min,
-      // ~100-query run is a few hundred MB — not worth the storms.
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "30min"))
+      // than 100 distinct plan shapes.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // spark.cleaner.periodicGC.interval stays at Spark's 30min
+      // default: a short interval (90s) forced G1 cycles that unloaded
+      // generated classes and set off code-cache churn, inflating
+      // queries 5–25× (totals 121–216 s vs 107–154 s over 11 runs).
       .config("spark.sql.warehouse.dir",
         sys.props("java.io.tmpdir") + "/graft-warehouse")
       // Some event parquet carries TIMESTAMP(NANOS), which Spark's

@@ -15,13 +15,14 @@ import org.apache.spark.sql.functions._
   * Scale: the index write is one tokenize+aggregate pass; retrieval
   * from the index skips re-tokenization entirely (explode of the map
   * column is cheaper than regex-splitting raw text and prunes to the
-  * `dv` column at the parquet scan). The write's `buckets` knob is a
-  * FILE-SIZING control only (review r19, correcting an over-claim):
-  * `repartition(buckets, doc_id)` shapes file count and contents, but
-  * plain parquet stores no bucketing metadata — a reader's joins on
-  * doc_id still shuffle. Co-located joins at 100 TB need a
-  * metastore-backed `bucketBy(...).sortBy(...).saveAsTable` layout
-  * (catalog-dependent; out of scope for a path-addressed library).
+  * `dv` column at the parquet scan). The write adds no repartition:
+  * the `groupBy(doc_id)` already hash-partitions by doc_id, and AQE
+  * sizes the output files from that shuffle (~64 MB each at scale, a
+  * couple at 10k docs). Plain parquet stores no bucketing metadata,
+  * so a reader's joins on doc_id shuffle either way; co-located joins
+  * at 100 TB need a metastore-backed `bucketBy(...).sortBy(...)
+  * .saveAsTable` layout (catalog-dependent; out of scope for a
+  * path-addressed library).
   */
 object Index {
 
@@ -33,10 +34,8 @@ object Index {
         map_from_entries(collect_list(struct(col("term"), col("tf")))).as("dv"),
         sum("tf").as("len"))
 
-  def write(docs: DataFrame, path: String, buckets: Int = 32): Unit =
-    buildDocVectors(docs)
-      .repartition(buckets, col("doc_id"))
-      .write.mode("overwrite").parquet(path)
+  def write(docs: DataFrame, path: String): Unit =
+    buildDocVectors(docs).write.mode("overwrite").parquet(path)
 
   def load(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
@@ -60,7 +59,7 @@ object Index {
     */
   /** The postings relation from a (doc_id, term, tf) frame.
     *
-    * maxPostings=0: one row per term (the compact default). >0: split
+    * maxPostings=0: one row per term (the compact layout). >0: split
     * each term's postings into doc_id-ordered SHARDS of at most
     * maxPostings entries — the 100 TB pressure valve for head-term
     * skew (IndexScaleProbe measured a 1.96M-struct array in ONE row
@@ -155,40 +154,56 @@ object Index {
     * (BENCH_NOTES §3g: 35.5 s vs 41.8 s build, 9.9 s vs 14–21 s
     * scoring, 10.8 GB vs 18+ GB heap), and it is the only layout that
     * survives head-term skew at corpus scale — so it is the DEFAULT
-    * (r11; compact was). Pass maxPostings = 0 for the compact
-    * single-row-per-term layout, appropriate only for small corpora
-    * where the one extra exchange outweighs skew risk.
+    * (r11; compact was). The shard ranking itself runs only when some
+    * term could fill a second shard: with at most maxPostings docs
+    * holding a token, every shard id is 0 and [[writeInverted]] builds
+    * the rows with the compact aggregation plus a constant shard.
+    * maxPostings = 0 still writes the compact layout (no `shard`
+    * column) at any size.
     */
   val DefaultMaxPostings: Int = 65536
 
   def writeInverted(docs: DataFrame, path: String, files: Int = 0,
                     maxPostings: Int = DefaultMaxPostings): Unit = {
-    // persist both stages: the range partitioner's boundary-sampling
-    // job, the postings shuffle write, and the doclen write are THREE
-    // actions over the same tokenize subtree — uncached, the corpus
-    // would be tokenized three times (the repo's no-repeated-tokenize
-    // rule applies across actions exactly like curateCorpus/spamFilter)
+    require(maxPostings >= 0,
+      s"maxPostings must be >= 0 (0 = compact layout), got $maxPostings")
+    // persist every stage: the doc count, the range partitioner's
+    // boundary-sampling job, the postings shuffle write, and the doclen
+    // write are FOUR actions over the same tokenize subtree — uncached,
+    // the corpus would be tokenized four times (the repo's
+    // no-repeated-tokenize rule applies across actions exactly like
+    // curateCorpus/spamFilter)
     val tf = TextOps.termFreqs(docs).persist()
-    val agged = postingsFrame(tf, maxPostings).persist()
-    // Term-sorted row groups WITHOUT a single-task funnel: range
-    // partitioning keeps global term order across files (file k's
-    // terms all precede file k+1's), sortWithinPartitions orders
-    // inside each, so parquet min/max row-group pruning on `term IN`
-    // still applies — and the write parallelizes. (Round 2 used
-    // repartition(1): the whole postings table through one task is a
-    // driver-adjacent bottleneck at corpus vocabulary scale.)
-    // files=0 → spark.sql.shuffle.partitions, AQE-coalescible.
+    val doclen = tf.groupBy("doc_id").agg(sum("tf").as("dl")).persist()
     try {
-      val ranged =
-        if (files > 0) agged.repartitionByRange(files, col("term"))
-        else agged.repartitionByRange(col("term"))
-      val sortCols =
-        if (maxPostings > 0) Seq("term", "shard") else Seq("term")
-      ranged.sortWithinPartitions(sortCols.map(col): _*)
-        .write.mode("overwrite").parquet(s"$path/postings")
-      tf.groupBy("doc_id").agg(sum("tf").as("dl"))
-        .write.mode("overwrite").parquet(s"$path/doclen")
-    } finally { agged.unpersist(); tf.unpersist(); () }
+      // every term's df is at most the number of docs holding a token,
+      // and shard = (rank - 1) div maxPostings with rank <= df: when
+      // that count fits one shard, every shard id is 0 and the slice
+      // ranking (windows, join back, row_number) would compute zeros
+      val agged =
+        (if (maxPostings > 0 && doclen.count() <= maxPostings)
+          postingsFrame(tf, 0).select(col("term"), lit(0).as("shard"),
+            col("postings"), col("df"), col("cf"))
+        else postingsFrame(tf, maxPostings)).persist()
+      // Term-sorted row groups WITHOUT a single-task funnel: range
+      // partitioning keeps global term order across files (file k's
+      // terms all precede file k+1's), sortWithinPartitions orders
+      // inside each, so parquet min/max row-group pruning on `term IN`
+      // still applies — and the write parallelizes. (Round 2 used
+      // repartition(1): the whole postings table through one task is
+      // a driver-adjacent bottleneck at corpus vocabulary scale.)
+      // files=0 → spark.sql.shuffle.partitions, AQE-coalescible.
+      try {
+        val ranged =
+          if (files > 0) agged.repartitionByRange(files, col("term"))
+          else agged.repartitionByRange(col("term"))
+        val sortCols =
+          if (maxPostings > 0) Seq("term", "shard") else Seq("term")
+        ranged.sortWithinPartitions(sortCols.map(col): _*)
+          .write.mode("overwrite").parquet(s"$path/postings")
+      } finally { agged.unpersist(); () }
+      doclen.write.mode("overwrite").parquet(s"$path/doclen")
+    } finally { doclen.unpersist(); tf.unpersist(); () }
   }
 
   /** Retrieval from the inverted layout. The query-term set is driver

@@ -1999,8 +1999,10 @@ object Jobs {
       // sharded postings layout by default (Index.DefaultMaxPostings —
       // it measured better on build/scoring/memory at 2.5M docs AND is
       // the only head-term-skew-safe shape, BENCH_NOTES §3g); trailing
-      // maxPostings overrides the bound, 0 = the compact one-row-per-
-      // term layout for SMALL corpora only (IndexSpec equivalence)
+      // maxPostings overrides the bound (negative is refused), 0 = the
+      // compact one-row-per-term layout. A corpus with at most
+      // maxPostings docs skips the shard ranking on its own (every
+      // shard id is 0), so small corpora need no 0 here
       case "IndexInverted" :: in :: out :: Nil =>
         Index.writeInverted(loadDocs(spark, in), out)
       case "IndexInverted" :: in :: out :: maxP :: Nil =>

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
 /** Inverted-index rehearsal at replicated scale (r8 verdict item 5 /
   * r6 item carried): `Index.writeInverted` + `scoreFromInverted` at
   * N× the sf0.1 corpus (N=500 ⇒ 2.5M docs), measuring the three
-  * things the sf0.1 IndexBench cannot see:
+  * things an sf0.1-sized build cannot see (and the sharded-postings
+  * branch, which only runs past 65,536 docs holding a token):
   *
   *  - postings SKEW: replication multiplies every term's df by N, so
   *    the head term's postings list becomes one multi-million-struct

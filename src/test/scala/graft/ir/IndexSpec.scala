@@ -2,6 +2,8 @@ package graft.ir
 
 import graft.{SparkSpec, Tables}
 import graft.sources.Topics
+import graft.text.TextOps
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -15,7 +17,7 @@ class IndexSpec extends SparkSpec {
     import spark.implicits._
     val dir = Files.createTempDirectory("dv").toString + "/idx"
     val docs = Tables(spark, sfTiny, "documents")
-    Index.write(docs, dir, buckets = 4)
+    Index.write(docs, dir)
     val dv = Index.load(spark, dir)
 
     val q = Retrieval.querySet
@@ -109,10 +111,85 @@ class IndexSpec extends SparkSpec {
     assert(key(sharded) == key(direct) && key(sharded).nonEmpty)
   }
 
+  test("writeInverted's postings == postingsFrame's sharded rows, " +
+    "with or without the one-shard shortcut") {
+    val docs = Tables(spark, sfTiny, "documents")
+    val tf = TextOps.termFreqs(docs).cache()
+    try {
+      val nDocs = tf.select("doc_id").distinct().count().toInt
+      def rows(df: DataFrame): Seq[String] =
+        df.select(to_json(struct(df.columns.map(col).toIndexedSeq: _*)))
+          .collect().map(_.getString(0)).toSeq.sorted
+      // parquet reads every nested field back as nullable
+      def schema(df: DataFrame) =
+        df.schema.map(f => (f.name, f.dataType.simpleString))
+      // DefaultMaxPostings and n_docs take the shortcut (no term can
+      // fill a second shard); n_docs - 1 runs the slice ranking
+      for (mp <- Seq(Index.DefaultMaxPostings, nDocs, nDocs - 1)) {
+        val dir = Files.createTempDirectory("invpar").toString + "/idx"
+        Index.writeInverted(docs, dir, maxPostings = mp)
+        val written = spark.read.parquet(s"$dir/postings")
+        val expected = Index.postingsFrame(tf, mp)
+        assert(schema(written) == schema(expected), s"maxPostings = $mp")
+        assert(rows(written) == rows(expected), s"maxPostings = $mp")
+      }
+    } finally { tf.unpersist(); () }
+  }
+
+  test("postings write runs no window when no term can fill a second shard") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val docs = Tables(spark, sfTiny, "documents")
+    val nDocs = TextOps.termFreqs(docs).select("doc_id").distinct().count().toInt
+    // through AQE's final plan, its query stages and the plans of the
+    // persisted frames the write reads
+    def windows(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => windows(a.executedPlan)
+      case s: QueryStageExec => windows(s.plan)
+      case r: ReusedExchangeExec => windows(r.child)
+      case m: InMemoryTableScanExec => windows(m.relation.cachedPlan)
+      case w: WindowExec => 1 + windows(w.child)
+      case other => other.children.map(windows).sum
+    }
+    def windowsRun(maxPostings: Int): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val l = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = {
+          n.addAndGet(windows(qe.executedPlan)); ()
+        }
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      val dir = Files.createTempDirectory("invwin").toString + "/idx"
+      org.apache.spark.graft.Listeners.drain(spark.sparkContext)
+      spark.listenerManager.register(l)
+      try {
+        Index.writeInverted(docs, dir, maxPostings = maxPostings)
+        org.apache.spark.graft.Listeners.drain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(l)
+      n.get
+    }
+    assert(windowsRun(nDocs) == 0)
+    // the probe sees the slice ranking's windows when they do run
+    assert(windowsRun(nDocs - 1) > 0)
+  }
+
+  test("writeInverted refuses a negative maxPostings") {
+    val dir = Files.createTempDirectory("invneg").toString + "/idx"
+    val e = intercept[IllegalArgumentException](
+      Index.writeInverted(Tables(spark, sfTiny, "documents"), dir,
+        maxPostings = -1))
+    assert(e.getMessage.contains("maxPostings"))
+    assert(!new java.io.File(dir).exists(), "nothing may be written")
+  }
+
   test("index term stats match direct stats") {
     val dir = Files.createTempDirectory("dv2").toString + "/idx"
     val docs = Tables(spark, sfTiny, "documents")
-    Index.write(docs, dir, buckets = 4)
+    Index.write(docs, dir)
     val fromIdx = Index.termStats(Index.load(spark, dir))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     val direct = graft.text.TextOps.termFreqs(docs)
