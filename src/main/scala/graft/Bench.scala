@@ -1,12 +1,15 @@
 package graft
 
+import graft.queries.Decl
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every declared query on
-  * SPARK_GRAFT_SF_DIR, prints ONE JSON line.
+  * SPARK_GRAFT_SF_DIR once and prints two JSON lines — the full record,
+  * then a compact last line a bounded tail capture can always parse.
   *
-  * A warmup action first — JVM/classloader/codegen startup otherwise
-  * lands entirely on whichever query happens to run first.
+  * A warmup pass first — JVM/classloader/codegen startup otherwise
+  * lands entirely on whichever query happens to run first. Repeated,
+  * layer-by-layer measurement lives in `perfbench/`.
   */
 object Bench {
 
@@ -22,21 +25,41 @@ object Bench {
     */
   def materialize(df: org.apache.spark.sql.DataFrame): Long =
     df.queryExecution.toRdd.count()
+
+  /** One bench pass's output: `line` (stdout, the full per-query
+    * map), `details` (the per-query record written to the details
+    * file) and `last` (stdout's LAST line: `value` plus the 20 slowest
+    * queries).
+    */
+  final case class Record(line: String, details: String, last: String)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val decls = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // Default to an UNCOMMITTED path (r15): a bench run must not stomp
+    // the committed BENCH_DETAILS.json in the working tree; copying the
+    // local file over it is a deliberate step. Forked `sbt run` cwd is
+    // the repo root.
+    val detailsOut = sys.env.getOrElse("SPARK_GRAFT_DETAILS_OUT",
+      "BENCH_DETAILS.local.json")
+    val rec = record(spark, sfDir, cpus, decls, detailsOut)
+    val pw = new java.io.PrintWriter(detailsOut)
+    try pw.println(rec.details) finally pw.close()
+    println(rec.line)
+    println(rec.last)
+    spark.stop()
+  }
 
-    // SPARK_GRAFT_ONLY=px04,px27 → bench just those queries (name-prefix
-    // match; iteration aid, unset in driver runs).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val decls = only match {
-      case Some(ps) => SparkEntry.decls.filter(d => ps.exists(d.name.startsWith))
-      case None     => SparkEntry.decls
-    }
-
+  /** Warm up, run `decls` once each on `sfDir`, and build the
+    * [[Record]]. `value` is the sum of every query's first-pass
+    * seconds; a query that throws is timed to its failure and marked
+    * `failed` in the details.
+    */
+  def record(spark: SparkSession, sfDir: String, cpus: String,
+             decls: Seq[Decl], detailsOut: String): Record = {
     // Warmup: exercise the scan + hash-agg + window + broadcast-join +
     // tokenize/explode + native-kernel codegen paths once, so JIT and
     // Janino startup don't land on whichever queries run first (q01–q03
@@ -61,34 +84,22 @@ object Bench {
     // Full-surface warmup (r16, BENCH_NOTES §0x): run every SELECTED
     // query once against the smallest sibling SF (sf0.001 — same
     // schemas, same plan shapes, ~600 lineitem rows) before the timed
-    // pass. Same policy as the generic warmup above, completed: the
-    // generated-class compiles (Janino; §0m measured the suite at
-    // ~2.2k classes / ~19 s estimated) and the C2-JIT of each query's
-    // operator code paths are JVM-startup artifacts, not query work —
-    // the DuckDB yardstick is an AOT-compiled binary that never pays
-    // them, and at the 100 TB deployment a long-running driver pays
-    // them once per JVM, not once per query. Codegen'd classes are
-    // keyed by generated SOURCE (schema + expressions, not data or
-    // paths), so the sf0.001 run compiles the same classes the timed
-    // sf0.1 pass needs. Guards: never warms at the bench dir itself
-    // (that would be pre-running the benchmark — the timed pass stays
-    // a first pass AT ITS SF), skipped when no smaller sibling exists,
-    // SPARK_GRAFT_WARMUP=0 opts out (A/B lever). The timed pass below
-    // is otherwise unchanged; the committed artifact records the
-    // policy via the warmup_sf field.
-    val benchCanon = new java.io.File(sfDir).getCanonicalPath
-    val warmDir: Option[String] =
-      if (sys.env.get("SPARK_GRAFT_WARMUP").contains("0")) None
-      // canonicalize the env override too (review r16): a trailing
-      // slash / relative / symlinked spelling of the bench dir itself
-      // must hit the never-warm-at-the-bench-dir guard, not slip past
-      // a raw string compare
-      else sys.env.get("SPARK_GRAFT_WARMUP_SF")
-        .map(p => new java.io.File(p).getCanonicalPath).orElse {
-        Option(new java.io.File(sfDir).getCanonicalFile.getParentFile)
-          .map(p => new java.io.File(p, "sf0.001"))
-          .filter(_.isDirectory).map(_.getCanonicalPath)
-      }.filter(_ != benchCanon)
+    // pass. The generated-class compiles (Janino; §0m measured the
+    // suite at ~2.2k classes / ~19 s estimated) and the C2-JIT of each
+    // query's operator code paths are JVM-startup artifacts, not query
+    // work — the DuckDB yardstick is an AOT-compiled binary that never
+    // pays them, and a long-running driver pays them once per JVM, not
+    // once per query. Codegen'd classes are keyed by generated SOURCE
+    // (schema + expressions, not data or paths), so the sf0.001 run
+    // compiles the same classes the timed pass needs. Never warms at
+    // the bench dir itself (compared canonically, so a trailing slash
+    // or symlinked spelling cannot slip past): that would be
+    // pre-running the benchmark. Skipped when no sibling exists.
+    val benchCanon = new java.io.File(sfDir).getCanonicalFile
+    val warmDir = Option(benchCanon.getParentFile)
+      .map(p => new java.io.File(p, "sf0.001"))
+      .filter(_.isDirectory).map(_.getCanonicalPath)
+      .filter(_ != benchCanon.getPath)
     warmDir.foreach { wd =>
       decls.foreach { d =>
         // a warmup failure must not kill the bench — the timed pass
@@ -102,31 +113,10 @@ object Bench {
 
     // GC time per query: if the environment degrades over a ~100-query
     // run (heap pressure, cleaner backlog), the gc column says so in the
-    // recorded artifact instead of leaving a per-query regression to be
-    // guessed at post-hoc (round-2 lesson: driver-run px tail measured
-    // ~6x a clean rerun of the same binary with no in-repo explanation).
+    // recorded artifact.
     import scala.jdk.CollectionConverters._
     def gcMs: Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-
-    // OS-level CPU accounting per query (/proc/stat aggregate deltas,
-    // USER_HZ ticks → seconds): a slow query then shows WHERE the wall
-    // time went — user (real compute: a recompute/plan bug), idle
-    // (scheduling stall / underparallelism), iowait (disk), or steal
-    // (the hypervisor ran someone else: external contention, not this
-    // code). Round-2/3 lesson: wall-clock alone cannot distinguish
-    // these, and bench runs on shared machines inflate 1.5–3× with no
-    // in-JVM signal (GC was clean in every inflated run).
-    // padTo(10): the aggregate cpu line has 10 fields on any modern
-    // kernel, but guard ALL indexes uniformly (not just steal) so a
-    // truncated line degrades to zeros instead of IndexOutOfBounds.
-    def cpuTicks: Array[Long] = {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      try src.getLines().next().split("\\s+").drop(1).map(_.toLong)
-        .padTo(10, 0L)
-      finally src.close()
-    }
-    val hz = 100.0 // USER_HZ on linux/amd64
 
     // Per-query Janino compilation count (§0m): the codegen cache is
     // keyed by generated source, so family-mates share classes — this
@@ -136,14 +126,13 @@ object Bench {
     def cgCount: Long = org.apache.spark.metrics.source.CodegenMetrics
       .METRIC_COMPILATION_TIME.getCount
 
-    def timeOne(d: graft.queries.Decl)
-        : (Double, Long, Seq[Double], Long, Boolean) = {
+    // (name, seconds, gc ms, codegen compiles, failed)
+    val results = decls.map { d =>
       // Name every job after its query: event logs / the UI can then
       // attribute multi-job (AQE, persist) queries to their owner.
       spark.sparkContext.setJobDescription(d.name)
       val t0 = System.nanoTime()
       val g0 = gcMs
-      val c0 = cpuTicks
       val cg0 = cgCount
       // a failed query must be VISIBLE in the committed artifact, not
       // just on stderr: an instant throw otherwise records a tiny
@@ -155,153 +144,49 @@ object Bench {
           true
         }
       val dt = (System.nanoTime() - t0) / 1e9
-      val gc = gcMs - g0
-      val cgn = cgCount - cg0
-      val dc = cpuTicks.zip(c0).map { case (a, b) => (a - b) / hz }
-      // user+nice, system+irq+softirq, idle, iowait, steal (seconds,
-      // summed over all CPUs)
-      val cpu = Seq(dc(0) + dc(1), dc(2) + dc(5) + dc(6), dc(3), dc(4),
-        dc(7))
+      val row = (d.name, dt, gcMs - g0, cgCount - cg0, failed)
       // Queries with shared subtrees persist() them; drop those caches
       // before the next query so timings stay independent (no
       // cross-query subsidy) and memory doesn't accumulate.
       spark.catalog.clearCache()
-      (dt, gc, cpu, cgn, failed)
+      row
     }
 
-    val results = decls.map { d =>
-      // SPARK_GRAFT_EXPLAIN=1 → dump the formatted physical plan before
-      // running (plan-iteration aid, unset in driver runs).
-      if (sys.env.contains("SPARK_GRAFT_EXPLAIN"))
-        try println(s"=== ${d.name} ===\n" +
-          d.run(spark, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] explain ${d.name}: ${e.getMessage}") }
-      val (dt, gc, cpu, cgn, failed) = timeOne(d)
-      (d.name, dt, gc, cpu, cgn, failed)
-    }
-
-    // ---- self-adjudicating re-run pass ----
-    // Two rounds of bench argument (r2, r3) came down to "storm or real
-    // regression?" with only one sample per query. Settle it inside the
-    // run: any query whose window shows a kernel-cpu storm (sys > N
-    // cpu-s: the JIT compile-queue / code-cache herd signature, measured
-    // in BENCH_NOTES §1) OR whose wall exceeds a re-run threshold gets
-    // ONE re-run at the END of the pass, when the JVM is fully warmed
-    // and the heap settled. A fast re-run ⇒ the first sample was
-    // environmental; a slow re-run ⇒ the plan is actually expensive.
-    // The headline total stays the FIRST-pass sum (driver contract
-    // unchanged); the verdict lands in BENCH_DETAILS as storm/sec_rerun.
-    val stormSys = sys.env.getOrElse("SPARK_GRAFT_STORM_SYS", "10").toDouble
-    val rerunSec = sys.env.getOrElse("SPARK_GRAFT_RERUN_SEC", "3").toDouble
-    // rerun value = (seconds, gcMs, cpu, reason): the reason ("storm",
-    // "slow", or "storm+slow") records WHICH trigger fired, from the
-    // same unrounded cpu(1) the storm flag below uses — a row can then
-    // never carry sec_rerun with a contradictory storm flag. The rerun
-    // keeps its OWN gc/cpu columns (r5 lesson: px42's 12.93 s driver
-    // rerun carried no cpu data, so "environmental or real?" was
-    // unadjudicable — the adjudication machinery must cover its own
-    // rerun pass too).
-    val rerun: Map[String, (Double, Long, Seq[Double], String, Boolean)] =
-      if (sys.env.get("SPARK_GRAFT_RERUN").contains("0")) Map.empty
-      else results.collect {
-        case (name, dt, _, cpu, _, _) if cpu(1) > stormSys || dt > rerunSec =>
-          val d = decls.find(_.name == name).get
-          val reason = (if (cpu(1) > stormSys) Seq("storm") else Nil) ++
-            (if (dt > rerunSec) Seq("slow") else Nil)
-          // keep the rerun's failed flag too: a throwing rerun would
-          // otherwise record a tiny sec_rerun that reads as "the slow
-          // first pass was environmental" when the rerun never ran
-          val (rdt, rgc, rcpu, _, rFailed) = timeOne(d)
-          name -> ((rdt, rgc, rcpu, reason.mkString("+"), rFailed))
-      }.toMap
-    val qs = results.map { case (k, v, _, _, _, _) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val totalGc = results.map(_._3).sum / 1e3
+    val qs = results.map { case (k, v, _, _, _) => "\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","gc_sec":$totalGc,"queries":$qs,"sf":"$sfDir"}"""
-    // The driver captures a bounded stdout tail (the per-query map got
-    // truncated in rounds 1-2); the full record — including per-query GC
-    // time — also goes to a file readable whole. Forked `sbt run` cwd is
-    // the repo root.
-    val detail = results.map { case (k, v, g, cpu, cgn, failed) =>
-      val Seq(u, s, i, w, st) = cpu.map(x => math.rint(x * 100) / 100)
-      // same UNROUNDED cpu(1) as the rerun trigger, so flag and trigger
-      // can't disagree on boundary rows
-      val storm = cpu(1) > stormSys
-      val rr = rerun.get(k)
-        .map { case (x, rg, rcpu, why, rFailed) =>
-          val Seq(ru, rs, ri, rw, rst) = rcpu.map(c => math.rint(c * 100) / 100)
-          // same unrounded-cpu(1) rule as the first-pass storm flag
-          val stormR = rcpu(1) > stormSys
-          val failR = if (rFailed) ""","failed_rerun":true""" else ""
-          s""","sec_rerun":${math.rint(x * 1000) / 1000},"rerun_reason":"$why"""" +
-            s""","gc_ms_rerun":$rg,"cpu_user_s_rerun":$ru,"cpu_sys_s_rerun":$rs""" +
-            s""","cpu_idle_s_rerun":$ri,"cpu_iowait_s_rerun":$rw,"cpu_steal_s_rerun":$rst""" +
-            s""","storm_rerun":$stormR$failR""" }
-        .getOrElse("")
+    val detail = results.map { case (k, v, g, cgn, failed) =>
       // failed is emitted ONLY when true: a throw leaves a wall time
       // that looks like a (usually suspiciously fast) success otherwise
       val failCol = if (failed) ""","failed":true""" else ""
-      s"""  {"name":"$k","sec":$v,"gc_ms":$g,"cpu_user_s":$u,"cpu_sys_s":$s,"cpu_idle_s":$i,"cpu_iowait_s":$w,"cpu_steal_s":$st,"codegen_n":$cgn,"storm":$storm$failCol$rr}"""
+      s"""  {"name":"$k","sec":$v,"gc_ms":$g,"codegen_n":$cgn$failCol}"""
     }.mkString("[\n", ",\n", "\n]")
     // Suite-level codegen accounting (§0m): exact JVM-LIFETIME
     // compilation count — deliberately larger than the sum of the
-    // per-query codegen_n rows, because warmup, explain, and the
-    // rerun pass compile classes that belong to no row — plus an
-    // ESTIMATED total compile time (exponentially-decaying-reservoir
-    // mean × lifetime count; Codahale histograms keep no exact sum
-    // and the mean is recency-biased, hence the _est suffix). The
-    // estimate prices the "how much of the per-action constant is
-    // Janino?" question in the committed artifact itself.
+    // per-query codegen_n rows, because the warmup compiles classes
+    // that belong to no row — plus an ESTIMATED total compile time
+    // (exponentially-decaying-reservoir mean × lifetime count; Codahale
+    // histograms keep no exact sum and the mean is recency-biased,
+    // hence the _est suffix).
     val cgTot = cgCount
     val cgMsEst = math.rint(org.apache.spark.metrics.source.CodegenMetrics
       .METRIC_COMPILATION_TIME.getSnapshot.getMean * cgTot)
-    // Default to an UNCOMMITTED path (r15, closing the r14 verdict's
-    // wrong-item 1 — three consecutive rounds the driver's post-commit
-    // Bench run stomped the committed final-pair BENCH_DETAILS.json in
-    // the working tree). The pair-commit step copies the local file
-    // over the committed artifact DELIBERATELY (cp BENCH_DETAILS.local
-    // .json BENCH_DETAILS.json); any other run leaves git status clean.
-    val detailsOut = sys.env.getOrElse("SPARK_GRAFT_DETAILS_OUT",
-      "BENCH_DETAILS.local.json")
-    val pw = new java.io.PrintWriter(detailsOut)
     val warmupField = warmDir.map(w => s""""warmup_sf":"$w",""").getOrElse("")
-    try pw.println(
-      s"""{"metric":"total","value":$total,"unit":"sec","gc_sec":$totalGc,"sf":"$sfDir","cpus":"$cpus",$warmupField"heap_max_mb":${Runtime.getRuntime.maxMemory / (1 << 20)},"codegen_n":$cgTot,"codegen_ms_est":$cgMsEst,"queries":$detail}""")
-    finally pw.close()
-    println(line)
-    // The full line above is ~2.5k chars — a bounded tail capture cuts
-    // its head off, so no complete JSON survives in the tail (rounds
-    // 1-2: driver "parsed": null). Emit a LAST, compact line that a
-    // tail-parse can always read whole: same metric/value, the 20
-    // slowest queries, and a pointer to the full per-query record.
+    val details =
+      s"""{"metric":"total","value":$total,"unit":"sec","gc_sec":$totalGc,"sf":"$sfDir","cpus":"$cpus",$warmupField"heap_max_mb":${Runtime.getRuntime.maxMemory / (1 << 20)},"codegen_n":$cgTot,"codegen_ms_est":$cgMsEst,"queries":$detail}"""
+    // The full line is ~2.5k chars — a bounded tail capture cuts its
+    // head off, so no complete JSON survives in the tail (rounds 1-2:
+    // driver "parsed": null). The LAST line is compact so a tail-parse
+    // can always read it whole: same metric/value, the 20 slowest
+    // queries, and a pointer to the full per-query record.
     val top = results.sortBy(-_._2).take(20)
-      .map { case (k, v, _, _, _, _) => "\"" + k + "\":" + math.rint(v * 1000) / 1000 }
+      .map { case (k, v, _, _, _) => "\"" + k + "\":" + math.rint(v * 1000) / 1000 }
       .mkString("{", ",", "}")
-    // Environmental-adjudication summary, r20 (ADDITIVE keys only — the
-    // graded `value` stays the untouched FIRST-pass sum): the r19 driver
-    // artifact recorded px71 at 50.8 s / px72 at 25.7 s (32-core pass)
-    // with the adjudicating rerun evidence only in BENCH_DETAILS.local
-    // .json, which the next run overwrites — so the committed tail
-    // couldn't show those rows re-ran at ~1.3 s (kernel-cpu storm, the
-    // BENCH_NOTES §1 signature). These keys put the adjudication IN the
-    // tail-parseable line itself: `value_settled` re-sums the total with
-    // every rerun-carrying row taken at min(first, rerun) — a lower
-    // bound under warm-rerun bias, for diagnosis, never the claim —
-    // and `queries_rerun` lists the substituted rows.
-    val settled = results.map { case (k, v, _, _, _, _) =>
-      rerun.get(k).map(r => math.min(v, r._1)).getOrElse(v) }.sum
-    val stealTot = math.rint(results.map(_._4(4)).sum * 100) / 100
-    val sysTot = math.rint(results.map(_._4(1)).sum * 100) / 100
-    val stormN = results.count(_._4(1) > stormSys)
-    val rerunMap = rerun.toSeq.sortBy(_._1).map { case (k, r) =>
-      "\"" + k + "\":" + math.rint(r._1 * 1000) / 1000 }
-      .mkString("{", ",", "}")
-    println(
-      s"""{"metric":"total","value":$total,"unit":"sec","gc_sec":$totalGc,"value_settled":${math.rint(settled * 1000) / 1000},"storm_n":$stormN,"rerun_n":${rerun.size},"queries_rerun":$rerunMap,"cpu_steal_s":$stealTot,"cpu_sys_s":$sysTot,"queries":$top,"queries_note":"20 slowest of ${results.size}; full record in $detailsOut","sf":"$sfDir"}""")
-    spark.stop()
+    val last =
+      s"""{"metric":"total","value":$total,"unit":"sec","gc_sec":$totalGc,"queries":$top,"queries_note":"20 slowest of ${results.size}; full record in $detailsOut","sf":"$sfDir"}"""
+    Record(line, details, last)
   }
 }

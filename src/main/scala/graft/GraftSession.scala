@@ -91,7 +91,7 @@ object Tables {
 
   // Resolution cache (§0m): spark.read.parquet re-resolves the source
   // on EVERY call — file listing, Hadoop FS init, and a footer/schema
-  // read measured at ~50 ms per call at sf0.1 (ProbeConstant), and the
+  // read measured at ~50 ms per call at sf0.1 (probes/constant.log), and the
   // bench surface makes ~300 such calls per suite run (~15 s of pure
   // re-resolution). The SF tables are immutable within a session
   // (driver-generated, read-only), so the ANALYZED DataFrame is safely
@@ -100,9 +100,9 @@ object Tables {
   // schema + file index the catalog caches — NOT a data cache (no
   // persist; execution still scans parquet every action, and
   // Bench/Verify's clearCache() doesn't touch it). Keyed by session so
-  // a restarted session re-resolves; GRAFT_TABLES_NOCACHE=1 opts out
-  // (needed only if a session ever reads a MUTATING path through
-  // Tables — none does today).
+  // a restarted session re-resolves. A session that ever reads a
+  // MUTATING path through Tables would need to bypass this cache —
+  // none does today.
   private val cache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, String), DataFrame]
   // sessions whose stop-listener is registered: every hooked session
@@ -115,24 +115,18 @@ object Tables {
   private val hooked = java.util.Collections.newSetFromMap(
     new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
 
-  private def nocache: Boolean = sys.env.get("GRAFT_TABLES_NOCACHE")
-    .exists(v => v.nonEmpty && v != "0" && v != "false")
-
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    if (nocache) resolve(spark, sfDir, name)
-    else {
-      if (hooked.add(spark))
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onApplicationEnd(
-                e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-              cache.keys.filter(_._1 eq spark).foreach(cache.remove)
-              hooked.remove(spark)
-            }
-          })
-      cache.getOrElseUpdate((spark, sfDir, name),
-        resolve(spark, sfDir, name))
-    }
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    if (hooked.add(spark))
+      spark.sparkContext.addSparkListener(
+        new org.apache.spark.scheduler.SparkListener {
+          override def onApplicationEnd(
+              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
+            cache.keys.filter(_._1 eq spark).foreach(cache.remove)
+            hooked.remove(spark)
+          }
+        })
+    cache.getOrElseUpdate((spark, sfDir, name), resolve(spark, sfDir, name))
+  }
 
   private def resolve(spark: SparkSession, sfDir: String,
                       name: String): DataFrame = {

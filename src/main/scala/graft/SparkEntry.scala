@@ -16,6 +16,24 @@ object SparkEntry {
     RelationalQueries.all ++ IrQueries.all ++ PipelineQueries.all ++
       TemporalQueries.all
 
+  /** The declared queries a run selects (Bench, Verify): every one of
+    * [[decls]] when `only` is unset, else those whose name starts with
+    * one of its comma-separated prefixes (`SPARK_GRAFT_ONLY=px63,px67`,
+    * an iteration aid; driver runs leave it unset). A list that selects
+    * nothing is refused: an empty run would otherwise report a zero
+    * total and an empty oracle dump that a compare passes vacuously.
+    */
+  def select(only: Option[String]): Seq[Decl] = only match {
+    case None => decls
+    case Some(spec) =>
+      val prefixes = spec.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      val picked = decls.filter(d => prefixes.exists(d.name.startsWith))
+      require(picked.nonEmpty,
+        s"SPARK_GRAFT_ONLY='$spec' selects no declared query (prefixes: " +
+          prefixes.mkString("[", ", ", "]") + ")")
+      picked
+  }
+
   /** Flagship query (sequential-scan LM-Dirichlet retrieval, SURVEY
     * §3.1) on /root/testdata/sf0.001; driver smoke-checks rows>0.
     */

@@ -1,24 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=px47,px48 → dump just those queries (name-prefix
-    // match, same iteration aid as Bench; unset in driver runs).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected = only match {
-      case Some(ps) => SparkEntry.decls.filter(d =>
-        ps.exists(d.name.startsWith))
-      case None => SparkEntry.decls
-    }
     // Queries whose `prepare` hook threw (r15 advice item 2): their
     // oracle SQL would reference an artifact THIS run never wrote — a
     // stale artifact from a prior run at the same sfDir would then

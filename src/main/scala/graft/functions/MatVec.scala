@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
   * CodegenFallback — interpreted per ELEMENT, d² lambda activations
   * per row (4,096 at d = 64; measured 14.2 s over 1M vectors, i.e.
   * ~40 CPU-hours per 10⁹ vectors at rotation time — vs 3.26 s with
-  * this kernel, checkpoint write included, AnnRecallProbe r17). A
+  * this kernel, checkpoint write included, probes/ann_recall_r17.log). A
   * flat double loop inside whole-stage codegen.
   *
   * Semantics: NULL vector → NULL result (null-intolerant, a genuinely

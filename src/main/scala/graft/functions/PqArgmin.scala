@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * interpreted per ELEMENT, allocating per candidate — measured
   * 894 s for a 1M-vector encode at the standard kCodes = 256 where
   * this kernel does the same work in 4.6 s with bit-identical output
-  * (AnnRecallProbe r17, probes/ann_recall_r17.log; 109 s → 1.95 s at
+  * (probes/ann_recall_r17.log; 109 s → 1.95 s at
   * kCodes = 32).
   *
   * Tie semantics, bit-compatible with the historical window shape

@@ -709,29 +709,18 @@ object Jobs {
     * appending past the lease protocol exhausts the retries into the
     * loud abort.
     *
-    * FILESYSTEM choice (advice r14, closed r16): the default lease
-    * protocol rests on `FileSystem.create(lease, overwrite = false)`
-    * being ATOMIC — true on HDFS and local filesystems, NOT on object
-    * stores (S3A has no atomic create-if-absent; two compactors could
-    * both "acquire"). For object stores set
-    * `spark.graft.compactLease=arbitrated`: write-then-list candidate
-    * arbitration ([[acquireCompactLease]]) that needs only
-    * write + strongly-consistent list (which S3 has), at the cost of
-    * 2×`leaseSettleMs` entry latency and a bounded-clock-skew
-    * assumption; the snapshot backstop stays underneath either
-    * protocol (no silent loss even if arbitration is beaten).
-    *
-    * @param leaseSettleMs arbitrated-protocol settle interval (the
-    *                      skew bound; ignored under the atomic lease)
-    * @param leaseSeam     test seam: runs after this contender's
-    *                      candidate is written, before arbitration
+    * FILESYSTEM requirement: the lease rests on
+    * `FileSystem.create(lease, overwrite = false)` being ATOMIC — true
+    * on HDFS and local filesystems, the only ones this build can reach
+    * (it ships no object-store client). An object store without an
+    * atomic create-if-absent would make the lease advisory; the
+    * snapshot backstop underneath still refuses before any silent
+    * loss.
     */
   def compactStore(spark: SparkSession, path0: String,
                    targetFileBytes: Long = 512L << 20,
                    beforeSwap: () => Unit = () => (),
-                   appendRetries: Int = 2,
-                   leaseSettleMs: Long = 5000L,
-                   leaseSeam: () => Unit = () => ()): Unit = {
+                   appendRetries: Int = 2): Unit = {
     import org.apache.hadoop.fs.Path
     // normalize trailing slashes ONCE: the side-path strings below are
     // raw concats, and "/store/" would put every marker INSIDE the
@@ -773,15 +762,7 @@ object Jobs {
     // crashed compactor leaves its lease deliberately: the operator
     // verifies no compactor is live, deletes the lease, re-runs, and
     // THIS block then self-heals the crash state under a fresh lease.
-    //
-    // Two protocols (r16, closing the r14 FILESYSTEM REQUIREMENT):
-    // "atomic" (default) is create-if-absent — exact exclusion on
-    // HDFS/local; "arbitrated" (spark.graft.compactLease=arbitrated)
-    // is write-then-list candidate arbitration for object stores
-    // where create-if-absent is not atomic — see
-    // [[acquireCompactLease]] for the protocol and its skew bound.
-    val leaseHold = acquireCompactLease(spark, fs, path,
-      settleMs = leaseSettleMs, onCandidateWritten = leaseSeam)
+    val lease = acquireCompactLease(fs, path)
     // keepLease: the reconcile-needed failure states below leave the
     // lease IN PLACE so appends stay blocked until the operator
     // resolves them; every other exit (success or append-safe abort/
@@ -906,7 +887,7 @@ object Jobs {
             s"store restored, re-snapshotting (retry $attempt of " +
             s"$appendRetries). If this repeats every compaction, a " +
             s"writer is appending past the lease — check its lease " +
-            s"path matches ${leaseHold.heldAt}")
+            s"path matches $lease")
         // Drain-wait BEFORE the next full copy (r15 advice item 4):
         // each retry re-reads and rewrites the whole store, so a slow
         // BURST of in-flight appends could burn every retry (and 3x
@@ -960,16 +941,10 @@ object Jobs {
     }
     }
     } finally {
-      if (!keepLease) leaseHold.release()
+      if (!keepLease) fs.delete(lease, false)
     }
   }
 
-  /** The appender half of the compaction lease (see [[compactStore]]):
-    * refuse an admit append up front while a compaction holds the
-    * store — wait-or-fail BEFORE writing, rather than compaction
-    * detecting the append and aborting after. A crashed compaction
-    * leaves the lease deliberately; the message routes the operator.
-    */
   /** The ONE place the lease path is derived (review r14): raw
     * `dir + suffix` concat would silently diverge between the
     * compactor and an appender configured with a trailing slash —
@@ -981,190 +956,51 @@ object Jobs {
     new org.apache.hadoop.fs.Path(
       dir.replaceAll("/+$", "") + "_compact_lease")
 
-  /** Candidate directory of the ARBITRATED lease protocol — sibling of
-    * the store, derived through the same slash normalization as
-    * [[compactLeasePath]] (one derivation, no divergence).
+  /** Acquire the compaction lease: one `create(overwrite = false)` —
+    * exact mutual exclusion wherever create-if-absent is atomic (HDFS,
+    * local). The lease file records who holds it, for the operator
+    * messages; a crashed compactor's lease stays and blocks both
+    * appenders and later compactors until the operator deletes it.
     */
-  private def compactCandDir(dir: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      dir.replaceAll("/+$", "") + "_compact_lease.d")
-
-  /** The live arbitration candidates, name-sorted (lexicographic
-    * minimum = the winner). FileNotFoundException-safe by CATCH, not
-    * exists-then-list: a winner's release() can sweep the emptied dir
-    * between the two calls (review r16 TOCTOU), and a vanished dir
-    * means the same thing as an absent one — no candidates.
-    */
-  private def compactCandidates(
+  private def acquireCompactLease(
       fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Seq[org.apache.hadoop.fs.FileStatus] =
-    try fs.listStatus(compactCandDir(dir)).filter(_.isFile)
-      .sortBy(_.getPath.getName).toSeq
-    catch { case _: java.io.FileNotFoundException => Nil }
-
-  /** A held compaction lease: `heldAt` names the file that blocks
-    * appenders (for operator messages), `release()` removes it. The
-    * reconcile-needed abort states deliberately do NOT release. Under
-    * the arbitrated protocol the empty candidate DIRECTORY is swept
-    * best-effort on release — the non-recursive delete is race-safe
-    * (it simply fails while another contender's candidate exists).
-    */
-  private[graft] final class CompactLeaseHold(
-      fs: org.apache.hadoop.fs.FileSystem,
-      val heldAt: org.apache.hadoop.fs.Path,
-      arbitrated: Boolean = false) {
-    def release(): Unit = {
-      fs.delete(heldAt, false)
-      if (arbitrated)
-        try fs.delete(heldAt.getParent, false)
-        catch { case _: java.io.IOException => () }
-    }
-  }
-
-  /** Acquire the compaction lease under the configured protocol.
-    *
-    * `spark.graft.compactLease=atomic` (default): one
-    * `create(overwrite = false)` — exact mutual exclusion wherever
-    * create-if-absent is atomic (HDFS, local).
-    *
-    * `spark.graft.compactLease=arbitrated`: write-then-list
-    * arbitration for filesystems WITHOUT atomic create-if-absent
-    * (S3-style object stores). Each contender writes a candidate file
-    * `{store}_compact_lease.d/cand-<zero-padded epochMillis>-<uuid>`,
-    * waits `settleMs`, lists the candidate set, and proceeds only if
-    * its own candidate is the lexicographic MINIMUM — then waits and
-    * re-lists once more to catch a lower-named candidate that landed
-    * after the first list. Losers delete their candidate and refuse
-    * loudly (mutual abort is safe; mutual PROCEED is what matters).
-    * Correctness needs (a) list-after-write consistency — S3 has been
-    * strongly consistent since 2020 — and (b) clock skew across
-    * contenders bounded by `settleMs`: a later writer can only steal
-    * the minimum if its clock lags the winner's by more than the
-    * settle window. If both are violated the snapshot
-    * detect-and-refuse backstop in [[compactStore]] still prevents
-    * silent loss — the layering is unchanged, arbitration narrows the
-    * advisory window from "always" (a non-atomic create) to "skew
-    * beyond settleMs".
-    *
-    * Crash semantics match the atomic lease: a crashed compactor's
-    * candidate file stays, blocking appenders and out-arbitrating
-    * every later contender (its timestamp is the oldest); the refusal
-    * message routes the operator to verify and delete it.
-    *
-    * CROSS-PROTOCOL exclusion (review r16): two compactors configured
-    * with different protocols stake different claims, so each arm
-    * also checks the OTHER protocol's — the atomic arm refuses (and
-    * releases its own lease) when a candidate file is live; the
-    * arbitrated arm refuses (and cleans its candidate) when the
-    * atomic lease file exists. Each checks after staking its own
-    * claim, so whichever staked first is seen by the other.
-    */
-  private[graft] def acquireCompactLease(
-      spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-      path: String, settleMs: Long,
-      onCandidateWritten: () => Unit = () => ()): CompactLeaseHold = {
-    import org.apache.hadoop.fs.Path
+      path: String): org.apache.hadoop.fs.Path = {
     val info = s"host=${java.net.InetAddress.getLocalHost.getHostName} " +
       s"pid=${ProcessHandle.current.pid} at=${java.time.Instant.now}"
-    val mode = spark.conf.get("spark.graft.compactLease", "atomic")
-    mode match {
-      case "atomic" =>
-        val lease = compactLeasePath(path)
-        val leaseOut =
-          try fs.create(lease, false)
-          catch {
-            case e: java.io.IOException =>
-              if (fs.exists(lease)) throw new IllegalStateException(
-                s"compactStore: a compaction lease exists at $lease — " +
-                  s"another compaction is in flight, or a previous one " +
-                  s"crashed mid-run. Verify no compactor is live, inspect " +
-                  s"the store, then delete the lease and re-run", e)
-              else throw new java.io.IOException(
-                s"compactStore: could not create the compaction lease " +
-                  s"$lease (no lease present — a transient filesystem " +
-                  s"error, not a held lease)", e)
-          }
-        try leaseOut.write(info.getBytes("UTF-8")) finally leaseOut.close()
-        // cross-protocol exclusion (review r16): an arbitrated-mode
-        // compactor pointed at the same store stakes its claim as a
-        // candidate file, not the lease — check AFTER our lease is
-        // staked (so a later arbitrated entrant must see it) and back
-        // out if one is live
-        val foreign = compactCandidates(fs, path)
-        if (foreign.nonEmpty) {
-          fs.delete(lease, false)
-          throw new IllegalStateException(
-            s"compactStore: an ARBITRATED-protocol compaction candidate " +
-              s"exists at ${foreign.head.getPath} — another compaction " +
-              s"is in flight under spark.graft.compactLease=arbitrated, " +
-              s"or one crashed. Verify no compactor is live, then delete " +
-              s"the candidate file and re-run")
-        }
-        new CompactLeaseHold(fs, lease)
-      case "arbitrated" =>
-        val candDir = compactCandDir(path)
-        val name = f"cand-${System.currentTimeMillis()}%020d-" +
-          java.util.UUID.randomUUID().toString
-        val mine = new Path(candDir, name)
-        // overwrite = true is fine (and avoids the create-if-absent
-        // this protocol exists to not need): the name is unique
-        val out = fs.create(mine, true)
-        try out.write(info.getBytes("UTF-8")) finally out.close()
-        onCandidateWritten()
-        def loseTo(winner: Path, when: String): Nothing = {
-          fs.delete(mine, false)
-          throw new IllegalStateException(
-            s"compactStore: lost the compaction-lease arbitration " +
-              s"($when) to $winner — another compaction is in flight, " +
-              s"or a previous one crashed leaving its candidate. Verify " +
-              s"no compactor is live, inspect the store, then delete " +
-              s"the candidate file and re-run. NOTE: candidates order " +
-              s"by the writer's OWN clock (epoch millis in the name) — " +
-              s"fencing is correct only while contender clocks agree " +
-              s"within the ${settleMs} ms settle window " +
-              s"(compactStore's leaseSettleMs); a contender whose " +
-              s"clock lags beyond that can out-arbitrate a temporally " +
-              s"earlier winner. Either way at most one proceeds, and " +
-              s"the pre-swap snapshot check still refuses loudly before " +
-              s"any silent loss")
-        }
-        // cross-protocol exclusion (review r16): an ATOMIC-mode
-        // compactor on the same store stakes the lease FILE, not a
-        // candidate — checked after our candidate is staked, so
-        // whichever staked first is seen by the other
-        def loseToAtomicLease(): Unit = {
-          val atomicLease = compactLeasePath(path)
-          if (fs.exists(atomicLease)) loseTo(atomicLease, "atomic lease held")
-        }
-        Thread.sleep(settleMs)
-        loseToAtomicLease()
-        val first = compactCandidates(fs, path)
-        if (first.isEmpty || first.head.getPath.getName != name)
-          loseTo(first.headOption.map(_.getPath).getOrElse(mine), "first list")
-        // second look: a contender whose candidate sorts LOWER may have
-        // written after the first list; within the skew bound it is
-        // visible by now
-        Thread.sleep(settleMs)
-        loseToAtomicLease()
-        val second = compactCandidates(fs, path)
-        if (second.isEmpty || second.head.getPath.getName != name)
-          loseTo(second.headOption.map(_.getPath).getOrElse(mine), "second list")
-        new CompactLeaseHold(fs, mine, arbitrated = true)
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.compactLease must be 'atomic' or 'arbitrated', " +
-          s"got '$other'")
-    }
+    val lease = compactLeasePath(path)
+    val leaseOut =
+      try fs.create(lease, false)
+      catch {
+        case e: java.io.IOException =>
+          if (fs.exists(lease)) throw new IllegalStateException(
+            s"compactStore: a compaction lease exists at $lease — " +
+              s"another compaction is in flight, or a previous one " +
+              s"crashed mid-run. Verify no compactor is live, inspect " +
+              s"the store, then delete the lease and re-run", e)
+          else throw new java.io.IOException(
+            s"compactStore: could not create the compaction lease " +
+              s"$lease (no lease present — a transient filesystem " +
+              s"error, not a held lease)", e)
+      }
+    try leaseOut.write(info.getBytes("UTF-8")) finally leaseOut.close()
+    lease
   }
 
+  /** The appender half of the compaction lease (see [[compactStore]]):
+    * refuse an admit append up front while a compaction holds the
+    * store — wait-or-fail BEFORE writing, rather than compaction
+    * detecting the append and aborting after. A crashed compaction
+    * leaves the lease deliberately; the message routes the operator.
+    */
   private[graft] def requireNoCompactLease(spark: SparkSession,
                                            dir: String,
                                            what: String): Unit = {
     val lease = compactLeasePath(dir)
     val fs = lease.getFileSystem(spark.sessionState.newHadoopConf())
-    def refuse(at: org.apache.hadoop.fs.Path): Nothing = {
+    if (fs.exists(lease)) {
       val info =
         try {
-          val in = fs.open(at)
+          val in = fs.open(lease)
           try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
           finally in.close()
         } catch { case _: java.io.IOException => "unreadable" }
@@ -1172,15 +1008,8 @@ object Jobs {
         s"admit append refused: a compaction lease is held on the " +
           s"$what dir $dir ($info). Retry after the compaction " +
           s"completes; a crashed compaction leaves the lease for the " +
-          s"operator to verify and delete ($at)")
+          s"operator to verify and delete ($lease)")
     }
-    if (fs.exists(lease)) refuse(lease)
-    // arbitrated-protocol candidates block appends the same way —
-    // checked unconditionally (cheap: one list), so an appender
-    // session with a different lease-mode conf still honors a
-    // compactor running the other protocol
-    val cands = compactCandidates(fs, dir)
-    if (cands.nonEmpty) refuse(cands.head.getPath)
   }
 
   /** The whole last mile in one job: corpus in → training examples

@@ -507,7 +507,7 @@ object Ann {
     * (r17; semantics identical to the historical window shape,
     * AnnSpec/PqArgminSpec-pinned — the 1M-vector encode measured
     * 109 s → 1.95 s at kCodes=32 and 894 s → 4.6 s at the standard
-    * kCodes=256, identical recall rows, AnnRecallProbe r17).
+    * kCodes=256, identical recall rows, probes/ann_recall_r17.log).
     */
   def pqEncode(corpus: DataFrame, codebook: DataFrame,
                idCol: String = "vec_id",
@@ -603,7 +603,7 @@ object Ann {
     * the variance left after the coarse quantizer — instead of
     * re-describing cell positions the cid already encodes; on
     * tight-cluster corpora (the adversarial replica-cloud regime of
-    * AnnRecallProbe) that is the difference between ADC resolving
+    * probes/ann_recall_r17.log) that is the difference between ADC resolving
     * intra-cell structure and ADC tying on it.
     *
     * @return (vid, cid, res: array&lt;double&gt;)

@@ -346,8 +346,8 @@ object Bpe {
     out.toArray
   }
 
-  /** Measured ceiling of the pure-expression encoder (ProbeBpeDepth,
-    * `probes/bpedepth.log`): each merge nests one split(fold(…)) level
+  /** Measured ceiling of the pure-expression encoder
+    * (`probes/bpedepth.log`): each merge nests one split(fold(…)) level
     * into a single Catalyst expression, and the analyzer dies at
     * k = 64 (max-resolution-iterations; ParseException/StackOverflow
     * as k grows) — k = 32 runs, k = 64 does not. Review r14: the old

@@ -468,8 +468,7 @@ object Dedup {
     * while skipping the whole termFreqs exchange. The DuckDB oracle
     * twins (px05/px18) keep the per-term tf form over the SAME
     * [[voteExpr]] string — equivalent by the identity above, and the
-    * oracle compare proves it per run. Measured (ProbePx18,
-    * `probes/px18.log`): signature build 0.53 → 0.42 s at sf0.1,
+    * oracle compare proves it per run. Measured (`probes/px18.log`): signature build 0.53 → 0.42 s at sf0.1,
     * 2.0 → 1.74 s at 8× replication.
     */
   def simhash(docs: DataFrame, bits: Int): DataFrame = {
@@ -501,7 +500,7 @@ object Dedup {
     * replication that is 9.9M candidate rows cut to ~0.4M before the
     * exchange. hamming64 is a codegen'd narrow op; evaluating it on
     * multi-band duplicate rows costs nothing by comparison
-    * (bench-neutral at sf0.1, ProbePx18).
+    * (bench-neutral at sf0.1, `probes/px18.log`).
     */
   def simhashNearDups(docs: DataFrame, maxHd: Int = 3): DataFrame = {
     val sim = simhash(docs, 48)
@@ -706,7 +705,7 @@ object Dedup {
     // matches), consumed by THREE branches — the verification join,
     // the per-doc candidate count, and the corpus-pruning semi-join.
     // Kept LAZY deliberately: an eager localCheckpoint here was A/B'd
-    // (r11, ProbePx59 conditions, sf0.1 bench 2×) and LOST — 5.75 s
+    // (r11, BENCH_NOTES §0d conditions, sf0.1 bench 2×) and LOST — 5.75 s
     // first / 2.58 s warm checkpointed vs 5.03 / 2.15 lazy. The
     // sign+band subtree behind each consumer dedupes to reused
     // exchanges, so parallel recompute beats the serialized

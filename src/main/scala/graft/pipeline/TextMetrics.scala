@@ -256,7 +256,7 @@ object TextMetrics {
     // the histogram is (lang, ppl)-distinct, orders of magnitude
     // smaller than the corpus. Callers looping over many corpora
     // should release the result (or System.gc via ContextCleaner)
-    // between iterations, the ProbeR12Ops discipline.
+    // between iterations, the discipline of probes/r12ops.log.
     val ranged = hist
       .repartitionByRange(nPart, col(langCol), col("ppl"))
       .withColumn("_pb_pid", spark_partition_id())
@@ -371,7 +371,7 @@ object TextMetrics {
     */
   def repetitionSignals(docs: DataFrame): DataFrame = {
     // LEAN shuffle shape (r12). Two alternatives were A/B'd
-    // (ProbePx71, probes/px71.log):
+    // (probes/px71.log):
     //  - a pure NARROW kernel (sorted in-row arrays + fold scans, zero
     //    exchanges) LOST 1.3-1.4x at 160k docs — higher-order
     //    functions are CodegenFallback, so per-element lambdas over

@@ -671,7 +671,7 @@ object IrQueries {
       (s, dir) => {
         import s.implicits._
         // Round-3 driver regression (2.6→11.9 s) adjudicated by A/B
-        // (ProbeIr30, 3 rounds each, sf0.1): ir30's consumers of tf are
+        // (BENCH_NOTES §1, 3 rounds each, sf0.1): ir30's consumers of tf are
         // each SPECIALIZED by Catalyst — the query-term semi-join and
         // the length>=3 feedback cleaner push below the shared
         // aggregation on some branches only — so the corpus tokenizes

@@ -474,19 +474,19 @@ object PipelineQueries {
     Decl(
       "px04_jaccard_top",
       (s, dir) => {
-        // NO persist (round-4 A/B, ProbePx04c): recompute beats the
+        // NO persist (round-4 A/B, BENCH_NOTES §1): recompute beats the
         // serialized cache build; a lazy persist storms (px27 note). At
         // 100 TB the distinct shingle table is a written artifact, not
         // an in-query cache. NO pre-`distinct` either (round-9 A/B,
-        // ProbePx04e/f): dedup happens INSIDE each aggregate —
+        // BENCH_NOTES §0c): dedup happens INSIDE each aggregate —
         // `collect_set` within sh groups ≡ distinct (doc_id, sh) then
         // collect_list, and per-doc distinct count ≡ set size — so the
         // (doc_id, sh)-keyed distinct exchange disappears entirely and
         // the raw shingle stream stays narrow into both branches
         // (first-run 4.6 → 2.2 s at sf0.1; warm within noise of the
-        // old shape; stage breakdown in ProbePx04f). Eager
+        // old shape). Eager
         // localCheckpoint materialization of the stream was the last
-        // untested lever — A/B'd r10 (ProbePx04g, both orders): wash
+        // untested lever — A/B'd r10 (probes/px04g_r12.log): wash
         // warm, lane-1 "wins" were session codegen. BENCH_NOTES §0c
         // closes the adjudication: irreducible at tiny SF.
         val raw = TextOps.shingleRows(Tables(s, dir, "documents"), 3)
@@ -501,7 +501,7 @@ object PipelineQueries {
         // expand ordered pairs as a narrow array expression, PACKED
         // into one bigint (d1<<32 | d2, doc_ids < 2³¹ by generator
         // contract): the pair shuffle moves one long instead of a
-        // two-field struct and aggregates on a single word (ProbePx04e
+        // two-field struct and aggregates on a single word (BENCH_NOTES §0c,
         // round-9 A/B; the r6-sketch array_intersect variant lost
         // 3–4× and is retired — same probe). Per-group work is bounded
         // by cap²/2 by construction; cap is far above the corpus max
@@ -548,7 +548,7 @@ object PipelineQueries {
       "px27_minhash_estimate",
       (s, dir) => {
         // LAZY localCheckpoint on the wide signatures (r12 re-
-        // adjudication, ProbePx27 under the §0g full-output yardstick):
+        // adjudication, probes/px27.log under the §0g full-output yardstick):
         // the r4 "recompute beats persist" verdict was measured under
         // count() forcing, which column-pruned the a/b branches'
         // minhash aggregations to near-skeletons — recompute only
@@ -2449,7 +2449,7 @@ object PipelineQueries {
         // the aggregation: the two sides' agg subtrees canonicalize
         // equal, so the signature exchange is built once and REUSED —
         // vs signing each side separately (two tokenize+md5 passes,
-        // probe ProbePx59). In production the existing side instead
+        // probes/px59b.log). In production the existing side instead
         // comes straight from the signature-store parquet.
         val sigs = Dedup.minhashWide(docs)
         Dedup.incrementalNearDupsFromSigs(
@@ -3572,7 +3572,7 @@ object PipelineQueries {
     // never a corpus scan. px50's ADC stage verbatim (R=50), then the
     // exact rerank to top-10; both orderings round-then-rank. The
     // array-native API form is Ann.adcRefine (AnnSpec pins the recall
-    // recovery; AnnRecallProbe carries the corpus-scale row).
+    // recovery; BENCH_NOTES §0t carries the corpus-scale row).
     Decl(
       "px86_adc_refine",
       (s, dir) => {

@@ -297,8 +297,7 @@ object NearDupStream {
 
   /** [[resolveKeepers]] plus the number of pointer-jump iterations
     * the fixpoint took — the observable the 64-jump `require` bound
-    * is sized against. Measured (ProbeKeeperChains,
-    * probes/keeper_chains_r18.log): a worst-case boilerplate ledger —
+    * is sized against. Measured (probes/keeper_chains_r18.log): a worst-case boilerplate ledger —
     * ONE mega-signature, strictly decreasing ids across B batches, so
     * every batch displaces the keeper and the chain is B long —
     * resolves within ⌈log2 B⌉ + 1 jumps (the +1 is the no-movement

@@ -156,7 +156,7 @@ object ScaleProbe {
         val wall = (System.nanoTime() - t0) / 1e9
         // deterministic drain, not a fixed sleep: on a loaded machine
         // the async bus can take >400 ms and the phase table would
-        // silently miss trailing stages (the SkewProbe/MgProbe idiom)
+        // silently miss trailing stages (the SkewProbe idiom)
         org.apache.spark.graft.Listeners.drain(spark.sparkContext)
         println(f"""[scale] {"phase":"$w","n":$n,"docs":$docs,"rows":$r,"sec":$wall%.2f,"peak_heap_mb":${pl.peakHeapMb},${json(pl.totals(m0))}}""")
       }

@@ -50,7 +50,7 @@ class AnnSpec extends SparkSpec {
 
   test("PQ train/encode/ADC: codes-only search keeps useful recall@10") {
     // unit-normalize so the ADC's L2 geometry ranks like the cosine
-    // baseline (same trick as tools/AnnRecallProbe)
+    // baseline (same trick as the 1M-vector recall runs, BENCH_NOTES §3f)
     val norm = emb.select(col("vec_id"), expr(
       "transform(embedding, x -> CAST(CAST(x AS DOUBLE)" +
         " / sqrt(norm2_f64(embedding)) AS FLOAT))").as("embedding"))
@@ -134,7 +134,8 @@ class AnnSpec extends SparkSpec {
 
   test("residual PQ resolves intra-cluster structure plain PQ quantizes away") {
     import spark.implicits._
-    // Replica-cloud corpus (AnnRecallProbe's adversarial regime at
+    // Replica-cloud corpus (the adversarial regime of
+    // probes/ann_recall_r17.log at
     // mini scale): 3 bases far apart in R^8, 8 replicas each with
     // small DETERMINISTIC per-(vid, dim) offsets. Plain PQ's codebook
     // spends its codes describing base positions, so ADC largely ties

@@ -88,7 +88,7 @@ class PlanShapeSpec extends SparkSpec {
   test("px27_minhash_estimate: exact side candidate-pruned, no pair blowup") {
     // The r2 17.3 s defect was the UNPRUNED whole-corpus exact side.
     // r3 fixed it with candidate pruning + eager persists; the r4 A/B
-    // (ProbePx27) measured the persists themselves slower than
+    // (probes/px27.log) measured the persists themselves slower than
     // parallel recompute, so the pin is the part that matters at any
     // scale: the exact-Jaccard shingle pass tokenizes only SEMI-JOINED
     // candidate texts (never the whole corpus), and no stage is a
@@ -105,7 +105,7 @@ class PlanShapeSpec extends SparkSpec {
       // the EXACT-side shingle pass (h60 of raw shingles) must sit
       // above a semi join — only candidate docs get re-shingled; the
       // minhash-side passes are corpus-wide by design, and the
-      // parallel-recompute decision bounds them (ProbePx27 A/B)
+      // parallel-recompute decision bounds them (BENCH_NOTES §0h A/B)
       val gens = exec.collect {
         case g: org.apache.spark.sql.execution.GenerateExec
           if g.toString.contains("token_shingles") => g

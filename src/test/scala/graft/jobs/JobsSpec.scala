@@ -934,125 +934,6 @@ class JobsSpec extends SparkSpec {
     assert(!new java.io.File(s"$w/store_compact_lease").exists())
   }
 
-  test("arbitrated lease (non-atomic-FS protocol): winner proceeds, " +
-    "losers and appenders refuse, race window covered (r16)") {
-    import spark.implicits._
-    val w = Files.createTempDirectory("compactarb").toString
-    Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
-      .write.parquet(s"$w/store")
-    Seq((3L, "c")).toDF("doc_id", "text")
-      .write.mode("append").parquet(s"$w/store")
-    val candDir = new java.io.File(s"$w/store_compact_lease.d")
-    def cands() = Option(candDir.listFiles()).map(_.toSeq).getOrElse(Nil)
-    spark.conf.set("spark.graft.compactLease", "arbitrated")
-    try {
-      // 1. uncontended: the arbitration acquires, compaction runs,
-      //    release leaves no candidate behind
-      Jobs.compactStore(spark, s"$w/store", leaseSettleMs = 50)
-      assert(spark.read.parquet(s"$w/store").count() == 3)
-      assert(cands().isEmpty, s"candidate leaked: ${cands()}")
-      assert(!candDir.exists(),
-        "uncontended release must sweep the empty candidate dir")
-      // 2. a foreign candidate with an OLDER timestamp (a live or
-      //    crashed compactor) out-arbitrates a new entrant, which
-      //    cleans up its own candidate and refuses loudly
-      candDir.mkdirs()
-      val foreign = new java.io.File(candDir,
-        "cand-00000000000000000001-aaaaaaaa")
-      assert(foreign.createNewFile())
-      val e = intercept[IllegalStateException] {
-        Jobs.compactStore(spark, s"$w/store", leaseSettleMs = 50)
-      }
-      assert(e.getMessage.contains("lost the compaction-lease arbitration"),
-        e.getMessage)
-      assert(cands().map(_.getName) == Seq(foreign.getName),
-        "the loser must remove its own candidate and ONLY its own")
-      // 3. the same candidate blocks appenders (requireNoCompactLease
-      //    checks the candidate dir regardless of the session's mode)
-      val e2 = intercept[IllegalStateException] {
-        Jobs.requireNoCompactLease(spark, s"$w/store", "corpus")
-      }
-      assert(e2.getMessage.contains("admit append refused"), e2.getMessage)
-      assert(foreign.delete())
-      // 4. the race the second list exists for: a LOWER-named
-      //    candidate lands AFTER ours is written (non-atomic create's
-      //    failure window) — arbitration must still elect exactly one
-      //    winner: we lose, the interloper's candidate survives
-      val e3 = intercept[IllegalStateException] {
-        Jobs.compactStore(spark, s"$w/store", leaseSettleMs = 50,
-          leaseSeam = () => {
-            val racer = new java.io.File(candDir,
-              "cand-00000000000000000002-bbbbbbbb")
-            assert(racer.createNewFile())
-          })
-      }
-      assert(e3.getMessage.contains("lost the compaction-lease arbitration"),
-        e3.getMessage)
-      assert(cands().map(_.getName) ==
-        Seq("cand-00000000000000000002-bbbbbbbb"))
-      cands().foreach(_.delete())
-      // 4b. clock skew (VERDICT r16 item 5): a contender whose clock
-      //     LAGS ours by more than the settle window writes a
-      //     candidate that is temporally later but lexicographically
-      //     earlier — it wins the name order, we abort, and the error
-      //     text spells out the skew bound for the operator
-      val e3b = intercept[IllegalStateException] {
-        Jobs.compactStore(spark, s"$w/store", leaseSettleMs = 50,
-          leaseSeam = () => {
-            val laggingEpoch = System.currentTimeMillis() - 60000
-            val skewed = new java.io.File(candDir,
-              f"cand-$laggingEpoch%020d-skewclock")
-            assert(skewed.createNewFile())
-          })
-      }
-      assert(e3b.getMessage.contains("clock"), e3b.getMessage)
-      assert(e3b.getMessage.contains("settle window"), e3b.getMessage)
-      assert(e3b.getMessage.contains("50 ms"), e3b.getMessage)
-      cands().foreach(_.delete())
-      // 5. a LATER contender (higher name) mid-window does not steal
-      //    the win: compaction proceeds; the foreign candidate stays
-      //    (that contender's own cleanup duty) and keeps appends
-      //    blocked until removed
-      Jobs.compactStore(spark, s"$w/store", leaseSettleMs = 50,
-        leaseSeam = () => {
-          val late = new java.io.File(candDir,
-            "cand-99999999999999999999-zzzzzzzz")
-          assert(late.createNewFile())
-        })
-      assert(spark.read.parquet(s"$w/store").count() == 3)
-      assert(cands().map(_.getName) ==
-        Seq("cand-99999999999999999999-zzzzzzzz"),
-        "the winner must release ONLY its own candidate")
-      cands().foreach(_.delete())
-      // 6. cross-protocol: an ATOMIC-mode compactor must refuse while
-      //    an arbitrated candidate is live, and must not leak its own
-      //    lease file on the way out
-      candDir.mkdirs()
-      val live = new java.io.File(candDir,
-        "cand-00000000000000000003-cccccccc")
-      assert(live.createNewFile())
-      spark.conf.set("spark.graft.compactLease", "atomic")
-      val e4 = intercept[IllegalStateException] {
-        Jobs.compactStore(spark, s"$w/store")
-      }
-      assert(e4.getMessage.contains("ARBITRATED-protocol"), e4.getMessage)
-      assert(!new java.io.File(s"$w/store_compact_lease").exists(),
-        "the refused atomic compactor must release its own lease")
-      // 7. ...and an ARBITRATED-mode compactor must refuse while the
-      //    atomic lease file is held
-      assert(live.delete())
-      spark.conf.set("spark.graft.compactLease", "arbitrated")
-      assert(new java.io.File(s"$w/store_compact_lease").createNewFile())
-      val e5 = intercept[IllegalStateException] {
-        Jobs.compactStore(spark, s"$w/store", leaseSettleMs = 50)
-      }
-      assert(e5.getMessage.contains("atomic lease held"), e5.getMessage)
-      assert(cands().isEmpty,
-        "the refused arbitrated compactor must clean its candidate")
-      assert(new java.io.File(s"$w/store_compact_lease").delete())
-    } finally spark.conf.set("spark.graft.compactLease", "atomic")
-  }
-
   test("compaction lease: trailing-slash store paths see the SAME lease") {
     import spark.implicits._
     val w = Files.createTempDirectory("compactslash").toString

@@ -85,7 +85,9 @@ def main():
             n_fail += 1
     # queries without oracle = rows-only
     print(f"== {n_pass} pass, {n_fail} fail ==")
-    sys.exit(1 if n_fail else 0)
+    if not oracle:
+        print(f"FAIL: {out_dir}/oracle_sql.json names no query")
+    sys.exit(1 if n_fail or not oracle else 0)
 
 
 def _cell_eq(a, b):
