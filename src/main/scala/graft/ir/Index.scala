@@ -224,16 +224,10 @@ object Index {
       .select(col("term"), col("df"), col("cf"),
         col("p.doc_id").as("doc_id"), col("p.tf").as("tf"))
     val dl = spark.read.parquet(s"$path/doclen")
-    val qlen = Retrieval.qlenOf(q) // one definition, review r19
     val cs = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("n_tokens"))
-    // part -> gate -> rank is Retrieval.scoreMatched VERBATIM (review
-    // r14: this block was copy-pasted four times across the scorers —
-    // one definition, so a gating/tie-break change can never drift)
-    Retrieval.scoreMatched(
-      tf.join(broadcast(q), Seq("term"))
-        .join(dl, Seq("doc_id"))
-        .join(broadcast(qlen), Seq("qid"))
-        .crossJoin(broadcast(cs)),
+    // the postings rows carry df/cf; dl is the side table's, joined
+    // after the query join
+    Retrieval.scoreMatched(Retrieval.matchedRows(tf, q, cs, dl -> "doc_id"),
       partExpr, finalExpr, conjunctive, k)
   }
 
@@ -243,26 +237,19 @@ object Index {
     */
   def scoreFromIndex(dv: DataFrame, q: DataFrame, partExpr: String,
                      finalExpr: String, conjunctive: Boolean, k: Int): DataFrame = {
-    val tf = dv.select(col("doc_id"), explode(col("dv")).as(Seq("term", "tf")))
-    val dl = dv.select(col("doc_id"), col("len").as("dl"))
-    val qlen = Retrieval.qlenOf(q) // one definition, review r19
-    // df/cf from the SAME exploded frame the scorer scans — ONE
+    // dl is the row's own `len` (buildDocVectors writes len = Σ tf).
+    // df/cf come from the SAME exploded frame the scorer scans — one
     // definition of tf, so the stats and the matched rows can never
-    // disagree (semantics: tf has one row per (doc, term), so
-    // count(*) = df). Honest cost note (review r19, correcting the
-    // r14 claim of a saved scan): the tstats aggregation and the
-    // matched-join consumer share NO exchange boundary below this
-    // point, so the physical plan still scans the index parquet twice
-    // per query batch — callers batching many queries should persist
-    // `dv`; the shared frame buys definitional consistency, not I/O.
-    val tstats = Retrieval.tstatsFor(tf, q)
-    val cs = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("n_tokens"))
+    // disagree (tf has one row per (doc, term), so count(*) = df). The
+    // tstats and collection aggregations share no exchange with the
+    // matched rows, so the plan still reads the index three times per
+    // query batch — callers batching many queries should persist `dv`.
+    val rows = dv.select(col("doc_id"), col("len").as("dl"),
+      explode(col("dv")).as(Seq("term", "tf")))
+    val cs = dv.agg(count(lit(1)).as("n_docs"), sum("len").as("n_tokens"))
     Retrieval.scoreMatched(
-      tf.join(broadcast(q), Seq("term"))
-        .join(dl, Seq("doc_id"))
-        .join(broadcast(tstats), Seq("term"))
-        .join(broadcast(qlen), Seq("qid"))
-        .crossJoin(broadcast(cs)),
+      Retrieval.matchedRows(rows, q, cs,
+        broadcast(Retrieval.tstatsFor(rows, q)) -> "term"),
       partExpr, finalExpr, conjunctive, k)
   }
 }

@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
   * over the corpus with the query set held in task memory
   * (`nl/utwente/mirex/TrecRun.java:123-150`). Our dataflow:
   *
-  *   docs → tokenize/explode → equi-join broadcast(query terms)
-  *        → join doc-lengths → join broadcast(term stats)
-  *        → groupBy(qid, doc) agg(score) → window top-k
+  *   docs → tokenize → tf + dl window → [[matchedRows]]: broadcast joins
+  *        of the query terms, term stats, qlen and collection stats
+  *        → [[scoreModels]]: groupBy(qid, doc) agg(score) → gate
+  *        → window top-k
   *
   * i.e. the cross-score "join" becomes a broadcast HASH join on `term`
   * (not a nested loop), partial aggregation runs map-side, and the only
@@ -21,6 +22,10 @@ import org.apache.spark.sql.functions._
   * qid. At 100 TB the corpus side never materializes more than the
   * matched (doc, query-term) pairs — the semi-join pruning the reference
   * hand-codes (`TrecRun.java:131`) falls out of the equi-join.
+  *
+  * The doc-vector and inverted indexes, the provided-stats
+  * (TrecRunBaselines) path and the streaming scan feed their own rows
+  * into the same builder and scorer.
   *
   * Scoring formulas are carried as SQL expression STRINGS compiled with
   * `expr(...)` — the same strings are embedded in the DuckDB oracle, so
@@ -117,79 +122,110 @@ object Retrieval {
     "(1e0 / qlen) * ln(((tf + 2500 * (cf / n_tokens)) / (dl + 2500)) / (cf / n_tokens))"
   val xentFinal = "round(score_sum, 6)"
 
+  /** The (qid, term) rows of [[querySet]]. */
+  def queryFrame(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    querySet.flatMap { case (qid, ts) => ts.map(qid -> _) }.toDF("qid", "term")
+  }
+
   /** The matched (qid, doc, term) rows with all scoring stats attached,
-    * for any corpus DataFrame with (doc_id, text) columns and query
-    * DataFrame with (qid, term) rows.
+    * over an ALREADY-BUILT (idCol, term, tf) frame — the sequential
+    * scan's input to [[matchedRows]]. Queries that need the
+    * term-frequency table for their own math as well as for scoring
+    * (ir29 VSM, ir30 Rocchio) pass the one tf in, so the
+    * tokenize+aggregate subtree is the same logical object in every
+    * branch and its exchange is provably reusable — rather than
+    * trusting two independently-built subtrees to canonicalize equal.
     * Broadcast sides: the query set (tiny) and the per-query-term stats
     * (|query vocab| rows). The corpus side streams.
     */
-  def matchedTermsFor(docs: DataFrame, q: DataFrame,
-                      idCol: String = "doc_id",
-                      textCol: String = "text"): DataFrame =
-    matchedTermsFromTf(TextOps.termFreqs(docs, idCol, textCol), q, idCol)
-
-  /** [[matchedTermsFor]] over an ALREADY-BUILT (idCol, term, tf) frame.
-    * Queries that need the term-frequency table for their own math as
-    * well as for scoring (ir29 VSM, ir30 Rocchio) pass the one tf in,
-    * so the tokenize+aggregate subtree is the same logical object in
-    * every branch and its exchange is provably reusable — rather than
-    * trusting two independently-built subtrees to canonicalize equal.
-    */
   def matchedTermsFromTf(tf: DataFrame, q: DataFrame,
                          idCol: String = "doc_id"): DataFrame = {
-    // dl = Σ tf per doc (== token count) as a WINDOW over the tf frame,
-    // not groupBy + join-back. The join-back formulation carried a 4th
-    // tokenize subtree (Catalyst's pushdowns specialize the clones
-    // apart, so ReusedExchange cannot merge them — the ir19/ir30
-    // lesson) plus a sort-merge join of the full matched stream
-    // against dl; the window replaces both with one exchange on
-    // doc_id. tstats and cs keep their own (column-pruned) tokenize
-    // branches — forcing them through the windowed frame was tried and
-    // the optimizer correctly prunes the unused dl and un-shares them
+    // tstats and cs keep their own (column-pruned) tokenize branches —
+    // forcing them through the windowed frame was tried and the
+    // optimizer correctly prunes the unused dl and un-shares them
     // again; 4 scans/12 exchanges → 3/9, measured 10.9–12.1 s →
     // 10.0–10.6 s over the six sequential-scan queries (r5, matched
     // conditions). At 100 TB this whole debate is moot: tf+dl are the
     // materialized doc-vector index (ir/Index.scala, scoreFromIndex) —
     // the sequential-scan path is reference parity, not deployment.
-    val qlen = qlenOf(q)
-    val tstats = tstatsFor(tf, q)
     // n_docs = docs with ≥1 token, n_tokens = Σ tf (long sums:
     // order-independent, exact)
-    val cs = tf.agg(countDistinct(col(idCol)).as("n_docs"),
-      sum("tf").as("n_tokens"))
-    tf.withColumn("dl", expr(s"sum(tf) OVER (PARTITION BY $idCol)"))
-      .join(broadcast(q), Seq("term"))
-      .join(broadcast(tstats), Seq("term"))
-      .join(broadcast(qlen), Seq("qid"))
-      .crossJoin(broadcast(cs))
+    matchedRows(withDocLength(tf, idCol), q,
+      tf.agg(countDistinct(col(idCol)).as("n_docs"), sum("tf").as("n_tokens")),
+      broadcast(tstatsFor(tf, q)) -> "term")
   }
 
-  /** ONE definition of the per-query term count (review r19: this
-    * one-liner existed verbatim here and in both Index scorers — a
-    * qlen-convention change, e.g. deduping repeated query terms,
-    * would have had to land in three places or the index and
-    * sequential-scan paths silently diverge on the conjunctive gate).
+  /** dl = Σ tf per doc (== token count) as a WINDOW over the tf frame,
+    * not groupBy + join-back. The join-back formulation carried a 4th
+    * tokenize subtree (Catalyst's pushdowns specialize the clones
+    * apart, so ReusedExchange cannot merge them — the ir19/ir30
+    * lesson) plus a sort-merge join of the full matched stream against
+    * dl; the window replaces both with one exchange on the doc id.
+    */
+  private[graft] def withDocLength(tf: DataFrame,
+                                   idCol: String = "doc_id"): DataFrame =
+    tf.withColumn("dl", expr(s"sum(tf) OVER (PARTITION BY $idCol)"))
+
+  /** THE matched-rows builder behind every retrieval path (scan,
+    * doc-vector index, inverted index, provided stats, stream): the
+    * query join, the stats joins, qlen and the collection stats, in
+    * one fixed order, so the row context the scoring formulas read
+    * (tf, dl, df, cf, qlen, n_docs, n_tokens) has one definition.
+    *
+    * @param rows  (<id>, term, tf, …) corpus-side rows with the stats
+    *              their layout stores: dl on scan, doc-vector and
+    *              stream rows, df/cf on inverted postings
+    * @param q     (qid, term, …) query rows; augmented topics carry
+    *              qtf/df/cf on them
+    * @param coll  one row (n_docs, n_tokens)
+    * @param stats the stats neither side carries, each frame joined on
+    *              its key after the query join: the broadcast
+    *              per-term df/cf of the scan and doc-vector paths, the
+    *              inverted layout's (doc_id, dl) side table
+    */
+  private[graft] def matchedRows(rows: DataFrame, q: DataFrame,
+                                 coll: DataFrame,
+                                 stats: (DataFrame, String)*): DataFrame =
+    stats
+      .foldLeft(rows.join(broadcast(q), Seq("term"))) {
+        case (m, (s, key)) => m.join(s, Seq(key))
+      }
+      .join(broadcast(qlenOf(q)), Seq("qid"))
+      .crossJoin(broadcast(coll))
+
+  /** [[matchedRows]] with stats PROVIDED by an augmented topic frame
+    * (qid, term, qtf, df, cf) and the collection header as literals —
+    * the TrecRunBaselines / side-loaded-stats dataflow.
+    */
+  private[graft] def matchedWithStats(rows: DataFrame, qAug: DataFrame,
+                                      collLength: Long,
+                                      nDocs: Long): DataFrame =
+    matchedRows(rows, qAug, rows.sparkSession.range(1)
+      .select(lit(nDocs).as("n_docs"), lit(collLength).as("n_tokens")))
+
+  /** ONE definition of the per-query term count: every matched-rows
+    * path and the RM3 interpolations take qlen from here, so a
+    * qlen-convention change (e.g. deduping repeated query terms) lands
+    * on the conjunctive gate of every scorer at once.
     */
   private[graft] def qlenOf(q: DataFrame): DataFrame =
     q.groupBy("qid").agg(count(lit(1)).as("qlen"))
 
-  /** ONE definition of the query-pruned per-term df/cf stats (same
-    * r19 consolidation; shared by the sequential scan and
-    * [[Index.scoreFromIndex]] — the inverted layout carries its stats
-    * precomputed on the postings rows instead).
+  /** ONE definition of the query-pruned per-term df/cf stats, shared
+    * by the sequential scan and [[Index.scoreFromIndex]] (the inverted
+    * layout carries its stats precomputed on the postings rows, and
+    * augmented topics on the query rows).
     */
   private[graft] def tstatsFor(tf: DataFrame, q: DataFrame): DataFrame =
     tf.groupBy("term")
       .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
       .join(q.select("term").distinct(), Seq("term"), "left_semi")
 
-  /** [[matchedTermsFor]] bound to the testdata corpus + [[querySet]]. */
-  def matchedTerms(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val q = querySet.flatMap { case (qid, ts) => ts.map(qid -> _) }
-      .toDF("qid", "term")
-    matchedTermsFor(Tables(spark, sfDir, "documents"), q)
-  }
+  /** [[matchedTermsFromTf]] bound to the testdata corpus + [[querySet]]. */
+  def matchedTerms(spark: SparkSession, sfDir: String): DataFrame =
+    matchedTermsFromTf(TextOps.termFreqs(Tables(spark, sfDir, "documents")),
+      queryFrame(spark))
 
   /** Generic scoring pipeline → (qid, <idCol>, score, rank), top-k per
     * qid, for any (doc_id, text) corpus and (qid, term) query set.
@@ -197,31 +233,77 @@ object Retrieval {
   def scoreFor(docs: DataFrame, q: DataFrame, partExpr: String,
                finalExpr: String, conjunctive: Boolean, k: Int,
                idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    scoreMatched(matchedTermsFor(docs, q, idCol, textCol), partExpr,
-      finalExpr, conjunctive, k, idCol)
+    scoreMatched(
+      matchedTermsFromTf(TextOps.termFreqs(docs, idCol, textCol), q, idCol),
+      partExpr, finalExpr, conjunctive, k, idCol)
 
   /** Scoring stage alone, over an already-built matched-terms table —
-    * lets multi-model runs (TrecRunBaselines grid) persist the matched
-    * stats ONCE and derive every model from the cache instead of
-    * re-tokenizing the corpus per model.
+    * one model through [[scoreModels]].
     */
   def scoreMatched(matched: DataFrame, partExpr: String,
                    finalExpr: String, conjunctive: Boolean, k: Int,
-                   idCol: String = "doc_id"): DataFrame = {
-    val grouped = matched
-      .withColumn("part", expr(partExpr))
-      .groupBy(col("qid"), col(idCol), col("dl"), col("qlen"))
+                   idCol: String = "doc_id"): DataFrame =
+    scoreModels(matched, Seq(("", partExpr, finalExpr, conjunctive)), k,
+      idCol)
+
+  /** A retrieval model: (name, per-term part, final, conjunctive). */
+  type Model = (String, String, String, Boolean)
+
+  /** THE scorer, stream-legal half: part → group by (qid, <idCol>, dl,
+    * qlen) → conjunctive gate (`n_matched = qlen`) → final score. One
+    * model builds the plain plan; several (the TrecRunBaselines grid)
+    * turn their parts into columns and `stack()` them into (model,
+    * part) rows, so one aggregation over ONE pass of `matched` scores
+    * every model, keyed by a leading `model` column. (A union of
+    * per-model branches re-derives the matched rows per model:
+    * per-model column pruning specializes the branches — LMno reads
+    * only tf/dl, BM25 also df — so their exchanges never canonicalize
+    * equal; measured on ir26, 12 parquet scans → 3 with the stack.)
+    */
+  private[graft] def aggregateModels(matched: DataFrame, models: Seq[Model],
+                                     idCol: String = "doc_id"): DataFrame = {
+    val keys = Seq("qid", idCol, "dl", "qlen")
+    val (parted, gates, finalExpr) = models match {
+      case Seq((_, part, fin, conj)) =>
+        (matched.withColumn("part", expr(part)),
+          if (conj) Seq("n_matched = qlen") else Nil, fin)
+      case _ =>
+        val stack = models.map { case (n, _, _, _) => s"'$n', part_$n" }
+          .mkString(s"stack(${models.size}, ", ", ", ") AS (model, part)")
+        (matched
+          .select(keys.map(col) ++ models.map { case (n, part, _, _) =>
+            expr(part).as(s"part_$n") }: _*)
+          .select(keys.map(col) :+ expr(stack): _*),
+          models.collect { case (n, _, _, true) =>
+            s"model <> '$n' OR n_matched = qlen" },
+          models.map { case (n, _, fin, _) => s"WHEN model = '$n' THEN $fin" }
+            .mkString("CASE ", " ", " END"))
+    }
+    val grouped = parted
+      .groupBy((modelKey(models) ++ keys).map(col): _*)
       .agg(sum("part").as("score_sum"), count(lit(1)).as("n_matched"))
-    val gated =
-      if (conjunctive) grouped.filter(col("n_matched") === col("qlen"))
-      else grouped
-    gated
+    (if (gates.isEmpty) grouped else grouped.filter(expr(gates.mkString(" AND "))))
       .withColumn("score", expr(finalExpr))
-      .withColumn("rank",
-        expr(s"row_number() OVER (PARTITION BY qid ORDER BY score DESC, $idCol)"))
-      .filter(col("rank") <= k)
-      .select("qid", idCol, "score", "rank")
   }
+
+  /** [[aggregateModels]] + the batch top-k: row_number per (model,) qid
+    * ordered by score, ties broken by id → (qid, <idCol>, score, rank
+    * [, model]).
+    */
+  private[graft] def scoreModels(matched: DataFrame, models: Seq[Model],
+                                 k: Int,
+                                 idCol: String = "doc_id"): DataFrame = {
+    val by = modelKey(models) :+ "qid"
+    aggregateModels(matched, models, idCol)
+      .withColumn("rank", expr(s"row_number() OVER (PARTITION BY " +
+        s"${by.mkString(", ")} ORDER BY score DESC, $idCol)"))
+      .filter(col("rank") <= k)
+      .select((Seq("qid", idCol, "score", "rank") ++ modelKey(models))
+        .map(col): _*)
+  }
+
+  private def modelKey(models: Seq[Model]): Seq[String] =
+    if (models.size == 1) Nil else Seq("model")
 
   /** Scoring with stats PROVIDED by an augmented topic file (the
     * TrecRunBaselines dataflow: QueryTermCount precomputes df/cf and
@@ -234,33 +316,18 @@ object Retrieval {
   def scoreWithStats(docs: DataFrame, qAug: DataFrame, collLength: Long,
                      nDocs: Long, partExpr: String, finalExpr: String,
                      conjunctive: Boolean, k: Int,
-                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val tf = TextOps.termFreqs(docs, idCol, textCol)
-    val qlen = qAug.groupBy("qid").agg(count(lit(1)).as("qlen"))
-    // dl as a window — same rationale as matchedTermsFromTf; the
-    // part->gate->rank block DELEGATES to scoreMatched (review r18:
-    // this method carried a verbatim copy, so the Index.scala "one
-    // definition" invariant for gating/tie-break was already false —
-    // a future gate change would have silently missed the
-    // TrecRunBaselines path)
-    val matched = tf
-      .withColumn("dl", expr(s"sum(tf) OVER (PARTITION BY $idCol)"))
-      .join(broadcast(qAug), Seq("term"))
-      .join(broadcast(qlen), Seq("qid"))
-      .withColumn("n_tokens", lit(collLength))
-      .withColumn("n_docs", lit(nDocs))
-    scoreMatched(matched, partExpr, finalExpr, conjunctive, k, idCol)
-  }
+                     idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    scoreMatched(
+      matchedWithStats(
+        withDocLength(TextOps.termFreqs(docs, idCol, textCol), idCol),
+        qAug, collLength, nDocs),
+      partExpr, finalExpr, conjunctive, k, idCol)
 
   /** [[scoreFor]] bound to the testdata corpus + [[querySet]]. */
   def score(spark: SparkSession, sfDir: String, partExpr: String,
-            finalExpr: String, conjunctive: Boolean, k: Int): DataFrame = {
-    import spark.implicits._
-    val q = querySet.flatMap { case (qid, ts) => ts.map(qid -> _) }
-      .toDF("qid", "term")
-    scoreFor(Tables(spark, sfDir, "documents"), q, partExpr, finalExpr,
-      conjunctive, k)
-  }
+            finalExpr: String, conjunctive: Boolean, k: Int): DataFrame =
+    scoreFor(Tables(spark, sfDir, "documents"), queryFrame(spark), partExpr,
+      finalExpr, conjunctive, k)
 
   /** DuckDB oracle for the same pipeline; `partExpr`/`finalExpr` are the
     * very strings given to `expr(...)` above.

@@ -191,34 +191,11 @@ object Jobs {
       ("LMs", s"qtf * (${lmjmPart()})", lmjmFinal, false),
       ("LMdi", s"qtf * ($lmdirPart)", lmdirFinal, false),
       ("BM25", s"qtf * ($bm25Part)", bm25Final, false))
-    // ONE corpus pass for all four models (the ir26/ir28 stack
-    // pattern): per-model column pruning otherwise specializes the
-    // four branches apart and each re-tokenizes the corpus
-    val stackExpr = "stack(4, " + models.map { case (n, _, _, _) =>
-      s"'$n', part_$n" }.mkString(", ") + ") AS (model, part)"
-    val finalCase = "CASE " + models.map { case (n, _, fin, _) =>
-      s"WHEN model = '$n' THEN $fin" }.mkString(" ") + " END"
-    val conjGate = models.collect { case (n, _, _, true) => n }
-      .map(n => s"model <> '$n' OR n_matched = qlen").mkString(" AND ")
-    val qlen = qAug.groupBy("qid").agg(count(lit(1)).as("qlen"))
-    val matched = TextOps.termFreqs(docs)
-      .withColumn("dl", expr("sum(tf) OVER (PARTITION BY doc_id)"))
-      .join(broadcast(qAug), Seq("term"))
-      .join(broadcast(qlen), Seq("qid"))
-      .withColumn("n_tokens", lit(len))
-      .withColumn("n_docs", lit(nd))
-    val ranked = matched
-      .select(Seq(col("qid"), col("doc_id"), col("dl"), col("qlen")) ++
-        models.map { case (n, part, _, _) => expr(part).as(s"part_$n") }: _*)
-      .select(col("qid"), col("doc_id"), col("dl"), col("qlen"),
-        expr(stackExpr))
-      .groupBy("model", "qid", "doc_id", "dl", "qlen")
-      .agg(sum("part").as("score_sum"), count(lit(1)).as("n_matched"))
-      .filter(expr(conjGate))
-      .withColumn("score", expr(finalCase))
-      .withColumn("rank", expr(
-        "row_number() OVER (PARTITION BY model, qid ORDER BY score DESC, doc_id)"))
-      .filter(col("rank") <= TopK)
+    // ONE corpus pass for all four models (the ir26 stack path of
+    // Retrieval.scoreModels)
+    val ranked = scoreModels(
+        matchedWithStats(withDocLength(TextOps.termFreqs(docs)), qAug, len, nd),
+        models, TopK)
       .withColumn("qid", concat_ws(":", col("qid"), col("model")))
     writeRun(ranked, out, "graft-baselines")
   }
@@ -435,7 +412,7 @@ object Jobs {
     // accumulation): aggregate the per-occurrence rows from readPlain
     // first, so a repeated query term gets one entry with its count
     // rather than duplicate term:w lines at weight λ/qlen each.
-    val qlen = q.groupBy("qid").agg(count(lit(1)).as("qlen"))
+    val qlen = Retrieval.qlenOf(q)
     val qterms = q.groupBy("qid", "term").agg(count(lit(1)).as("qtf"))
     val rm3 = qterms.join(qlen, Seq("qid"))
       .join(clipn, Seq("qid", "term"), "full_outer")
@@ -510,8 +487,10 @@ object Jobs {
     * one document's term vector as `term count` lines. The reference
     * deserializes a FeatureVector from an HBase point get and prints
     * Double weights; here the doc_id filter is pushed to the parquet
-    * scan (the index write repartitions by doc_id, so row groups prune)
-    * and counts print through the same Double formatting ("the 3.0").
+    * scan, but the index write is hash-partitioned by doc_id and
+    * unsorted, so row-group min/max stats rarely exclude a group and
+    * the scan reads most of the index. Counts print through the same
+    * Double formatting ("the 3.0").
     * Term-sorted — the reference iterates an unordered Set; sorting
     * makes the dump deterministic without changing its contents.
     */

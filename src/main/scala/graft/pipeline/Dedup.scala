@@ -422,10 +422,10 @@ object Dedup {
     }
 
   /** Unpersist the localCheckpoint block storage behind `df`. Only
-    * called on frames the caller created and owns (here and in
-    * [[Bpe]]) — the NearDupStream r18 pattern.
+    * called on frames the caller created and owns (here, in [[Bpe]]
+    * and in `NearDupStream`).
     */
-  private[pipeline] def unpersistCheckpoint(df: DataFrame): Unit =
+  private[graft] def unpersistCheckpoint(df: DataFrame): Unit =
     checkpointRdds(df).foreach(_.unpersist(blocking = false))
 
   /** Near-dup survivor filter: keep each cluster's min-id doc.

@@ -404,38 +404,10 @@ object IrQueries {
     // as a typed column.
     Decl(
       "ir26_baselines_grid",
-      (s, dir) => {
-        // ONE pass over the matched frame for all four models (the
-        // ir28 grid pattern): every model's per-term contribution is a
-        // column, stack() turns them into (model, part) rows, and one
-        // grouped aggregation + one window rank all four. The previous
-        // four-branch union re-derived matchedTerms per model —
-        // per-model COLUMN PRUNING specializes the branches (LMno
-        // reads only tf/dl, BM25 also df/…), so their exchanges never
-        // canonicalize equal and ReusedExchange was 0 (measured: 12
-        // parquet scans → 3 with the stack).
-        val models = baselineModels
-        val stackExpr = "stack(4, " + models.map { case (n, _, _, _) =>
-          s"'$n', part_$n" }.mkString(", ") + ") AS (model, part)"
-        val finalCase = "CASE " + models.map { case (n, _, fin, _) =>
-          s"WHEN model = '$n' THEN $fin" }.mkString(" ") + " END"
-        val stacked = matchedTerms(s, dir)
-          .select(Seq(col("qid"), col("doc_id"), col("dl"), col("qlen")) ++
-            models.map { case (n, part, _, _) =>
-              expr(part).as(s"part_$n") }: _*)
-          .select(col("qid"), col("doc_id"), col("dl"), col("qlen"),
-            expr(stackExpr))
-        stacked
-          .groupBy("model", "qid", "doc_id", "dl", "qlen")
-          .agg(sum("part").as("score_sum"), count(lit(1)).as("n_matched"))
-          // conjunctive gate applies to LMno only
-          .filter(expr("model <> 'LMno' OR n_matched = qlen"))
-          .withColumn("score", expr(finalCase))
-          .withColumn("rank", expr(
-            "row_number() OVER (PARTITION BY model, qid ORDER BY score DESC, doc_id)"))
-          .filter(col("rank") <= 5)
-          .select("qid", "doc_id", "score", "rank", "model")
-      },
+      // ONE pass over the matched frame for all four models: the
+      // stack path of Retrieval.scoreModels (conjunctive gate on LMno
+      // only)
+      (s, dir) => scoreModels(matchedTerms(s, dir), baselineModels, 5),
       Some(baselineModels
         .map { case (name, part, fin, conj) =>
           s"SELECT *, '$name' AS model FROM (\n${duckScore(part, fin, conj, 5)}\n) t_$name"
@@ -565,9 +537,8 @@ object IrQueries {
         // agg + join-back (which would clone the expanded table). Four
         // separate branches re-ran the subtree up to 8×.
         val rm1 = rm1Spark(s, dir).select("qid", "term", "w", "frank")
-        val q = querySet.flatMap { case (qid, ts) => ts.map(qid -> _) }
-          .toDF("qid", "term")
-        val qlen = q.groupBy("qid").agg(count(lit(1)).as("qlen"))
+        val q = queryFrame(s)
+        val qlen = qlenOf(q)
         val grid = rm3Grid.map { case (ft, l) => (ft, l.toDouble) }
           .toDF("fb_terms", "lam")
         val qq = q.join(qlen, Seq("qid")).crossJoin(broadcast(grid))
@@ -608,7 +579,6 @@ object IrQueries {
     Decl(
       "ir29_vsm_cosine",
       (s, dir) => {
-        import s.implicits._
         val tf = TextOps.termFreqs(docsT(s, dir))
         val nd = docsT(s, dir).agg(count(lit(1)).as("n_docs"))
         val dfT = tf.groupBy("term").agg(count(lit(1)).as("df"))
@@ -623,8 +593,7 @@ object IrQueries {
           .withColumn("wdt", expr("tf * ln(n_docs / df)"))
           .withColumn("dn",
             expr("sqrt(sum(wdt * wdt) OVER (PARTITION BY doc_id))"))
-        val q = querySet.flatMap { case (qid, ts) => ts.map(qid -> _) }
-          .toDF("qid", "term")
+        val q = queryFrame(s)
         val qw = q.join(dfT, Seq("term")).crossJoin(broadcast(nd))
           .withColumn("wqt", expr("ln(n_docs / df)"))
         val qnorm = qw.groupBy("qid")
@@ -669,7 +638,6 @@ object IrQueries {
     Decl(
       "ir30_rocchio",
       (s, dir) => {
-        import s.implicits._
         // Round-3 driver regression (2.6→11.9 s) adjudicated by A/B
         // (BENCH_NOTES §1, 3 rounds each, sf0.1): ir30's consumers of tf are
         // each SPECIALIZED by Catalyst — the query-term semi-join and
@@ -695,8 +663,7 @@ object IrQueries {
         val dfT = tf.groupBy("term").agg(count(lit(1)).as("df"))
         val w = tf.join(dfT, Seq("term")).crossJoin(broadcast(nd))
           .withColumn("wdt", expr("tf * ln(n_docs / df)"))
-        val q0 = querySet.flatMap { case (qid, ts) => ts.map(qid -> _) }
-          .toDF("qid", "term")
+        val q0 = queryFrame(s)
         // Feedback ranking derives from the SAME tf frame as the tf·idf
         // weights (matchedTermsFromTf) — one tokenize subtree in the
         // whole plan; PlanShapeSpec asserts the exchange is reused
@@ -752,15 +719,13 @@ object IrQueries {
     Decl(
       "ir19_rm3",
       (s, dir) => {
-        import s.implicits._
         // clip normalization as a window, for the same
         // no-duplicated-subtree reason as rm1Spark's tot
         val clipn = rm1Spark(s, dir).filter(col("frank") <= 10)
           .select(col("qid"), col("term"),
             expr("w / sum(w) OVER (PARTITION BY qid)").as("wc"))
-        val q = querySet.flatMap { case (qid, ts) => ts.map(qid -> _) }
-          .toDF("qid", "term")
-        val qlen = q.groupBy("qid").agg(count(lit(1)).as("qlen"))
+        val q = queryFrame(s)
+        val qlen = qlenOf(q)
         val qq = q.join(qlen, Seq("qid"))
         qq.join(clipn, Seq("qid", "term"), "full_outer")
           .select(col("qid"), col("term"),

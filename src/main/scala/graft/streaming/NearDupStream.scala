@@ -323,7 +323,7 @@ object NearDupStream {
       if (iter >= 64) {
         // free the last checkpoint before refusing (review r18: every
         // throw path must release the blocks the loop owns)
-        unpersistCheckpoint(m)
+        Dedup.unpersistCheckpoint(m)
         throw new IllegalArgumentException(
           "requirement failed: keeper chains failed to converge in " +
             "64 jumps — ledger rows violate the monotone-refinement " +
@@ -361,8 +361,8 @@ object NearDupStream {
         // release both live checkpoints before refusing (review r18:
         // a repeatedly-failing resolve in a long-lived streaming
         // session must not accumulate pinned ledger copies)
-        unpersistCheckpoint(prev)
-        unpersistCheckpoint(jumped)
+        Dedup.unpersistCheckpoint(prev)
+        Dedup.unpersistCheckpoint(jumped)
         throw new IllegalStateException(
           s"resolveKeepers: ledger violates the keeper-is-also-a-doc " +
             s"contract — doc ${ex.get(2)} in band ${ex.get(0)} sig " +
@@ -375,18 +375,9 @@ object NearDupStream {
       // pin executor storage for the session, proportional to chain
       // length (r18 advice fix); the new checkpoint is already
       // materialized (localCheckpoint is eager), so this is safe
-      unpersistCheckpoint(prev)
+      Dedup.unpersistCheckpoint(prev)
       iter += 1
     }
     (m, iter)
   }
-
-  /** Unpersist the localCheckpoint block storage behind `df` (every
-    * LogicalRDD in its analyzed plan). Only called on frames this
-    * object created and owns.
-    */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr
-    }.foreach(_.rdd.unpersist(blocking = false))
 }

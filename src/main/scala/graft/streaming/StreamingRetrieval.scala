@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ir.Retrieval
 import graft.text.TextOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -58,21 +59,11 @@ object StreamingRetrieval {
       .withColumn("tf",
         size(filter(col("toks"), t => t === col("term"))).cast("long"))
       .drop("toks")
-    val qlen = qAug.groupBy("qid").agg(count(lit(1)).as("qlen"))
-    val scored = tf
-      .join(broadcast(qAug), Seq("term"))
-      .join(broadcast(qlen), Seq("qid"))
-      .withColumn("n_tokens", lit(collLength))
-      .withColumn("n_docs", lit(nDocs))
-      .withColumn("part", expr(partExpr))
-      .groupBy("qid", "doc_id", "dl", "qlen")
-      .agg(sum("part").as("score_sum"),
-        count(lit(1)).as("n_matched"))
-    val gated =
-      if (conjunctive) scored.filter(col("n_matched") === col("qlen"))
-      else scored
-    gated
-      .withColumn("score", expr(finalExpr))
+    // the batch engine's matched-rows builder and the stream-legal
+    // half of its scorer: no window, the one aggregation is the score
+    Retrieval.aggregateModels(
+        Retrieval.matchedWithStats(tf, qAug, collLength, nDocs),
+        Seq(("", partExpr, finalExpr, conjunctive)))
       .select("qid", "doc_id", "score")
   }
 

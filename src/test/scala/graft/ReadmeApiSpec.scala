@@ -105,6 +105,15 @@ class ReadmeApiSpec extends SparkSpec {
     assert(key(run2) == key(run) && key(run3) == key(run))
   }
 
+  test("README's declared-query count is SparkEntry.decls.size") {
+    val readme = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("README.md")), "UTF-8")
+    val stated = """`queries` \((\d+) declared""".r
+      .findFirstMatchIn(readme).map(_.group(1).toInt)
+    assert(stated.contains(SparkEntry.decls.size),
+      s"README states $stated declared queries")
+  }
+
   test("curation quickstart: gopher gate + DSIR weights") {
     val gated = TextMetrics.gopherRules(docs).filter(col("keep") === 1)
     assert(gated.count() > 0)
