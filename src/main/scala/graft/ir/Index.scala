@@ -48,15 +48,11 @@ object Index {
       .groupBy("term")
       .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
 
-  /** Inverted postings layout: one row per term carrying its full
-    * postings list (doc_id-sorted) plus precomputed df/cf, with doc
-    * lengths in a small side table. This is the SELECTIVE-query scale
-    * path the doc-vector layout can't offer: a query touches only its
-    * own terms' rows, and because the postings file is term-sorted the
-    * literal `term IN (...)` predicate prunes parquet row groups at the
-    * scan (`PushedFilters`, asserted in IndexSpec) — the Spark analog
-    * of an HBase point-Get per term (SURVEY §3.3), without the RPC.
+  /** Slices per term in the sharded postings build — fixed (NOT a
+    * partition count) so the slice id is a stable function of doc_id.
     */
+  private val IxSlices = 4096L
+
   /** The postings relation from a (doc_id, term, tf) frame.
     *
     * maxPostings=0: one row per term (the compact layout). >0: split
@@ -78,11 +74,6 @@ object Index {
     * PlanShapeSpec). Re-measured r18 at 2.5M docs (IndexScaleProbe,
     * probes/index_scale500_r18.log): see BENCH_NOTES §3g addendum.
     */
-  /** Slices per term in the sharded postings build — fixed (NOT a
-    * partition count) so the slice id is a stable function of doc_id.
-    */
-  private val IxSlices = 4096L
-
   private[graft] def postingsFrame(tf: DataFrame,
                                    maxPostings: Int): DataFrame =
     if (maxPostings > 0) {
@@ -163,6 +154,15 @@ object Index {
     */
   val DefaultMaxPostings: Int = 65536
 
+  /** Inverted postings layout: one row per term carrying its full
+    * postings list (doc_id-sorted) plus precomputed df/cf, with doc
+    * lengths in a small side table. This is the SELECTIVE-query scale
+    * path the doc-vector layout can't offer: a query touches only its
+    * own terms' rows, and because the postings file is term-sorted the
+    * literal `term IN (...)` predicate prunes parquet row groups at the
+    * scan (`PushedFilters`, asserted in IndexSpec) — the Spark analog
+    * of an HBase point-Get per term (SURVEY §3.3), without the RPC.
+    */
   def writeInverted(docs: DataFrame, path: String, files: Int = 0,
                     maxPostings: Int = DefaultMaxPostings): Unit = {
     require(maxPostings >= 0,

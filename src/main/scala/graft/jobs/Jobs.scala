@@ -184,20 +184,22 @@ object Jobs {
                        augTopics: String): Unit = {
     val ((len, nd), rows) = Topics.readAugmented(spark, augTopics)
     val qAug = rows.filter(col("cf") > 0).cache()
-    val docs = loadDocs(spark, in)
-    import Retrieval._
-    val models = Seq(
-      ("LMno", s"qtf * ($lmnoPart)", lmnoFinal, true),
-      ("LMs", s"qtf * (${lmjmPart()})", lmjmFinal, false),
-      ("LMdi", s"qtf * ($lmdirPart)", lmdirFinal, false),
-      ("BM25", s"qtf * ($bm25Part)", bm25Final, false))
-    // ONE corpus pass for all four models (the ir26 stack path of
-    // Retrieval.scoreModels)
-    val ranked = scoreModels(
-        matchedWithStats(withDocLength(TextOps.termFreqs(docs)), qAug, len, nd),
-        models, TopK)
-      .withColumn("qid", concat_ws(":", col("qid"), col("model")))
-    writeRun(ranked, out, "graft-baselines")
+    try {
+      val docs = loadDocs(spark, in)
+      import Retrieval._
+      val models = Seq(
+        ("LMno", s"qtf * ($lmnoPart)", lmnoFinal, true),
+        ("LMs", s"qtf * (${lmjmPart()})", lmjmFinal, false),
+        ("LMdi", s"qtf * ($lmdirPart)", lmdirFinal, false),
+        ("BM25", s"qtf * ($bm25Part)", bm25Final, false))
+      // ONE corpus pass for all four models (the ir26 stack path of
+      // Retrieval.scoreModels)
+      val ranked = scoreModels(
+          matchedWithStats(withDocLength(TextOps.termFreqs(docs)), qAug, len, nd),
+          models, TopK)
+        .withColumn("qid", concat_ws(":", col("qid"), col("model")))
+      writeRun(ranked, out, "graft-baselines")
+    } finally qAug.unpersist(blocking = false)
   }
 
   /** Word count with optional skip-pattern scrubbing (P12,
@@ -275,16 +277,22 @@ object Jobs {
   def runQueryKde(spark: SparkSession, trecIn: String, out: String,
                   topics: String, k: Int = 100): Unit = {
     val sgml = TrecSgml.read(spark, trecIn).cache()
-    val docs = sgml.select(col("docno").as("doc_id"), col("text"))
-    val ranked = Retrieval.scoreFor(docs, Topics.readPlain(spark, topics),
-      Retrieval.lmdirPart, Retrieval.lmdirFinal, conjunctive = false, k)
-    val withEp = ranked.join(
-      sgml.select(col("docno").as("doc_id"),
-        coalesce(col("epoch"), lit(0L)).as("ep")), Seq("doc_id"))
-    writeRun(graft.temporal.Kde.rescore(withEp)
+    try writeRun(graft.temporal.Kde.rescore(kdeCandidates(spark, sgml, topics, k))
       .withColumnRenamed("new_score", "score")
       .withColumnRenamed("new_rank", "rank"), out, "graft-kde")
+    finally sgml.unpersist(blocking = false)
   }
+
+  /** Dirichlet top-k over the SGML docs, each hit carrying its epoch
+    * (0 when absent) — the input of both KDE jobs.
+    */
+  private def kdeCandidates(spark: SparkSession, sgml: DataFrame,
+                            topics: String, k: Int): DataFrame =
+    Retrieval.scoreFor(sgml.select(col("docno").as("doc_id"), col("text")),
+        Topics.readPlain(spark, topics),
+        Retrieval.lmdirPart, Retrieval.lmdirFinal, conjunctive = false, k)
+      .join(sgml.select(col("docno").as("doc_id"),
+        coalesce(col("epoch"), lit(0L)).as("ep")), Seq("doc_id"))
 
   /** The reference's full KDE job shape (`RunQueryKDEHBase.java:30,
     * 85-118`): Dirichlet retrieval, per-query KDE over the top-k
@@ -298,35 +306,32 @@ object Jobs {
                        k: Int = 100): Unit = {
     import graft.eval.{Eval, Qrels}
     val sgml = TrecSgml.read(spark, trecIn).cache()
-    val docs = sgml.select(col("docno").as("doc_id"), col("text"))
-    val ranked = Retrieval.scoreFor(docs, Topics.readPlain(spark, topics),
-      Retrieval.lmdirPart, Retrieval.lmdirFinal, conjunctive = false, k)
-    val withEp = ranked.join(
-      sgml.select(col("docno").as("doc_id"),
-        coalesce(col("epoch"), lit(0L)).as("ep")), Seq("doc_id"))
-    val grid = spark.range(1, 10)
-      .select((col("id").cast("double") / 10).as("alpha"))
-    val sweep = graft.temporal.Kde.rescoreSweep(withEp, grid)
-    // evaluate each (qid, α) ranking independently: α becomes part of
-    // the key, qrels replicated per α (tiny × 9)
-    val res = sweep.select(
-      concat_ws(":", col("qid"), col("alpha")).as("qid"),
-      col("doc_id"), col("new_rank").as("rank"))
-    val qrelsX = Qrels.read(spark, qrelsPath)
-      .crossJoin(broadcast(grid))
-      .select(concat_ws(":", col("qid"), col("alpha")).as("qid"),
-        col("doc_id"), col("rel"))
-    // one pass for both cutoffs (rel@k is the only k-dependent
-    // aggregate); the former two metrics() calls re-executed the
-    // whole retrieval + KDE-sweep DAG per cutoff
-    Eval.metricsAtKs(res, qrelsX, Seq(10, 20))
-      .select(col("qid"), col("ap"), col("p_at_10").as("p10"),
-        col("p_at_20").as("p20"))
-      .orderBy("qid")
-      .select(concat_ws("\t", col("qid"),
-        concat_ws(",", round(col("ap"), 6), round(col("p10"), 6),
-          round(col("p20"), 6))).as("value"))
-      .coalesce(1).write.mode("overwrite").text(out)
+    try {
+      val grid = spark.range(1, 10)
+        .select((col("id").cast("double") / 10).as("alpha"))
+      val sweep = graft.temporal.Kde.rescoreSweep(
+        kdeCandidates(spark, sgml, topics, k), grid)
+      // evaluate each (qid, α) ranking independently: α becomes part of
+      // the key, qrels replicated per α (tiny × 9)
+      val res = sweep.select(
+        concat_ws(":", col("qid"), col("alpha")).as("qid"),
+        col("doc_id"), col("new_rank").as("rank"))
+      val qrelsX = Qrels.read(spark, qrelsPath)
+        .crossJoin(broadcast(grid))
+        .select(concat_ws(":", col("qid"), col("alpha")).as("qid"),
+          col("doc_id"), col("rel"))
+      // one pass for both cutoffs (rel@k is the only k-dependent
+      // aggregate); the former two metrics() calls re-executed the
+      // whole retrieval + KDE-sweep DAG per cutoff
+      Eval.metricsAtKs(res, qrelsX, Seq(10, 20))
+        .select(col("qid"), col("ap"), col("p_at_10").as("p10"),
+          col("p_at_20").as("p20"))
+        .orderBy("qid")
+        .select(concat_ws("\t", col("qid"),
+          concat_ws(",", round(col("ap"), 6), round(col("p10"), 6),
+            round(col("p20"), 6))).as("value"))
+        .coalesce(1).write.mode("overwrite").text(out)
+    } finally sgml.unpersist(blocking = false)
   }
 
   /** Format converters (`TrecToMallet` / `TrecToSequence` analogues;
@@ -505,20 +510,6 @@ object Jobs {
           col("tf").cast("double").cast("string")).as("value")),
       out, merge = true)
 
-  /** Exact-dedup a corpus: keep the min-id doc per content hash,
-    * write the deduplicated corpus as parquet (the LSH/near-dup
-    * variants are the px02/px03/px19/px21 query pipeline).
-    */
-  /** The production incremental-dedup cycle as one job: sign the
-    * arriving batch, check it against the PERSISTED signature store
-    * (band join on 16-long signatures — the corpus text is only read
-    * for the band-candidate docs), write per-doc verdicts, and — with
-    * `admit` — complete the loop the README describes: append the
-    * NOVEL docs' signatures to the store and their (doc_id, text)
-    * projection to the corpus, so the next batch is checked against
-    * them without any corpus re-processing. Store and corpus must be
-    * parquet directories for the admit append.
-    */
   /** The benchmark k-gram hash set every decontamination path scrubs
     * or drops against — ONE definition so the standalone job, the
     * composed job, and any future caller can't drift apart.
@@ -610,6 +601,16 @@ object Jobs {
     } finally { batchSigs.unpersist(); () }
   }
 
+  /** The production incremental-dedup cycle as one job: sign the
+    * arriving batch, check it against the PERSISTED signature store
+    * (band join on 16-long signatures — the corpus text is only read
+    * for the band-candidate docs), write per-doc verdicts, and — with
+    * `admit` — complete the loop the README describes: append the
+    * NOVEL docs' signatures to the store and their (doc_id, text)
+    * projection to the corpus, so the next batch is checked against
+    * them without any corpus re-processing. Store and corpus must be
+    * parquet directories for the admit append.
+    */
   def incrementalDedup(spark: SparkSession, sigStore: String,
                        corpusIn: String, batchIn: String, out: String,
                        admit: Boolean, threshold: Double = 0.5): Unit = {
@@ -1376,6 +1377,10 @@ object Jobs {
       .write.mode("overwrite").parquet(out)
   }
 
+  /** Exact-dedup a corpus: keep the min-id doc per content hash,
+    * write the deduplicated corpus as parquet (the LSH/near-dup
+    * variants are the px02/px03/px19/px21 query pipeline).
+    */
   def dedupCorpus(spark: SparkSession, in: String, out: String): Unit = {
     val docs = loadDocs(spark, in)
     // the GATED keeper rule lives in one place (Dedup.exactKeepers);
@@ -1586,14 +1591,6 @@ object Jobs {
     }
   }
 
-  /** Spam-score filter (`ClueWebSpamFilter.java:46-120`): join the
-    * side-loaded percentile table (the reference's per-row H2 lookup
-    * becomes one broadcast join, SURVEY S9/J4), keep docs scoring
-    * ≥ threshold, write the filtered corpus plus the reference's three
-    * counters (kept / filtered / missing) as a report line. Missing
-    * scores drop the doc, as in the reference (it only emits on a
-    * successful lookup).
-    */
   /** Shared spam-filter body: the ONE copy of the threshold/counter/
     * report semantics, whatever the score source (parquet or JDBC) —
     * JdbcSpec asserts the two public entry points stay byte-equal.
@@ -1621,6 +1618,14 @@ object Jobs {
     } finally { joined.unpersist(); () }
   }
 
+  /** Spam-score filter (`ClueWebSpamFilter.java:46-120`): join the
+    * side-loaded percentile table (the reference's per-row H2 lookup
+    * becomes one broadcast join, SURVEY S9/J4), keep docs scoring
+    * ≥ threshold, write the filtered corpus plus the reference's three
+    * counters (kept / filtered / missing) as a report line. Missing
+    * scores drop the doc, as in the reference (it only emits on a
+    * successful lookup).
+    */
   def spamFilter(spark: SparkSession, in: String, out: String,
                  scoresPath: String, threshold: Int = 70): Unit =
     spamFilterWith(spark, in, out,

@@ -250,10 +250,6 @@ object Multimodal {
         .orElse(Mp4Codec.decode(mediaType, bytes))
   }
 
-  /** Back-compat shim for the stub's fake dimensions. */
-  def decodeStub(bytes: Array[Byte]): (Int, Int, Int) =
-    StubCodec.decode("", bytes).get
-
   /** Partition-local batched decode: blobs → typed metadata. Rows the
     * codec declines fall back to the deterministic stub, so the
     * pipeline never drops or nulls a row when a partial codec (e.g.

@@ -99,29 +99,45 @@ object Ann {
   def cosineTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                  idCol: String = "vec_id",
                  embCol: String = "embedding"): DataFrame = {
-    val c = corpus.select(col(idCol).as("vid"), col(embCol).as("ce"))
-      .withColumn("cn", expr("sqrt(norm2_f64(ce))"))
-      .filter(col("cn") > 0 && !isnan(col("cn")))
-    val q = queries.select(col(idCol).as("qid"), col(embCol).as("qe"))
-      .withColumn("qn", expr("sqrt(norm2_f64(qe))"))
-      .filter(col("qn") > 0 && !isnan(col("qn")))
-    c.crossJoin(broadcast(q))
-      .filter(col("qid") =!= col("vid"))
+    val c = withNorm(
+      corpus.select(col(idCol).as("vid"), col(embCol).as("ce")), "ce", "cn")
+    cosineRank(c.crossJoin(broadcast(queryNorms(queries, idCol, embCol))), k)
+  }
+
+  /** The zero/NaN-norm rule of [[cosineTopK]], the one copy: `norm` =
+    * the L2 norm of `vec`, rows whose norm is zero or NaN dropped.
+    */
+  private def withNorm(vecs: DataFrame, vec: String,
+                       norm: String): DataFrame =
+    vecs.withColumn(norm, expr(s"sqrt(norm2_f64($vec))"))
+      .filter(col(norm) > 0 && !isnan(col(norm)))
+
+  /** Query side of every cosine path: (qid, qe, qn). */
+  private def queryNorms(queries: DataFrame, idCol: String,
+                         embCol: String): DataFrame =
+    withNorm(queries.select(col(idCol).as("qid"), col(embCol).as("qe")),
+      "qe", "qn")
+
+  /** The one cosine ranking, shared by [[cosineTopK]], [[ivfTopK]] and
+    * [[ivfTopKPartitioned]] (they differ only in how they build the
+    * candidate pairs): (qid, vid, qe, qn, ce, cn) pairs → top-k
+    * (qid, vid, cos, rank). Self-pairs and undefined cosines (NULL or
+    * NaN, see [[cosineTopK]]) are dropped; round-then-rank keeps the
+    * order stable under FP noise, vid breaks ties.
+    */
+  private def cosineRank(pairs: DataFrame, k: Int): DataFrame =
+    pairs.filter(col("qid") =!= col("vid"))
       .withColumn("cos", expr("dot_f64(qe, ce) / (qn * cn)"))
-      .filter(col("cos").isNotNull && !isnan(col("cos"))) // undefined-cosine rule, see above
-      // round-then-rank: stable ordering under FP noise, vid tiebreak
+      .filter(col("cos").isNotNull && !isnan(col("cos")))
       .withColumn("rank", expr(
         "row_number() OVER (PARTITION BY qid ORDER BY round(cos, 9) DESC, vid)"))
       .filter(col("rank") <= k)
       .select("qid", "vid", "cos", "rank")
-  }
 
   /** Lloyd's k-means over the embedding column: deterministic seeding
     * (the first `kClusters` vectors by id), `iters` assign+update
     * rounds. Returns (cid, centroid: array&lt;double&gt;) — tiny, meant
-    * to be broadcast. Build-phase op: runs in exploded long form so the
-    * mean update is one keyed aggregation (no elementwise array agg
-    * exists, and the build runs once per index, not per query).
+    * to be broadcast. The one-block case of [[pqTrain]]'s trainer.
     *
     * @note like [[pqTrain]], a cluster that loses every member during
     *       a Lloyd iteration drops OUT of the result (fewer than
@@ -135,8 +151,27 @@ object Ann {
   def kmeansCentroids(corpus: DataFrame, kClusters: Int, iters: Int,
                       idCol: String = "vec_id",
                       embCol: String = "embedding",
-                      allowFewer: Boolean = false): DataFrame = {
-    val e = corpus
+                      allowFewer: Boolean = false): DataFrame =
+    lloyd(corpus, idCol, embCol, None, kClusters, iters, allowFewer,
+      "kmeansCentroids", n =>
+        s"kmeansCentroids needs >= $kClusters distinct-id vectors to " +
+          s"seed, got $n (allowFewer opts into the every-vector-" +
+          s"its-own-cluster shrink)")
+      .withColumnRenamed("code", "cid")
+
+  /** The one Lloyd trainer: [[kmeansCentroids]] is its one-block case
+    * (`subDim` = None, cid = code), [[pqTrain]] runs it per block
+    * (blk = i div subDim). Build-phase op in exploded long form, so the
+    * mean update is one keyed aggregation (no elementwise array agg
+    * exists, and the build runs once per index, not per query).
+    * → ([blk,] code, centroid: array&lt;double&gt;).
+    */
+  private def lloyd(sample: DataFrame, idCol: String, embCol: String,
+                    subDim: Option[Int], k: Int, iters: Int,
+                    allowFewer: Boolean, who: String,
+                    tooFew: Long => String): DataFrame = {
+    val blk = subDim.toSeq.map(_ => "blk")
+    val ex0 = sample
       .select(col(idCol).as("vid"), posexplode(col(embCol)).as(Seq("i", "x0")))
       // loud on a NULL ELEMENT (review r19): the exploded form's
       // sum('d') silently SKIPS NULL dims — a vector with one NULL
@@ -145,79 +180,87 @@ object Ann {
       // paths raise. (A NULL embedding COLUMN still explodes to zero
       // rows and sits out, the nullIntolerant convention.)
       .withColumn("x", when(col("x0").isNotNull, col("x0").cast("double"))
-        .otherwise(expr("CAST(raise_error(concat('kmeansCentroids: NULL " +
+        .otherwise(expr(s"CAST(raise_error(concat('$who: NULL " +
           "element in embedding of vid ', CAST(vid AS STRING))) AS DOUBLE)")))
       .drop("x0")
+    val ex = subDim.fold(ex0)(d =>
+      ex0.withColumn("blk", expr(s"CAST(i div $d AS BIGINT)")))
     // round-then-rank (repo determinism rule, as in px34): dist2 is a
     // parallel double sum; ranking the rounded value keeps assignments
-    // stable across partitionings, the cid tiebreak settles exact ties.
-    def assign(cent: DataFrame): DataFrame = e.join(broadcast(cent), Seq("i"))
+    // stable across partitionings, the code tiebreak settles exact ties.
+    def assign(cent: DataFrame): DataFrame = ex.join(broadcast(cent), blk :+ "i")
       .withColumn("d", expr("(x - c) * (x - c)"))
-      .groupBy("vid", "cid").agg(sum("d").as("dist2"))
-      .withColumn("r", expr(
-        "row_number() OVER (PARTITION BY vid ORDER BY round(dist2, 6), cid)"))
-      .filter(col("r") === 1).select("vid", "cid")
-    // seed = the first kClusters DISTINCT ids by rank (works for any
-    // id space, not just dense 0-based ids; distinct first, because
-    // dense_rank mints cids from distinct id VALUES — duplicate-id
-    // rows would otherwise seed fewer clusters than rows counted).
-    // Fewer ids than clusters is an ERROR by default, not a silent
-    // shrink: an IVF consumer's kClusters math (ivfTopK's
-    // nprobe/kClusters recall cut, the partitioned layout's directory
-    // count) would be silently wrong — the same loud guard pqTrain
-    // applies to the identical seeding. The guard costs one id-column
-    // corpus scan (distinct + take-ordered + count) on the strict
-    // path. `allowFewer` opts a caller INTO the shrink where it is
-    // the declared semantics — semDedup's k is a CEILING (every
-    // vector its own cluster when n < k, EdgeCaseSpec) — and skips
-    // the count action entirely.
-    val seedIds = corpus.select(col(idCol).as("vid")).distinct()
-      .orderBy("vid").limit(kClusters)
+      .groupBy(("vid" +: blk :+ "code").map(col): _*).agg(sum("d").as("dist2"))
+      .withColumn("r", expr("row_number() OVER (PARTITION BY " +
+        ("vid" +: blk).mkString(", ") + " ORDER BY round(dist2, 6), code)"))
+      .filter(col("r") === 1).select(("vid" +: blk :+ "code").map(col): _*)
+    def update(members: DataFrame): DataFrame =
+      members.groupBy((blk :+ "code" :+ "i").map(col): _*)
+        .agg(expr("sum(x) / count(x)").as("c"))
+    // seed = the first k DISTINCT ids by rank (works for any id space,
+    // not just dense 0-based ids; distinct first, because dense_rank
+    // mints codes from distinct id VALUES — duplicate-id rows would
+    // otherwise seed fewer codes than rows counted). Fewer ids than k
+    // is an ERROR unless `allowFewer`: an IVF consumer's kClusters
+    // math (ivfTopK's nprobe/kClusters recall cut, the partitioned
+    // layout's directory count) would be silently wrong. The guard
+    // costs one id-column scan (distinct + take-ordered + count) on
+    // the strict path. `allowFewer` opts a caller INTO the shrink where
+    // it is the declared semantics — semDedup's k is a CEILING (every
+    // vector its own cluster when n < k, EdgeCaseSpec) — and skips the
+    // count action entirely.
+    val seedIds = sample.select(col(idCol).as("vid")).distinct()
+      .orderBy("vid").limit(k)
     if (!allowFewer) {
       val nSeeds = seedIds.count()
-      require(nSeeds == kClusters,
-        s"kmeansCentroids needs >= $kClusters distinct-id vectors to " +
-          s"seed, got $nSeeds (allowFewer opts into the every-vector-" +
-          s"its-own-cluster shrink)")
+      require(nSeeds == k, tooFew(nSeeds))
     }
-    // seed-init aggregates per (cid, i) — review r19: duplicate-ID
+    // seed-init aggregates per (code, i) — review r19: duplicate-ID
     // rows with different embeddings would otherwise put SEVERAL
-    // centroid rows under one (cid, i), and the first assign round's
-    // sum(d) would charge each vector the distance to ALL of them
-    // (~2× every other cid's scale). The mean matches the update
-    // step's own shape; for unique ids it is the identity.
-    var cent = e.join(broadcast(seedIds), Seq("vid"))
-      .withColumn("cid",
-        expr("dense_rank() OVER (ORDER BY vid) - 1").cast("long"))
-      .groupBy("cid", "i").agg(expr("sum(x) / count(x)").as("c"))
+    // centroid rows under one code, and the first assign round's
+    // sum(d) would charge each vector the distance to ALL of them.
+    // The mean matches the update step's own shape; for unique ids it
+    // is the identity.
+    var cent = update(ex.join(broadcast(seedIds.withColumn("code",
+      expr("dense_rank() OVER (ORDER BY vid) - 1").cast("long"))), Seq("vid")))
     for (_ <- 1 to iters)
-      cent = e.join(assign(cent), Seq("vid"))
-        .groupBy("cid", "i").agg(expr("sum(x) / count(x)").as("c"))
-    cent.groupBy("cid")
+      cent = update(ex.join(assign(cent), "vid" +: blk))
+    cent.groupBy((blk :+ "code").map(col): _*)
       .agg(expr("transform(array_sort(collect_list(struct(i, c))), s -> s.c)")
         .as("centroid"))
   }
 
-  /** Nearest-centroid WINNER row per vector, the one pipeline every
-    * assignment consumer shares (review r16: four textually-identical
-    * copies meant an edit to one — say the rounding precision — would
+  /** The one nearest-centroid rule: each vector's `n` nearest
+    * centroids against the broadcast codebook, ranked by squared L2
+    * rounded to 6 dp with a cid tiebreak (round-then-rank), every
+    * selected row passing [[guardWinner]]. Every assignment and every
+    * probe goes through here (review r16: textually-identical copies
+    * meant an edit to one — say the rounding precision — would
     * silently diverge the others, breaking the "assignments identical
-    * by construction" invariant the specs pin). One narrow pass
-    * against the broadcast codebook; the winner keeps `ve` and
-    * `centroid` attached so no caller ever re-joins the corpus to
-    * recover a projected-away column. → (vid, ve, cid, centroid, d2)
+    * by construction" invariant the specs pin). Keeps the input
+    * columns and adds (cid, centroid, d2), so no caller re-joins the
+    * corpus to recover a projected-away column.
+    */
+  private def nearestCentroids(vecs: DataFrame, id: String, vec: String,
+                               centroids: DataFrame, n: Int,
+                               who: String): DataFrame =
+    vecs.crossJoin(broadcast(centroids))
+      .withColumn("d2", expr(l2sq(vec, "centroid")))
+      .withColumn("r", expr(
+        s"row_number() OVER (PARTITION BY $id ORDER BY round(d2, 6), cid)"))
+      .filter(col("r") <= n)
+      .filter(expr(guardWinner("d2", id, who)))
+
+  /** Nearest-centroid WINNER row per corpus vector, the n = 1 case of
+    * [[nearestCentroids]] → (vid, ve, cid, centroid, d2).
     */
   private def nearestCentroidWinner(corpus: DataFrame,
                                     centroids: DataFrame,
                                     idCol: String, embCol: String,
                                     who: String): DataFrame =
-    corpus.select(col(idCol).as("vid"), col(embCol).as("ve"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("d2", expr(l2sq("ve", "centroid")))
-      .withColumn("r",
-        expr("row_number() OVER (PARTITION BY vid ORDER BY round(d2, 6), cid)"))
-      .filter(col("r") === 1)
-      .filter(expr(guardWinner("d2", "vid", who)))
+    nearestCentroids(
+      corpus.select(col(idCol).as("vid"), col(embCol).as("ve")),
+      "vid", "ve", centroids, 1, who)
 
   /** Nearest-centroid assignment for every corpus vector: one narrow
     * pass against the broadcast codebook → (vid, cid). At scale this
@@ -263,45 +306,35 @@ object Ann {
                          queries: DataFrame, nprobe: Int, k: Int,
                          idCol: String = "vec_id",
                          embCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("qid"), col(embCol).as("qe"))
-      .withColumn("qn", expr("sqrt(norm2_f64(qe))"))
-      .filter(col("qn") > 0 && !isnan(col("qn"))) // zero/NaN-norm rule, see cosineTopK
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("d2", expr(l2sq("qe", "centroid")))
-      .withColumn("pr",
-        expr("row_number() OVER (PARTITION BY qid ORDER BY round(d2, 6), cid)"))
-      .filter(col("pr") <= nprobe)
-      .filter(expr(guardWinner("d2", "qid", "ivf probe")))
-      .select("qid", "qe", "qn", "cid")
-    val probedCids = probes.select("cid").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    spark.read.parquet(path)
-      .filter(col("cid").isin(probedCids: _*))
-      .select(col("vid"), col("ve").as("ce"), col("cid"))
-      .withColumn("cn", expr("sqrt(norm2_f64(ce))"))
-      .filter(col("cn") > 0 && !isnan(col("cn")))
-      .join(broadcast(probes), Seq("cid"))
-      .filter(col("qid") =!= col("vid"))
-      .withColumn("cos", expr("dot_f64(qe, ce) / (qn * cn)"))
-      .filter(col("cos").isNotNull && !isnan(col("cos"))) // undefined-cosine rule, see cosineTopK
-      .withColumn("rank", expr(
-        "row_number() OVER (PARTITION BY qid ORDER BY round(cos, 9) DESC, vid)"))
-      .filter(col("rank") <= k)
-      .select("qid", "vid", "cos", "rank")
+    val probes = cosineProbes(centroids, queries, nprobe, idCol, embCol)
+    val c = withNorm(readProbedLists(spark, path, probes)
+      .select(col("vid"), col("ve").as("ce"), col("cid")), "ce", "cn")
+    cosineRank(c.join(broadcast(probes), Seq("cid")), k)
   }
 
-  /** Squared L2 between one BLOCK of a float-array column and a
-    * sub-centroid double-array column: the block is `slice`d out of
-    * the full vector (1-based, length = the sub-centroid's own size),
-    * so callers never hand-count sub-dimensions.
+  /** Each query's `nprobe` nearest lists for the cosine IVF paths —
+    * (qid, qe, qn, cid), |queries| × nprobe rows.
     */
-  /** Fail fast on a corpus/codebook dimension mismatch: `slice` past
-    * the vector's end pads with nulls, d2 goes NULL for the overflow
-    * blocks, and round-then-rank would then pick an arbitrary code
-    * SILENTLY (round-9 advice). Two one-row/tiny-agg driver actions —
-    * bounded at any corpus size (the codebook is broadcast-small by
-    * construction).
+  private def cosineProbes(centroids: DataFrame, queries: DataFrame,
+                           nprobe: Int, idCol: String,
+                           embCol: String): DataFrame =
+    nearestCentroids(queryNorms(queries, idCol, embCol), "qid", "qe",
+      centroids, nprobe, "ivf probe")
+      .select("qid", "qe", "qn", "cid")
+
+  /** The probed lists of a cid-partitioned layout: the probed cids are
+    * driver material (|q|·nprobe rows, collected from the PROBES
+    * frame, never from anything built on it, so the action re-runs
+    * only the cheap probe ranking) and go in as a LITERAL IN
+    * predicate, which prunes non-probed list directories at plan time.
     */
+  private def readProbedLists(spark: org.apache.spark.sql.SparkSession,
+                              path: String, probes: DataFrame): DataFrame = {
+    val probedCids = probes.select("cid").distinct()
+      .collect().map(_.getLong(0)).toSeq
+    spark.read.parquet(path).filter(col("cid").isin(probedCids: _*))
+  }
+
   /** Johnson–Lindenstrauss random projection with a DETERMINISTIC
     * ±1 matrix (Achlioptas 2003: Rademacher entries satisfy the JL
     * guarantee): out_j = Σ_i e_i · s(i, j) / √dOut, with the sign
@@ -366,6 +399,13 @@ object Ann {
               lit(0.0), (s, v) => s + v) / scale, 6))).as("proj"))
   }
 
+  /** Fail fast on a corpus/codebook dimension mismatch: `slice` past
+    * the vector's end pads with nulls, d2 goes NULL for the overflow
+    * blocks, and round-then-rank would then pick an arbitrary code
+    * SILENTLY (round-9 advice). Two one-row/tiny-agg driver actions —
+    * bounded at any corpus size (the codebook is broadcast-small by
+    * construction).
+    */
   private def requireDimMatches(df: DataFrame, embCol: String,
                                 codebook: DataFrame, who: String): Unit = {
     val cb = codebook
@@ -389,17 +429,17 @@ object Ann {
       s"$who: vector dim $d != codebook blocks*subDim $expected")
   }
 
+  /** Squared L2 between one BLOCK of a float-array column and a
+    * sub-centroid double-array column: the block is `slice`d out of
+    * the full vector (1-based, length = the sub-centroid's own size),
+    * so callers never hand-count sub-dimensions.
+    */
   private def l2sqBlock(vec: String, cent: String): String =
     s"aggregate(zip_with(slice($vec, CAST(blk * size($cent) + 1 AS INT)," +
       s" size($cent)), $cent, (a, b) ->" +
       s" (CAST(a AS DOUBLE) - b) * (CAST(a AS DOUBLE) - b))," +
       " CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
 
-  /** Codebook regrouped for the argmin encode: one row per block,
-    * centroids + their code ids as parallel code-ASC-sorted arrays —
-    * `blocks` rows total, broadcast-tiny at any kCodes. Parallel
-    * arrays (not structs) so the native kernel reads primitives.
-    */
   /** Display-only error-tag column (projected name `vid`) for the
     * argmin kernel, dispatched on the SOURCE id column's type (r18
     * advice + review): an integral id rides as a primitive long —
@@ -417,6 +457,11 @@ object Ann {
     }
   }
 
+  /** Codebook regrouped for the argmin encode: one row per block,
+    * centroids + their code ids as parallel code-ASC-sorted arrays —
+    * `blocks` rows total, broadcast-tiny at any kCodes. Parallel
+    * arrays (not structs) so the native kernel reads primitives.
+    */
   private def codebookByBlock(codebook: DataFrame): DataFrame =
     codebook.groupBy("blk")
       .agg(
@@ -427,7 +472,6 @@ object Ann {
         // must not fail its type check
         expr("transform(array_sort(collect_list(struct(code, centroid)))," +
           " s -> CAST(s.code AS BIGINT))").as("codes"))
-
 
   /** Product-quantization codebook: per-block k-means (Jégou et al.
     * 2011, IEEE TPAMI — "Product quantization for nearest neighbor
@@ -455,46 +499,10 @@ object Ann {
     // dim from one row (constant per table); blocks must divide it
     val dim = sample.select(size(col(embCol))).head().getInt(0)
     require(dim % blocks == 0, s"dim $dim not divisible into $blocks blocks")
-    val subDim = dim / blocks
-    val ex = sample
-      .select(col(idCol).as("vid"), posexplode(col(embCol)).as(Seq("i", "x0")))
-      // loud on a NULL element — the kmeansCentroids r19 guard: the
-      // exploded sum('d') silently skips NULL dims otherwise
-      .withColumn("x", when(col("x0").isNotNull, col("x0").cast("double"))
-        .otherwise(expr("CAST(raise_error(concat('pqTrain: NULL element " +
-          "in embedding of vid ', CAST(vid AS STRING))) AS DOUBLE)")))
-      .drop("x0")
-      .withColumn("blk", expr(s"CAST(i div $subDim AS BIGINT)"))
-    def assign(cent: DataFrame): DataFrame = ex.join(broadcast(cent), Seq("blk", "i"))
-      .withColumn("d", expr("(x - c) * (x - c)"))
-      .groupBy("vid", "blk", "code").agg(sum("d").as("dist2"))
-      .withColumn("r", expr(
-        "row_number() OVER (PARTITION BY vid, blk ORDER BY round(dist2, 6), code)"))
-      .filter(col("r") === 1).select("vid", "blk", "code")
-    // distinct FIRST (review r19, the kmeansCentroids rule finally
-    // ported here): dense_rank mints codes from distinct id VALUES,
-    // so a duplicate-id sample used to pass the row-count guard while
-    // seeding FEWER than kCodes codes — a silently shrunken codebook.
-    val seedIds = sample.select(col(idCol).as("vid")).distinct()
-      .orderBy("vid").limit(kCodes)
-    val nSeeds = seedIds.count()
-    require(nSeeds == kCodes,
-      s"pqTrain needs >= $kCodes distinct-id sample vectors to seed, " +
-        s"got $nSeeds")
-    // seed-init aggregates per (blk, code, i) — duplicate-id rows
-    // would otherwise stack several centroid values under one code
-    // (the kmeansCentroids r19 fix); identity for unique ids
-    var cent = ex.join(broadcast(
-        seedIds.withColumn("code",
-          expr("dense_rank() OVER (ORDER BY vid) - 1").cast("long"))),
-        Seq("vid"))
-      .groupBy("blk", "code", "i").agg(expr("sum(x) / count(x)").as("c"))
-    for (_ <- 1 to iters)
-      cent = ex.join(assign(cent), Seq("vid", "blk"))
-        .groupBy("blk", "code", "i").agg(expr("sum(x) / count(x)").as("c"))
-    cent.groupBy("blk", "code")
-      .agg(expr("transform(array_sort(collect_list(struct(i, c))), s -> s.c)")
-        .as("centroid"))
+    lloyd(sample, idCol, embCol, Some(dim / blocks), kCodes, iters,
+      allowFewer = false, "pqTrain", n =>
+        s"pqTrain needs >= $kCodes distinct-id sample vectors to seed, " +
+          s"got $n")
   }
 
   /** Encode every corpus vector as its per-block nearest sub-centroid:
@@ -536,15 +544,29 @@ object Ann {
                 k: Int, idCol: String = "vec_id",
                 embCol: String = "embedding"): DataFrame = {
     requireDimMatches(queries, embCol, codebook, "pqAdcTopK")
-    val lut = queries.select(col(idCol).as("qid"), col(embCol).as("ve"))
-      .crossJoin(broadcast(codebook))
-      .withColumn("pd", expr(l2sqBlock("ve", "centroid")))
+    adcRank(codes, queries.select(col(idCol).as("qid"), col(embCol).as("ve")),
+      "ve", Nil, codebook, k, "pqAdcTopK")
+  }
+
+  /** The one ADC ranker, behind [[pqAdcTopK]] (no list key) and the
+    * IVFADC paths (`listKey` = cid): the lookup table from each query
+    * row's `vec` sub-vectors to every sub-centroid — (qid, listKey,
+    * blk, code, pd), tiny and broadcast — joined to the codes on
+    * (listKey, blk, code), so a code only matches its own query row's
+    * list. Ranking ascends by the rounded ADC distance, vid tiebreak.
+    */
+  private def adcRank(codes: DataFrame, q: DataFrame, vec: String,
+                      listKey: Seq[String], codebook: DataFrame, k: Int,
+                      who: String): DataFrame = {
+    val keys = listKey ++ Seq("blk", "code")
+    val lut = q.crossJoin(broadcast(codebook))
+      .withColumn("pd", expr(l2sqBlock(vec, "centroid")))
       // a NULL pd would be silently SKIPPED by the sum(pd) below —
       // an underestimated ADC distance, not even a NULL one; the LUT
       // is tiny (|q|*blocks*kCodes), so the per-row guard is free
-      .filter(expr(guardWinner("pd", "qid", "pqAdcTopK")))
-      .select("qid", "blk", "code", "pd")
-    codes.join(broadcast(lut), Seq("blk", "code"))
+      .filter(expr(guardWinner("pd", "qid", who)))
+      .select(("qid" +: keys :+ "pd").map(col): _*)
+    codes.join(broadcast(lut), keys)
       .filter(col("qid") =!= col("vid"))
       .groupBy("qid", "vid")
       .agg(expr("round(sum(pd), 6)").as("adc_dist2"))
@@ -666,10 +688,9 @@ object Ann {
                  embCol: String = "embedding",
                  rotation: Seq[Seq[Double]] = Nil): DataFrame = {
     requireDimMatches(queries, embCol, codebook, "ivfAdcTopK")
-    adcRankCodes(codes,
-      ivfAdcLut(
-        ivfAdcProbes(centroids, queries, nprobe, idCol, embCol, rotation),
-        codebook), k)
+    adcRank(codes,
+      ivfAdcProbes(centroids, queries, nprobe, idCol, embCol, rotation),
+      "qres", Seq("cid"), codebook, k, "ivfAdcTopK")
   }
 
   /** The per-query probed lists with their query residuals —
@@ -680,43 +701,15 @@ object Ann {
                            nprobe: Int, idCol: String,
                            embCol: String,
                            rotation: Seq[Seq[Double]] = Nil): DataFrame = {
-    val probes = queries.select(col(idCol).as("qid"), col(embCol).as("qe"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("d2", expr(l2sq("qe", "centroid")))
-      .withColumn("pr",
-        expr("row_number() OVER (PARTITION BY qid ORDER BY round(d2, 6), cid)"))
-      .filter(col("pr") <= nprobe)
-      .filter(expr(guardWinner("d2", "qid", "ivfAdcTopK probe")))
+    val probes = nearestCentroids(
+        queries.select(col(idCol).as("qid"), col(embCol).as("qe")),
+        "qid", "qe", centroids, nprobe, "ivfAdcTopK probe")
       .withColumn("qres",
         expr("zip_with(qe, centroid, (a, b) -> CAST(a AS DOUBLE) - b)"))
     (if (rotation.isEmpty) probes
      else rotateVec(probes, rotation, "qres", "qres"))
       .select("qid", "cid", "qres")
   }
-
-  /** The residual ADC LUT shared by [[ivfAdcTopK]] and
-    * [[ivfAdcTopKPartitioned]]: per (query, probed list), the squared
-    * distance from the query's residual sub-vectors to every
-    * sub-centroid — (qid, cid, blk, code, pd).
-    */
-  private def ivfAdcLut(probes: DataFrame,
-                        codebook: DataFrame): DataFrame =
-    probes.crossJoin(broadcast(codebook))
-      .withColumn("pd", expr(l2sqBlock("qres", "centroid")))
-      // NULL pd would be silently skipped by sum(pd) — see pqAdcTopK
-      .filter(expr(guardWinner("pd", "qid", "ivfAdcTopK")))
-      .select("qid", "cid", "blk", "code", "pd")
-
-  private def adcRankCodes(codes: DataFrame, lut: DataFrame,
-                           k: Int): DataFrame =
-    codes.join(broadcast(lut), Seq("cid", "blk", "code"))
-      .filter(col("qid") =!= col("vid"))
-      .groupBy("qid", "vid")
-      .agg(expr("round(sum(pd), 6)").as("adc_dist2"))
-      .withColumn("rank", expr(
-        "row_number() OVER (PARTITION BY qid ORDER BY adc_dist2, vid)"))
-      .filter(col("rank") <= k)
-      .select("qid", "vid", "adc_dist2", "rank")
 
   /** The DEPLOYED IVFADC layout: residual codes written to parquet
     * PARTITIONED BY their list id — [[writeIvfPartitioned]]'s layout
@@ -747,15 +740,8 @@ object Ann {
     requireDimMatches(queries, embCol, codebook, "ivfAdcTopKPartitioned")
     val probes =
       ivfAdcProbes(centroids, queries, nprobe, idCol, embCol, rotation)
-    // probed cids come from the PROBES frame (|q|·nprobe rows), not
-    // the LUT — the driver action re-evaluates only the cheap probe
-    // ranking, not the queries×codebook cross join (same shape as
-    // ivfTopKPartitioned)
-    val probedCids = probes.select("cid").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    adcRankCodes(
-      spark.read.parquet(path).filter(col("cid").isin(probedCids: _*)),
-      ivfAdcLut(probes, codebook), k)
+    adcRank(readProbedLists(spark, path, probes), probes, "qres",
+      Seq("cid"), codebook, k, "ivfAdcTopK")
   }
 
   /** OPQ training result: the learned orthogonal rotation (row-major,
@@ -972,27 +958,10 @@ object Ann {
               nprobe: Int, k: Int,
               idCol: String = "vec_id",
               embCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("qid"), col(embCol).as("qe"))
-      .withColumn("qn", expr("sqrt(norm2_f64(qe))"))
-      .filter(col("qn") > 0 && !isnan(col("qn"))) // zero/NaN-norm rule, see cosineTopK
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("d2", expr(l2sq("qe", "centroid")))
-      .withColumn("pr",
-        expr("row_number() OVER (PARTITION BY qid ORDER BY round(d2, 6), cid)"))
-      .filter(col("pr") <= nprobe)
-      .filter(expr(guardWinner("d2", "qid", "ivf probe")))
-      .select("qid", "qe", "qn", "cid")
-    val c = corpus.select(col(idCol).as("vid"), col(embCol).as("ce"))
-      .withColumn("cn", expr("sqrt(norm2_f64(ce))"))
-      .filter(col("cn") > 0 && !isnan(col("cn")))
+    val probes = cosineProbes(centroids, queries, nprobe, idCol, embCol)
+    val c = withNorm(
+      corpus.select(col(idCol).as("vid"), col(embCol).as("ce")), "ce", "cn")
       .join(assignment, Seq("vid"))
-    c.join(broadcast(probes), Seq("cid"))
-      .filter(col("qid") =!= col("vid"))
-      .withColumn("cos", expr("dot_f64(qe, ce) / (qn * cn)"))
-      .filter(col("cos").isNotNull && !isnan(col("cos"))) // undefined-cosine rule, see cosineTopK
-      .withColumn("rank", expr(
-        "row_number() OVER (PARTITION BY qid ORDER BY round(cos, 9) DESC, vid)"))
-      .filter(col("rank") <= k)
-      .select("qid", "vid", "cos", "rank")
+    cosineRank(c.join(broadcast(probes), Seq("cid")), k)
   }
 }

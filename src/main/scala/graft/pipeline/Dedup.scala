@@ -841,10 +841,6 @@ object Dedup {
         explode(sequence(col("pos"), col("pos") + (n - 1))).as("pos"))
   }
 
-  /** Consecutive islands of covered positions, ≥ minLen long:
-    * (doc_id, _ds_s, _ds_e) in the covered stream's INT position
-    * type (element_at downstream needs INT). Doc-keyed
-    * gaps-and-islands window over hit rows only. */
   /** ONE gaps-and-islands kernel (review r19: the pos − row_number
     * grouping + min/max bounds + ≥ minLen filter existed verbatim in
     * both [[coveredIslands]] and [[dupRunSpans]], drift-prone): hit
@@ -867,6 +863,10 @@ object Dedup {
       .select(col("doc_id"), col("_ds_s"), col("_ds_e"))
   }
 
+  /** Consecutive islands of covered positions, ≥ minLen long:
+    * (doc_id, _ds_s, _ds_e) in the covered stream's INT position
+    * type (element_at downstream needs INT). Doc-keyed
+    * gaps-and-islands window over hit rows only. */
   private def coveredIslands(covered: DataFrame,
                              minLen: Int): DataFrame =
     islandSpans(covered, endOffset = 0, minLen, dedupHits = true)

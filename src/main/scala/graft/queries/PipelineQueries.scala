@@ -1056,8 +1056,7 @@ object PipelineQueries {
     // stemmer (`TrecWordCount2.java:57-79`). Both engines run the SAME
     // generated rule SQL (text/KrovetzStem.scala is the one source);
     // divergence vs the dictionary-based original is documented in
-    // KrovetzStemSpec. The round-2 S-stemmer remains available as
-    // KrovetzStem.sStemSql.
+    // KrovetzStemSpec.
     Decl(
       "px15_stem_wordcount",
       // tiny-input de-skew (guide §2.5; see px71 / Tables.fanOut)

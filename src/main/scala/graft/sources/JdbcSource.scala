@@ -8,10 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Spark-first shape: `spark.read.jdbc` pulls the table ONCE as a
   * DataFrame and every per-document probe becomes one side of a join —
-  * never an RPC per row. For small score tables the join side is
-  * broadcast; for large ones pass a `partitionColumn` so the pull
-  * itself is parallel (numPartitions executor-side range scans instead
-  * of a single connection funnel — the 100 TB shape).
+  * never an RPC per row; the score table is broadcast.
   *
   * Tested against embedded Derby (the JDBC engine already on Spark's
   * classpath); the reader is driver-agnostic — any JDBC URL works.
@@ -22,15 +19,4 @@ object JdbcSource {
                 props: java.util.Properties = new java.util.Properties)
     : DataFrame =
     spark.read.jdbc(url, table, props)
-
-  /** Parallel range-partitioned pull for tables big enough that one
-    * connection would bottleneck ingest.
-    */
-  def readTablePartitioned(spark: SparkSession, url: String, table: String,
-                           partitionColumn: String, lower: Long, upper: Long,
-                           numPartitions: Int,
-                           props: java.util.Properties =
-                             new java.util.Properties): DataFrame =
-    spark.read.jdbc(url, table, partitionColumn, lower, upper,
-      numPartitions, props)
 }

@@ -17,8 +17,7 @@ package graft.text
   * Divergences from dictionary Krovetz are the cases where only a head
   * word list can decide ('treated'→'treat' vs 'created'→'create': both
   * end vowel+'t'); the exception table pins the frequent ones and
-  * KrovetzStemSpec documents examples. The light S-stemmer
-  * (round-2 stand-in) stays available as [[sStemSql]].
+  * KrovetzStemSpec documents examples.
   */
 object KrovetzStem {
 
@@ -353,14 +352,6 @@ object KrovetzStem {
        |   WHEN ${restoreE(c, 3)} THEN ${drop(c, 3)} || 'e'
        |   ELSE ${drop(c, 3)} END
        | ELSE $c END""".stripMargin.replaceAll("\\s+", " ").trim
-
-  /** The round-2 S-stemmer (ies→y, es→ε, s→ε) — kept as the light
-    * fallback for callers that want suffix-s conflation only.
-    */
-  def sStemSql(c: String): String =
-    s"CASE WHEN ${ends(c, "ies", 5)} THEN ${drop(c, 3)} || 'y'" +
-      s" WHEN ${ends(c, "es", 4)} THEN ${drop(c, 2)}" +
-      s" WHEN ${ends(c, "s", 4)} THEN ${drop(c, 1)} ELSE $c END"
 
   /** Spark pipeline: adds `out` to `df` as the Krovetz stem of `in`.
     * Staged columns keep each generated CASE referencing a NAMED column

@@ -327,6 +327,28 @@ class AnnSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("needs >= 8 distinct-id vectors"),
       e.getMessage)
+    // allowFewer opts into the shrink: every vector seeds its own
+    // cluster and stays its only member, so each centroid is its vector
+    val byCid = Ann.kmeansCentroids(few, kClusters = 8, iters = 1,
+        allowFewer = true)
+      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    val vecs = few.orderBy("vec_id").collect()
+      .map(_.getSeq[Float](1).map(_.toDouble))
+    assert(vecs.length == 3 && byCid.keySet == Set(0L, 1L, 2L))
+    for (i <- 0 until 3) assert(byCid(i.toLong) == vecs(i), s"cid $i")
+  }
+
+  test("kmeansCentroids is pqTrain's one-block case (cid = code)") {
+    def rounded(df: org.apache.spark.sql.DataFrame,
+                id: String): Map[Long, Seq[Double]] =
+      df.select(col(id), expr("transform(centroid, c -> round(c, 9))"))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    val km = Ann.kmeansCentroids(emb, kClusters = 4, iters = 2)
+    val pq = Ann.pqTrain(emb, blocks = 1, kCodes = 4, iters = 2)
+    assert(pq.select("blk").distinct().collect().map(_.getLong(0)).toSeq ==
+      Seq(0L))
+    val (k, p) = (rounded(km, "cid"), rounded(pq, "code"))
+    assert(k.size == 4 && k == p, s"kmeans $k\npqTrain $p")
   }
 
   test("per-row dim mismatch raises instead of silently ranking NULL first") {

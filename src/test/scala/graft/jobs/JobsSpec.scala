@@ -196,6 +196,46 @@ class JobsSpec extends SparkSpec {
     assert(spark.read.parquet(s"$work/trecpq").count() == 6)
   }
 
+  test("TrecRunBaselines, RunQueryKDE and RunQueryKDESweep release " +
+    "every frame they cache") {
+    val sc = spark.sparkContext
+    // the fixtures of the chain and KDE tests above
+    Jobs.anchorExtract(spark, warc, s"$work/anchors_rel")
+    Jobs.queryTermCount(spark, s"keyval:$work/anchors_rel",
+      s"$work/aug_rel.topics", topics)
+    // one collection per KDE job: the same cached plan twice would be
+    // one cache entry, and the first job's leak would hide the second's
+    def trecDir(): String = {
+      val dir = Files.createTempDirectory("trec_rel").toString
+      Files.writeString(Paths.get(dir, "c.trectext"), (1 to 6).map { i =>
+        val words = if (i <= 3) "discovery channel store extra" else "other words here"
+        s"<DOC><DOCNO>D$i</DOCNO><EPOCH>${1700000000L + i * 86400L}</EPOCH>" +
+          s"<TEXT>$words</TEXT></DOC>"
+      }.mkString("\n"))
+      dir
+    }
+    val qrelsDir = Files.createTempDirectory("qrels_rel").toString
+    Files.writeString(Paths.get(qrelsDir, "qrels.txt"), "53 0 D1 1\n53 0 D2 1\n")
+    val calls = Seq[(String, () => Unit)](
+      "trecRunBaselines" -> (() => Jobs.trecRunBaselines(spark,
+        s"keyval:$work/anchors_rel", s"$work/baselines_rel",
+        s"$work/aug_rel.topics")),
+      "runQueryKde" -> (() =>
+        Jobs.runQueryKde(spark, trecDir(), s"$work/kde_rel", topics)),
+      "runQueryKdeSweep" -> (() => Jobs.runQueryKdeSweep(spark, trecDir(),
+        s"$work/kdesweep_rel", topics, qrelsDir)))
+    val leaks = calls.flatMap { case (name, call) =>
+      // only RDDs the call persists: the ContextCleaner may release RDDs
+      // that earlier tests left persisted at any GC
+      val before = sc.getPersistentRDDs.keySet
+      call()
+      val held = sc.getPersistentRDDs.keys.count(k => !before(k))
+      if (held > 0) Some(s"$name holds $held") else None
+    }
+    assert(leaks.isEmpty, leaks.mkString("; "))
+    assert(runLines(s"$work/kde_rel").exists(_.startsWith("53 Q0 ")))
+  }
+
   test("SequenceFile glue: Parquet -> seq -> Parquet round-trips; seq: spec loads") {
     import spark.implicits._
     val docs = Seq(("D1", "alpha beta"), ("D2", "gamma"), ("D3", ""))
