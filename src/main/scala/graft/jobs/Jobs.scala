@@ -85,6 +85,15 @@ object Jobs {
     (if (gzip) w.option("compression", "gzip") else w).text(out)
   }
 
+  /** A job's one-line summary, written as a single text file at
+    * `<out>_report` next to the job's main output.
+    */
+  private def writeReport(spark: SparkSession, out: String,
+                          line: String): Unit = {
+    import spark.implicits._
+    writeText(Seq(line).toDF("value"), out + "_report", merge = true)
+  }
+
   /** TREC run format: `qid Q0 docid rank score tag` (top-k per topic —
     * bounded, so the single-file merge is safe at any corpus size).
     */
@@ -115,9 +124,6 @@ object Jobs {
     finally anchors.unpersist(blocking = false)
   }
 
-  /** MIREX sequential-scan retrieval, LMno conjunctive
-    * (`nl/utwente/mirex/TrecRun.java`).
-    */
   /** Run `body` with the loaded docs PERSISTED when the loader is
     * expensive — `warc:`, whose anchor-extract chain costs a WARC
     * parse + HTML extraction and is referenced by every branch of a
@@ -139,6 +145,9 @@ object Jobs {
     finally if (heavy) docs.unpersist(blocking = false)
   }
 
+  /** MIREX sequential-scan retrieval, LMno conjunctive
+    * (`nl/utwente/mirex/TrecRun.java`).
+    */
   def trecRun(spark: SparkSession, in: String, out: String,
               topics: String): Unit = withDocs(spark, in) { docs =>
     writeRun(
@@ -623,11 +632,9 @@ object Jobs {
     val (nBatch, nDup, nAdm) =
       (verdicts.count(), verdicts.filter(col("dup_of").isNotNull).count(),
         verdicts.filter(col("dup_of").isNull && col("signed")).count())
-    import spark.implicits._
-    Seq(s"batch=$nBatch dup=$nDup novel=${nBatch - nDup}" +
+    writeReport(spark, out,
+      s"batch=$nBatch dup=$nDup novel=${nBatch - nDup}" +
       s" admitted=${if (admit) nAdm else 0} threshold=$threshold")
-      .toDF("value").coalesce(1).write.mode("overwrite")
-      .text(out + "_report")
   }
 
   /** Bounds the small-file growth of the admit cycle's append-only
@@ -1136,15 +1143,13 @@ object Jobs {
         // exact failure tokenizeAndPack's report path already guards
         val nEx = examples.count()
         wins.unpersist()
-        import spark.implicits._
         val storePart =
           if (sigStore == null) "" else s" store_dedup=$n3b"
-        Seq(s"input=$n0 gopher=$n1 exact_dedup=$n2 near_dedup=$n3" +
+        writeReport(spark, out,
+          s"input=$n0 gopher=$n1 exact_dedup=$n2 near_dedup=$n3" +
           storePart +
           s" decontam_touched=$nTouched windows=$nWin examples=$nEx" +
           s" shards=$nShards seed=$seed win=$win stride=$stride")
-          .toDF("value").coalesce(1).write.mode("overwrite")
-          .text(out + "_report")
         spark.sparkContext.setJobDescription(null)
       } finally { scrubbed.unpersist(); () }
     } finally {
@@ -1271,12 +1276,10 @@ object Jobs {
           .agg(count(lit(1)).as("n"),
             coalesce(expr("CAST(sum(n_ids) AS BIGINT)"), lit(0L))
               .as("ids")).head()
-        import spark.implicits._
-        Seq(s"examples=${r.getLong(0)} ids=${r.getLong(1)}" +
+        writeReport(spark, out,
+          s"examples=${r.getLong(0)} ids=${r.getLong(1)}" +
           s" merges=${merges.length} vocab=${voc.count()}" +
           s" seq_len=$seqLen shards=$nShards seed=$seed")
-          .toDF("value").coalesce(1).write.mode("overwrite")
-          .text(out + "_report")
       } finally { examples.unpersist(); () }
     } finally { voc.unpersist(); dict.unpersist(); words.unpersist(); () }
   }
@@ -1291,15 +1294,6 @@ object Jobs {
     graft.pipeline.Sharding.writeEpochShards(
       loadDocs(spark, in), "doc_id", seed, nShards, out)
 
-  /** Materialize the temperature-resampled training mix as a curation
-    * stage: the α-flattened per-language selection
-    * ([[graft.pipeline.Sharding.temperatureSample]]) written as
-    * parquet, with the [[graft.pipeline.Sharding.temperatureReport]]
-    * data-card table (lang, n_docs, quota, n_sel, capped) beside it —
-    * capped languages are visible in the report, never silently
-    * upsampled. Deterministic per seed: reruns and incremental
-    * rebuilds select the identical mix.
-    */
   /** Shared mix-job corpus contract: full-schema parquet read (not
     * loadDocs' (doc_id, text) projection — the selection keys on the
     * corpus's language column and every other column rides through
@@ -1314,6 +1308,15 @@ object Jobs {
     docs
   }
 
+  /** Materialize the temperature-resampled training mix as a curation
+    * stage: the α-flattened per-language selection
+    * ([[graft.pipeline.Sharding.temperatureSample]]) written as
+    * parquet, with the [[graft.pipeline.Sharding.temperatureReport]]
+    * data-card table (lang, n_docs, quota, n_sel, capped) beside it —
+    * capped languages are visible in the report, never silently
+    * upsampled. Deterministic per seed: reruns and incremental
+    * rebuilds select the identical mix.
+    */
   def temperatureMix(spark: SparkSession, in: String, out: String,
                      alphaE: String = "3e-1", targetDiv: Int = 2,
                      seed: Int = 7): Unit = {
@@ -1419,10 +1422,7 @@ object Jobs {
         try {
           kept.write.mode("overwrite").parquet(out)
           val n0 = docs.count(); val n1 = kept.count()
-          import spark.implicits._
-          Seq(s"input=$n0 dropped=${n0 - n1} kept=$n1")
-            .toDF("value").coalesce(1).write.mode("overwrite")
-            .text(out + "_report")
+          writeReport(spark, out, s"input=$n0 dropped=${n0 - n1} kept=$n1")
         } finally { kept.unpersist(); () }
       case _ =>
         writeScrubbed(spark, TextMetrics.scrubContaminated(docs, bench, k),
@@ -1447,11 +1447,9 @@ object Jobs {
           lit(0L)).as("touched"),
         coalesce(expr("CAST(sum(n_removed) AS BIGINT)"), lit(0L))
           .as("removed")).head()
-      import spark.implicits._
-      Seq(s"input=${r.getLong(0)} touched=${r.getLong(1)} " +
+      writeReport(spark, out,
+        s"input=${r.getLong(0)} touched=${r.getLong(1)} " +
           s"tokens_removed=${r.getLong(2)}$reportSuffix")
-        .toDF("value").coalesce(1).write.mode("overwrite")
-        .text(out + "_report")
     } finally { s.unpersist(); () }
   }
 
@@ -1499,9 +1497,8 @@ object Jobs {
       // conflates semantic drops with id mismatches in the report)
       val nEmb = embedded.join(docs, Seq("doc_id"), "left_semi").count()
       val n1 = kept.count()
-      import spark.implicits._
-      Seq(s"input=$n0 embedded=$nEmb kept=$n1 dropped=${n0 - n1}")
-        .toDF("value").coalesce(1).write.mode("overwrite").text(out + "_report")
+      writeReport(spark, out,
+        s"input=$n0 embedded=$nEmb kept=$n1 dropped=${n0 - n1}")
     } finally { kept.unpersist(); () }
   }
 
@@ -1578,10 +1575,9 @@ object Jobs {
       kept.write.mode("overwrite").parquet(out)
       stage("readback_count")
       val n3 = spark.read.parquet(out).count()
-      import spark.implicits._
       stage("report")
-      Seq(s"input=$n0$gopherNote exact_dedup=$n1 near_dedup=$n2 quality_kept=$n3")
-        .toDF("value").coalesce(1).write.mode("overwrite").text(out + "_report")
+      writeReport(spark, out, s"input=$n0$gopherNote exact_dedup=$n1" +
+        s" near_dedup=$n2 quality_kept=$n3")
       spark.sparkContext.setJobDescription(null)
     } finally {
       near.unpersist()
@@ -1612,9 +1608,8 @@ object Jobs {
         count(when(col("score") >= threshold, 1)).as("kept"),
         count(when(col("score") < threshold, 1)).as("filtered"),
         count(when(col("score").isNull, 1)).as("missing")).head()
-      import spark.implicits._
-      Seq(s"kept=${c.getLong(0)} filtered=${c.getLong(1)} missing=${c.getLong(2)}")
-        .toDF("value").coalesce(1).write.mode("overwrite").text(out + "_report")
+      writeReport(spark, out, s"kept=${c.getLong(0)}" +
+        s" filtered=${c.getLong(1)} missing=${c.getLong(2)}")
     } finally { joined.unpersist(); () }
   }
 

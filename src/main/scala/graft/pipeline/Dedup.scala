@@ -587,8 +587,8 @@ object Dedup {
     * narrow pass, and the within-cluster self-join shuffles on cid —
     * no cross-cluster pair ever materializes. SemDedupSpec asserts the
     * pair-count scaling on this API.
-    */
-  /** Zero-norm embeddings (padding rows, dead docs) have NO defined
+    *
+    * Zero-norm embeddings (padding rows, dead docs) have NO defined
     * cosine. They are EXCLUDED from pairing (the `Ann.cosineTopK`
     * zero-norm rule — without the filter one zero vector would
     * DIVIDE_BY_ZERO the whole job under the session's ANSI default,

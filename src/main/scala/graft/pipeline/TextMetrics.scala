@@ -158,18 +158,11 @@ object TextMetrics {
     * partitioned by language hash-exchanges the whole corpus on a
     * handful of language keys and sorts each language in ONE task —
     * a multi-TB single-task spill sort once one language dominates a
-    * 100 TB corpus. Instead the ntile boundaries are derived from a
-    * per-(lang, ppl) HISTOGRAM (corpus-sized input, but the shuffle
-    * key is two columns and map-side combine collapses it to the
-    * distinct-ppl count per language); a tiny per-language cumsum
-    * over that histogram finds each boundary's cut value `(ppl at
-    * rank k_b)` plus how many docs of that exact ppl fall below the
-    * boundary (`need`). Buckets are then assigned by NARROW
-    * comparison against the broadcast cut list — only the boundary
-    * tie-band (docs whose ppl EQUALS a cut value, a few per
-    * language) needs a rank, computed on that filtered sliver alone,
-    * partitioned by (lang, ppl). PlanShapeSpec pins the shape: no
-    * window partitioned by the bare language column ever consumes
+    * 100 TB corpus. Instead every row gets its exact rank from one
+    * range-partitioned pass ([[perplexityBucketsFromScores]]), and
+    * every sort task is bounded by the range sampler, not by a
+    * language's corpus share. PlanShapeSpec pins the shape: no window
+    * partitioned by the bare language column ever consumes
     * un-aggregated corpus rows.
     *
     * ntile boundary math (rank k_b = end of bucket b over n rows):
@@ -179,14 +172,12 @@ object TextMetrics {
     */
   def perplexityBuckets(docs: DataFrame, nBuckets: Int = 3,
                         langCol: String = "lang"): DataFrame = {
-    // three consumers (histogram, tie-band, rest) read the per-doc
-    // frame; WITHOUT a materialization each clone re-derives the whole
-    // perplexity chain, because the histogram's column pruning
-    // specializes its subtree away from ReusedExchange (the ir30
-    // lesson — measured 3× the px29 cost at sf0.1). The per-doc frame
-    // is ~40 B/doc — the px29 output artifact a real pipeline would
-    // have written anyway — so a lazy localCheckpoint is the at-scale
-    // shape too, not just a bench fix.
+    // the range partitioner's sampling job and the shuffle each
+    // compute the per-doc frame; WITHOUT a materialization each would
+    // re-derive the whole perplexity chain. The per-doc frame is
+    // ~40 B/doc — the px29 output artifact a real pipeline would have
+    // written anyway — so a lazy localCheckpoint is the at-scale shape
+    // too, not just a bench fix.
     // LEFT join from the docs side (review r19): perplexity() emits no
     // row for a token-less doc, and the old inner join silently dropped
     // it from the banding — the one-row-per-input-doc convention
@@ -213,140 +204,65 @@ object TextMetrics {
     * they land in the head bucket(s) — the same place Spark's own
     * `ntile(n) OVER (ORDER BY ppl, doc_id)` puts them.
     *
-    * The histogram cumsum is a DISTRIBUTED prefix sum (r12): with
-    * 6-dp ppl the (lang, ppl) histogram is near one row per doc, so
-    * the r11 `sum OVER (PARTITION BY lang ORDER BY ppl)` funneled a
-    * dominant language's whole histogram through ONE task — the last
-    * corpus-cardinality single-task sort in the codebase. px69's
-    * uniform-hash bucket trick does not transplant here (ppl is a
-    * real value: any STATIC coarse bucketing leaves the boundary
-    * bucket unbounded when values concentrate), so the cumsum is
-    * computed the textbook distributed way instead: range-partition
-    * the histogram by (lang, ppl) — Spark's range sampler balances
-    * rows per partition regardless of the value distribution — take
-    * a local cumsum inside each partition slice, and add broadcast
-    * per-slice offsets. Every sort task is bounded by histSize /
-    * shufflePartitions BY CONSTRUCTION; the only per-language
-    * single-task windows left run over ≤ numPartitions offset rows.
-    * Partition boundaries may move between runs (the range sampler),
-    * but `off + local` telescopes to the same global cumsum — outputs
-    * are partitioning-independent. SkewProbe measures the win on a
-    * 90%-one-language corpus at 10M docs.
+    * Exact ranks without a per-language window: the frame is
+    * range-partitioned ONCE by (lang, ppl, doc_id), so a language
+    * occupies consecutive slices in rank order. Each row's global rank
+    * is `off + row_number()` within its (lang, slice), where `off` is
+    * the row count of the language's earlier slices; the bucket
+    * follows from the boundary math on [[perplexityBuckets]]. The
+    * per-(lang, slice) counts are at most languages + slices rows, so
+    * their offsets and language totals are a broadcast side. Spark's
+    * range sampler bounds every slice whatever the value
+    * distribution, and `doc_id` in the range key spreads a tie mass
+    * (boilerplate with identical ppl) over many slices, so no sort
+    * task grows with a language's share or a tie's size. Slice
+    * boundaries may move between runs (the sampler), but `off + rank`
+    * is the same global rank, so outputs are partitioning-independent.
+    * SkewProbe measures the shape on a 90%-one-language corpus.
     */
   def perplexityBucketsFromScores(p: DataFrame, nBuckets: Int = 3,
                                   langCol: String = "lang"): DataFrame = {
     require(nBuckets >= 1, s"need nBuckets >= 1, got $nBuckets")
     import org.apache.spark.sql.expressions.Window
     if (nBuckets == 1) return p.withColumn("bucket", lit(1L))
-    val hist = p.groupBy(col(langCol), col("ppl"))
-      .agg(count(lit(1)).as("_pb_c"))
     val nPart = p.sparkSession.sessionState.conf.numShufflePartitions
-    // lazily checkpointed: `local` and `offs` below both consume this
-    // frame, and the slice ids MUST come from the same physical
-    // partitioning — two independent executions of repartitionByRange
-    // can sample different boundaries (the range sampler seeds off
-    // the RDD id), which would silently misalign the (lang, pid)
-    // offset join. The checkpoint pins ONE computed RDD (pid values
-    // frozen in the rows), so correctness does not depend on
-    // exchange reuse; it is also the px27/§0h multi-consumer shape.
-    // The checkpoint blocks live until RDD GC (the returned frame
-    // still references them, so they cannot be unpersisted here): a
-    // long-lived session calling this repeatedly retains one
-    // histogram-sized block set per call until the references drop —
-    // the histogram is (lang, ppl)-distinct, orders of magnitude
-    // smaller than the corpus. Callers looping over many corpora
-    // should release the result (or System.gc via ContextCleaner)
-    // between iterations, the discipline of probes/r12ops.log.
-    val ranged = hist
-      .repartitionByRange(nPart, col(langCol), col("ppl"))
+    // lazily checkpointed: the rank and the offsets below both read the
+    // slice ids, and two executions of repartitionByRange can sample
+    // different boundaries (the sampler seeds off the RDD id). The
+    // checkpoint freezes one partitioning into the rows, so the
+    // (lang, slice) offset join cannot misalign even without exchange
+    // reuse. Its blocks hold the whole input frame and live until RDD
+    // GC: the returned frame still references them, so they cannot be
+    // unpersisted here. Callers looping over many corpora should
+    // release each result between iterations.
+    val ranged = p
+      .repartitionByRange(nPart, col(langCol), col("ppl"), col("doc_id"))
       .withColumn("_pb_pid", spark_partition_id())
       .localCheckpoint(false)
-    // local cumsum: each (lang, slice) group holds at most one range
-    // partition's rows — bounded by the range sampler, never by the
-    // language's corpus share
-    val local = ranged.withColumn("_pb_lcum", sum("_pb_c").over(
-      Window.partitionBy(col(langCol), col("_pb_pid")).orderBy("ppl")))
-    // per-slice totals → per-language slice offsets + language totals;
-    // ≤ nPart rows per language, broadcastable by construction
+    // rows before each slice within its language, and the language
+    // total: one count row per (lang, slice), at most languages +
+    // slices rows, so the per-language windows run over a tiny frame
     val offs = ranged.groupBy(col(langCol), col("_pb_pid"))
-      .agg(sum("_pb_c").as("_pb_pc"))
+      .agg(count(lit(1)).as("_pb_pc"))
       .withColumn("_pb_off", coalesce(sum("_pb_pc").over(
         Window.partitionBy(langCol).orderBy("_pb_pid")
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .withColumn("_pb_n", sum("_pb_pc").over(Window.partitionBy(langCol)))
       .select(col(langCol).as("_pb_ol"), col("_pb_pid").as("_pb_op"),
         col("_pb_off"), col("_pb_n"))
-    val cuts = local
-      .join(broadcast(offs), col(langCol) <=> col("_pb_ol") &&
-        col("_pb_pid") === col("_pb_op"))
-      .withColumn("_pb_cum", col("_pb_lcum") + col("_pb_off"))
-      .withColumn("_pb_b", explode(expr(s"sequence(1, ${nBuckets - 1})")))
-      .withColumn("_pb_kb", expr(
-        s"_pb_b * (_pb_n div $nBuckets)" +
-          s" + least(CAST(_pb_b AS BIGINT), _pb_n % $nBuckets)"))
-      .filter(col("_pb_cum") - col("_pb_c") < col("_pb_kb") &&
-        col("_pb_kb") <= col("_pb_cum"))
-      .select(col(langCol),
-        struct(col("ppl").as("cut"),
-          (col("_pb_kb") - col("_pb_cum") + col("_pb_c")).as("need"))
-          .as("_pb_bd"))
-      .groupBy(langCol)
-      .agg(collect_list("_pb_bd").as("_pb_bnds"))
-    // tie-band rank: only rows whose ppl IS a cut value need one.
     // NULL-SAFE join: docs with a NULL language are a language of
-    // their own (groupBy and window partitioning already treat them
-    // so — the r10 ntile window bucketed them, and a plain equi-join
-    // here would silently drop them, a real web-corpus condition)
-    val withB = p.join(broadcast(cuts.withColumnRenamed(langCol, "_pb_l")),
-        col(langCol) <=> col("_pb_l"))
-      .drop("_pb_l")
-    // `<=>` everywhere ppl meets a cut: a NULL-ppl row (caller-supplied
-    // frames) must match its own NULL cut, and "above the cut" must
-    // treat NULL as smallest (nulls-first), or the row silently drops
-    val isTie = expr("exists(_pb_bnds, bd -> bd.cut <=> ppl)")
-    // tie-band rank WITHOUT a (lang, ppl)-partitioned window (review
-    // r18): when a cut lands on a boilerplate mass — identical text ⇒
-    // identical ppl for a large corpus share, exactly the
-    // concentration the histogram above is built to dodge — a window
-    // partitioned by (lang, ppl) would sort that whole mass in ONE
-    // task. Same slice-rank + broadcast-offset trick as the cumsum:
-    // range-partition the tied rows by (lang, ppl, doc_id) — doc_id
-    // in the range key spreads a tie mass over many slices while
-    // keeping doc_id order ACROSS slices — rank locally per slice,
-    // add the per-slice offsets (≤ nPart rows per (lang, cut) pair,
-    // broadcastable by construction). Same _pb_trk values: global
-    // doc_id rank within the tie group.
-    val tiedRanged = withB.filter(isTie)
-      .repartitionByRange(nPart, col(langCol), col("ppl"), col("doc_id"))
-      .withColumn("_pb_tp", spark_partition_id())
-      .localCheckpoint(false) // pid alignment across the two consumers
-    val tieOffs = tiedRanged
-      .groupBy(col(langCol).as("_pb_tl"), col("ppl").as("_pb_tppl"),
-        col("_pb_tp").as("_pb_top"))
-      .agg(count(lit(1)).as("_pb_tc"))
-      .withColumn("_pb_toff", coalesce(sum("_pb_tc").over(
-        Window.partitionBy(col("_pb_tl"), col("_pb_tppl"))
-          .orderBy("_pb_top")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("_pb_tl", "_pb_tppl", "_pb_top", "_pb_toff")
-    val tied = tiedRanged
-      .withColumn("_pb_tlrk", row_number().over(
-        Window.partitionBy(col(langCol), col("ppl"), col("_pb_tp"))
-          .orderBy("doc_id")).cast("bigint"))
-      .join(broadcast(tieOffs),
-        col(langCol) <=> col("_pb_tl") && col("ppl") <=> col("_pb_tppl") &&
-          col("_pb_tp") === col("_pb_top"))
-      .withColumn("_pb_trk", col("_pb_tlrk") + col("_pb_toff"))
-      .drop("_pb_tl", "_pb_tppl", "_pb_top", "_pb_toff", "_pb_tlrk",
-        "_pb_tp")
-    val rest = withB.filter(!isTie)
-      .withColumn("_pb_trk", lit(null).cast("bigint"))
-    tied.unionByName(rest)
+    // their own, as in the ntile window; a plain equi-join would drop
+    // them
+    ranged
+      .withColumn("_pb_g", row_number().over(
+        Window.partitionBy(col(langCol), col("_pb_pid"))
+          .orderBy("ppl", "doc_id")))
+      .join(broadcast(offs),
+        col(langCol) <=> col("_pb_ol") && col("_pb_pid") === col("_pb_op"))
       .withColumn("bucket", expr(
-        """1 + size(filter(_pb_bnds, bd ->
-          |  (bd.cut IS NULL AND ppl IS NOT NULL) OR ppl > bd.cut
-          |  OR (ppl <=> bd.cut AND _pb_trk > bd.need)))"""
-          .stripMargin).cast("bigint"))
+        s"1 + size(filter(sequence(1, ${nBuckets - 1}), b ->" +
+          s" _pb_off + _pb_g > b * (_pb_n div $nBuckets)" +
+          s" + least(CAST(b AS BIGINT), _pb_n % $nBuckets)))").cast("bigint"))
       .select(p.columns.map(col) :+ col("bucket"): _*)
   }
 
@@ -547,6 +463,16 @@ object TextMetrics {
       .select(col(shardCol), col("doc_id"), col("n_tok"), col("seq_id"))
   }
 
+  /** Hard ceiling on windows per doc: consumers (px61,
+    * `Jobs.prepareTrainingData`) arg-min the keeper through a packed
+    * `doc_id * 2^20 + win_id` bigint, which silently corrupts once
+    * win_id reaches 2^20 (≈16.8M tokens at stride 16 — far past any
+    * real document, but "improbable" is not "guarded"). Enforced as a
+    * runtime raise_error on the per-doc window count, so a pathological
+    * doc fails the job loudly instead of folding into the wrong keeper.
+    */
+  val MaxWindowsPerDoc: Int = 1 << 20
+
   /** Sliding-window chunking with overlap — the OTHER pretraining
     * batch-prep shape next to [[packSequences]]: instead of packing
     * whole docs end-to-end, each doc's tokens are cut into windows of
@@ -567,16 +493,6 @@ object TextMetrics {
     * speed at any corpus size. Output rows ≈ tokens/stride, bounded
     * by construction.
     */
-  /** Hard ceiling on windows per doc: consumers (px61,
-    * `Jobs.prepareTrainingData`) arg-min the keeper through a packed
-    * `doc_id * 2^20 + win_id` bigint, which silently corrupts once
-    * win_id reaches 2^20 (≈16.8M tokens at stride 16 — far past any
-    * real document, but "improbable" is not "guarded"). Enforced as a
-    * runtime raise_error on the per-doc window count, so a pathological
-    * doc fails the job loudly instead of folding into the wrong keeper.
-    */
-  val MaxWindowsPerDoc: Int = 1 << 20
-
   def chunkWindows(docs: DataFrame, win: Int, stride: Int,
                    withText: Boolean = false): DataFrame = {
     require(win > 0 && stride > 0 && stride <= win,
@@ -754,6 +670,16 @@ object TextMetrics {
           .as("n_removed"))
   }
 
+  /** The deflate-ratio definition, ONE place over pre-projected byte
+    * columns: both the per-doc signal and the banding input derive
+    * from it, so the formula (6-dp rounding, the empty-doc nullif
+    * guard) cannot drift between them. Since r14 the px85 oracle
+    * replays this formula in SQL from the materialized kernel
+    * artifact, so drift would go loudly red there too.
+    */
+  private def deflateRatio(deflateBytes: String, nBytes: String): Column =
+    expr(s"round($deflateBytes / CAST(nullif($nBytes, 0) AS DOUBLE), 6)")
+
   /** Compressibility quality signal (CCNet / RedPajama-v2 style):
     * per-doc DEFLATE length and ratio = deflate_bytes / n_bytes.
     * Highly compressible text (ratio → 0) is boilerplate or
@@ -769,16 +695,6 @@ object TextMetrics {
     * 8 — the fixed empty-stream frame, see [[
     * graft.functions.DeflateLen]] — ratio = NULL via nullif).
     */
-  /** The deflate-ratio definition, ONE place over pre-projected byte
-    * columns: both the per-doc signal and the banding input derive
-    * from it, so the formula (6-dp rounding, the empty-doc nullif
-    * guard) cannot drift between them. Since r14 the px85 oracle
-    * replays this formula in SQL from the materialized kernel
-    * artifact, so drift would go loudly red there too.
-    */
-  private def deflateRatio(deflateBytes: String, nBytes: String): Column =
-    expr(s"round($deflateBytes / CAST(nullif($nBytes, 0) AS DOUBLE), 6)")
-
   def compressionSignal(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
       octet_length(col("text")).cast("long").as("n_bytes"),
@@ -788,7 +704,7 @@ object TextMetrics {
   /** Per-language deflate-ratio TERCILES (CCNet's head/middle/tail
     * treatment applied to the compressibility axis): docs bucketed
     * into `nBuckets` equal-count bands of [[compressionSignal]]'s
-    * ratio within each language, via the same distributed prefix-sum
+    * ratio within each language, via the same range-partitioned rank
     * bucketer the perplexity bands use ([[perplexityBucketsFromScores]]
     * — no corpus-cardinality window, no single-task sort). Bucket 1 =
     * most compressible (boilerplate/repetition), bucket `nBuckets` =
@@ -800,10 +716,10 @@ object TextMetrics {
   def compressionBuckets(docs: DataFrame, nBuckets: Int = 3,
                          langCol: String = "lang"): DataFrame =
     // lazy localCheckpoint before the bucketer (review r19, the
-    // perplexityBuckets sibling shape): the assignment half's three
-    // consumers (histogram, tie-band, rest) each re-derive their input
-    // subtree, so an un-materialized lens frame pays the DEFLATE
-    // kernel — the file's most expensive narrow op — ~3× per run
+    // perplexityBuckets sibling shape): the assignment half's range
+    // partitioner samples its input in one job and shuffles it in
+    // another, so an un-materialized lens frame pays the DEFLATE
+    // kernel — the file's most expensive narrow op — twice per run
     // (px85). The lens is ~40 B/doc — the artifact a real pipeline
     // writes anyway (px85's own prepare hook materializes exactly this
     // frame), so the checkpoint is the at-scale shape too.

@@ -61,19 +61,9 @@ object PipelineQueries {
        |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS s FROM tk),
        |ds AS (SELECT DISTINCT doc_id, s FROM sh)""".stripMargin
 
-  /** MinHash signatures, long form (doc_id, i, mh), i ∈ 0..15.
-    *
-    * One md5 per shingle, not 16: the hash family is Kirsch-
-    * Mitzenmacher double hashing h_i = h1 + i·h2 over two independent
-    * slices of the digest (h1 60 bits, h2 56 bits — the sum stays in
-    * 61 bits, overflow-free). At 100 TB, hashing is the dominant cost
-    * of minhashing; this is a 16× cut with standard guarantees.
-    * The 16 per-seed minima are computed in ONE aggregation pass
-    * (16 min() columns, then stack to long form) — no 16× row blowup.
+  /** DuckDB twin of [[graft.pipeline.Dedup.minhash]]: the same md5
+    * slices and Kirsch-Mitzenmacher family, long form (doc_id, i, mh).
     */
-  private def minhashDf(s: SparkSession, dir: String): DataFrame =
-    graft.pipeline.Dedup.minhash(Tables(s, dir, "documents"))
-
   private val duckMinhash =
     s"""$duckToksList,
        |sh AS (SELECT doc_id, unnest(list_transform(
@@ -86,23 +76,13 @@ object PipelineQueries {
        |mh AS (SELECT doc_id, i, min(h1 + i * h2) AS mh
        |       FROM hs CROSS JOIN seeds GROUP BY doc_id, i)""".stripMargin
 
-  /** SimHash with `bits` output bits: per-bit weighted vote over term
-    * hashes; bit extraction via integer mod against precomputed powers
-    * of two (exact, engine-portable). (doc_id, simhash).
-    *
-    * All `bits` votes are computed in ONE aggregation pass (one sum
-    * expression per bit) — no bits× row blowup/shuffle, same trick as
-    * the minhash signature pass.
+  /** DuckDB twin of [[graft.pipeline.Dedup.simhash]] over the same
+    * [[graft.pipeline.Dedup.voteExpr]] strings (per-term tf form).
     */
-  private def voteExpr(b: Int): String =
-    graft.pipeline.Dedup.voteExpr(b) // ONE formula string, both engines
-
-  private def simhashDf(s: SparkSession, dir: String, bits: Int): DataFrame =
-    graft.pipeline.Dedup.simhash(Tables(s, dir, "documents"), bits)
-
   private def duckSimhash(bits: Int): String = {
     val votes = (0 until bits)
-      .map(b => s"CAST(sum(${voteExpr(b)}) AS BIGINT) AS v$b").mkString(", ")
+      .map(b => s"CAST(sum(${graft.pipeline.Dedup.voteExpr(b)}) AS BIGINT)" +
+        s" AS v$b").mkString(", ")
     val packed = (0 until bits)
       .map(b => s"CASE WHEN v$b > 0 THEN ${1L << b} ELSE 0 END")
       .mkString("CAST(", " + ", " AS BIGINT)")
@@ -380,7 +360,7 @@ object PipelineQueries {
     // MinHash signatures (16 hashes over 3-token shingles).
     Decl(
       "px02_minhash_sig",
-      (s, dir) => minhashDf(s, dir),
+      (s, dir) => graft.pipeline.Dedup.minhash(Tables(s, dir, "documents")),
       Some(s"WITH $duckMinhash\nSELECT doc_id, i, mh FROM mh"),
       survey = Seq("DEDUP-MINHASH")),
 
@@ -649,7 +629,8 @@ object PipelineQueries {
     // map + two keyed aggregations; linear at any scale.
     Decl(
       "px05_simhash",
-      (s, dir) => simhashDf(s, dir, 16),
+      (s, dir) =>
+        graft.pipeline.Dedup.simhash(Tables(s, dir, "documents"), 16),
       Some(s"WITH ${duckSimhash(16)}\nSELECT doc_id, simhash FROM sim"),
       survey = Seq("DEDUP-SIMHASH")),
 
@@ -3481,7 +3462,7 @@ object PipelineQueries {
 
     // Compression-band funnel stage (r13): the deflate-ratio signal
     // COMPOSED into curation — per-language ratio terciles
-    // (TextMetrics.compressionBuckets, the px68 prefix-sum bucketer
+    // (TextMetrics.compressionBuckets, the px68 range-rank bucketer
     // over the compressibility axis) crossed with the Gopher gate,
     // reported as (lang, bucket, gopher_keep) attrition counts; the
     // CCNet-style keep-band is the middle bucket.

@@ -49,6 +49,17 @@ object Kde {
       s"(${poly(u)}) * exp(-5e-1 * pow($u, 2)) / sqrt(2 * pi())))"
   }
 
+  /** Evaluate a per-group-constant heavy expression on ONE row of the
+    * qid group and window-propagate it (review r18): psi6/psi4 are k²
+    * pairwise sums whose value is identical on every row of the
+    * group — the plain withColumn form re-evaluated them per ROW,
+    * k³ interpreted lambda/exp evaluations per query (HOF lambdas are
+    * CodegenFallback). CaseWhen evaluates branches lazily, so the
+    * pair sum runs exactly once per group; same value on every row.
+    */
+  private def oncePerGroup(e: String): String =
+    s"max(CASE WHEN _kde_pos = 1 THEN $e END) OVER (PARTITION BY qid)"
+
   /** Two-stage Sheather-Jones direct-plug-in bandwidth (Wand & Jones
     * 1995 notation; the algorithm behind R's `bw.SJ(method="dpi")`,
     * which the reference invokes as `bw="SJ-dpi"`,
@@ -68,17 +79,6 @@ object Kde {
     * RAISE loudly (r18; R's bw.SJ aborts on the same samples) — use
     * the Silverman default for samples R would also reject.
     */
-  /** Evaluate a per-group-constant heavy expression on ONE row of the
-    * qid group and window-propagate it (review r18): psi6/psi4 are k²
-    * pairwise sums whose value is identical on every row of the
-    * group — the plain withColumn form re-evaluated them per ROW,
-    * k³ interpreted lambda/exp evaluations per query (HOF lambdas are
-    * CodegenFallback). CaseWhen evaluates branches lazily, so the
-    * pair sum runs exactly once per group; same value on every row.
-    */
-  private def oncePerGroup(e: String): String =
-    s"max(CASE WHEN _kde_pos = 1 THEN $e END) OVER (PARTITION BY qid)"
-
   private val sjSteps: Seq[(String, String)] = Seq(
     "sigma" -> "least(sd, iqr / 1.349e0)",
     // named guard at the FIRST degenerate step (review r19): sigma = 0

@@ -6,12 +6,17 @@ import org.apache.spark.sql.functions._
 /** Language-skew probe for the r11 px68/px69 de-skew (BENCH_NOTES
   * §0f): on an N×-replicated corpus with a DOMINANT language (90% of
   * docs forced to one key — the 100 TB web-corpus regime), compare the
-  * r10 per-language window shapes against the r11 broadcast-cut-point
-  * shapes on wall time, spill, and answer equality.
+  * r10 per-language window shapes against the de-skewed shapes on wall
+  * time, spill, and answer equality. For px68 the de-skewed shape is
+  * [[graft.pipeline.TextMetrics.perplexityBucketsFromScores]]: one
+  * range partition by (lang, ppl, doc_id), a rank per (lang, slice)
+  * plus broadcast slice offsets (phase `px68_cutpoints_r11`, name
+  * kept so logs stay comparable); for px69 it is
+  * [[graft.pipeline.Sharding.temperatureSample]]'s broadcast cut points.
   *
   * The claim under test: `ntile/row_number OVER (PARTITION BY lang)`
   * funnels the dominant language through ONE task (sort + spill grow
-  * linearly with corpus, no parallelism), while the histogram/cut
+  * linearly with corpus, no parallelism), while the de-skewed
   * assignment stays parallel — so the gap must WIDEN with N.
   *
   * The perplexity scoring chain (shared by both px68 shapes) is

@@ -228,10 +228,11 @@ class PlanShapeSpec extends SparkSpec {
 
   test("px68/px69: no per-language window consumes un-aggregated corpus rows") {
     // the r10 scale-killer: ntile/row_number OVER (PARTITION BY lang)
-    // pushed the whole corpus through one task per language. The r11
-    // rewrite assigns buckets/selection from broadcast cut points; the
-    // only windows keyed by ≤1 column must sit above an aggregate (the
-    // per-(lang, ppl) / per-(lang, bkt) histogram or the language count)
+    // pushed the whole corpus through one task per language. px68 now
+    // ranks within (lang, range slice) and px69 selects from broadcast
+    // cut points; the only windows keyed by ≤1 column must sit above an
+    // aggregate (the per-(lang, slice) counts, the per-(lang, bkt)
+    // histogram or the language count)
     // — never above raw corpus rows. Broadcast sides are exempt: their
     // size is bounded by the exchange itself.
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}

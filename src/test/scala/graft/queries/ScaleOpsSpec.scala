@@ -73,7 +73,7 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("px68 cut-point buckets == the ntile window, any nBuckets") {
-    // the de-skewed histogram/cut-point assignment must be bit-equal to
+    // the de-skewed range-rank assignment must be bit-equal to
     // ntile(n) OVER (PARTITION BY lang ORDER BY ppl, doc_id) — checked
     // across bucket counts that exercise uneven splits and n < nBuckets
     import spark.implicits._
@@ -90,11 +90,63 @@ class ScaleOpsSpec extends SparkSpec {
       assert(got == expect, s"nBuckets=$nb: " +
         s"diff=${(got.toSet diff expect.toSet).take(5)}")
     }
+    // a tie mass: ~2,000 rows over 3 ppl values (plus NULL ppl rows and
+    // a NULL-language group) with shuffled ids, over 16 range slices,
+    // so every tie group spans several slices and the cuts land inside
+    // ties
+    val ties = spark.range(2000).select(
+      (col("id") * 7919L % 2003L).as("doc_id"),
+      when(col("id") % 5 === 0, lit(null).cast("string"))
+        .when(col("id") % 5 < 3, lit("en")).otherwise(lit("fr")).as("lang"),
+      when(col("id") % 97 === 0, lit(null).cast("double"))
+        .otherwise((col("id") * 31 % 3).cast("double") + 0.5).as("ppl"))
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      spark.conf.set("spark.sql.shuffle.partitions", "16")
+      for (nb <- Seq(2, 3, 7)) {
+        val got = graft.pipeline.TextMetrics
+          .perplexityBucketsFromScores(ties, nb)
+          .select("doc_id", "bucket").as[(Long, Long)].collect().toMap
+        val w = Window.partitionBy("lang").orderBy(col("ppl"), col("doc_id"))
+        val expect = ties.withColumn("bucket", ntile(nb).over(w).cast("bigint"))
+          .select("doc_id", "bucket").as[(Long, Long)].collect().toMap
+        assert(got.size == 2000 && got == expect, s"ties, nBuckets=$nb: " +
+          s"diff=${(got.toSet diff expect.toSet).take(5)}")
+      }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  test("px68 bucketer: one range-partitioned pass, bounded job count") {
+    // one range sampler, one slice-id checkpoint and one broadcast: the
+    // assignment of a checkpointed frame runs 7 jobs here (the histogram,
+    // cut search and tie band this shape replaced ran 22)
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val docs = Tables(spark, sfTiny, "documents")
+    val p = docs.select(col("doc_id"), col("lang"))
+      .join(graft.pipeline.TextMetrics.perplexity(docs), Seq("doc_id"), "left")
+      .localCheckpoint()
+    val nDocs = p.count()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.graft.Listeners.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val n = graft.pipeline.TextMetrics.perplexityBucketsFromScores(p, 3)
+        .collect().length
+      assert(n == nDocs)
+      org.apache.spark.graft.Listeners.drain(sc)
+    } finally sc.removeSparkListener(l)
+    assert(jobs.get <= 8, s"${jobs.get} jobs")
   }
 
   test("px68 buckets survive exchange reuse being disabled (checkpointed slice ids)") {
-    // the distributed prefix sum's `local` and `offs` branches must
-    // observe the SAME physical range partitioning; the lazy
+    // the range rank and its `offs` branch must observe the SAME
+    // physical range partitioning; the lazy
     // localCheckpoint pins it, so correctness cannot silently depend
     // on plan-level exchange reuse — this pins the checkpoint
     import spark.implicits._
@@ -138,7 +190,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("px68 buckets: NULL-language docs are a language of their own, not dropped") {
     // web corpora have docs with missing language metadata; the r10
-    // ntile window bucketed them in their own partition — the cut-point
+    // ntile window bucketed them in their own partition — the range-rank
     // assignment must too (a plain equi-join would silently drop them)
     import spark.implicits._
     val p = Seq(
