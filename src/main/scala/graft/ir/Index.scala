@@ -41,12 +41,11 @@ object Index {
     spark.read.parquet(path)
 
   /** Per-term collection stats straight from the index
-    * (CollectionStatsHBase re-explode, `CollectionStatsHBase.java:45-70`).
+    * (CollectionStatsHBase re-explode, `CollectionStatsHBase.java:45-70`):
+    * [[CorpusStats.termStats]] over the exploded doc vectors.
     */
   def termStats(dv: DataFrame): DataFrame =
-    dv.select(explode(col("dv")).as(Seq("term", "tf")))
-      .groupBy("term")
-      .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
+    CorpusStats.termStats(dv.select(explode(col("dv")).as(Seq("term", "tf"))))
 
   /** Slices per term in the sharded postings build — fixed (NOT a
     * partition count) so the slice id is a stable function of doc_id.

@@ -212,14 +212,14 @@ object Retrieval {
   private[graft] def qlenOf(q: DataFrame): DataFrame =
     q.groupBy("qid").agg(count(lit(1)).as("qlen"))
 
-  /** ONE definition of the query-pruned per-term df/cf stats, shared
-    * by the sequential scan and [[Index.scoreFromIndex]] (the inverted
-    * layout carries its stats precomputed on the postings rows, and
-    * augmented topics on the query rows).
+  /** [[CorpusStats.termStats]] semi-joined to the query terms: the
+    * per-term df/cf stats of the sequential scan and
+    * [[Index.scoreFromIndex]] (the inverted layout carries its stats
+    * precomputed on the postings rows, and augmented topics on the
+    * query rows).
     */
   private[graft] def tstatsFor(tf: DataFrame, q: DataFrame): DataFrame =
-    tf.groupBy("term")
-      .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
+    CorpusStats.termStats(tf)
       .join(q.select("term").distinct(), Seq("term"), "left_semi")
 
   /** [[matchedTermsFromTf]] bound to the testdata corpus + [[querySet]]. */
@@ -248,6 +248,15 @@ object Retrieval {
 
   /** A retrieval model: (name, per-term part, final, conjunctive). */
   type Model = (String, String, String, Boolean)
+
+  /** The TrecRunBaselines models (`TrecRunBaselines.java:168-220`) of
+    * ir26 and `Jobs.trecRunBaselines`.
+    */
+  val baselineModels: Seq[Model] = Seq(
+    ("LMno", lmnoPart, lmnoFinal, true),
+    ("LMs", lmjmPart(), lmjmFinal, false),
+    ("LMdi", lmdirPart, lmdirFinal, false),
+    ("BM25", bm25Part, bm25Final, false))
 
   /** THE scorer, stream-legal half: part → group by (qid, <idCol>, dl,
     * qlen) → conjunctive gate (`n_matched = qlen`) → final score. One

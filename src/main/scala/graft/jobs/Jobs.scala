@@ -1,7 +1,7 @@
 package graft.jobs
 
 import graft.GraftSession
-import graft.ir.{AnchorExtractJob, Index, Retrieval}
+import graft.ir.{AnchorExtractJob, CorpusStats, Feedback, Index, Retrieval}
 import graft.sources.{Topics, TrecSgml, Warc}
 import graft.text.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -158,24 +158,21 @@ object Jobs {
 
   /** Job 1 of the baselines chain: collection stats + per-query-term
     * df/cf → stats-augmented topic file
-    * (`nl/utwente/mirex/QueryTermCount.java`).
+    * (`nl/utwente/mirex/QueryTermCount.java`). df/cf are
+    * [[CorpusStats.termStats]] (ir03), 0 for a term not in the corpus.
     */
   def queryTermCount(spark: SparkSession, in: String, outTopics: String,
                      topics: String): Unit = {
     val docs = loadDocs(spark, in)
-    // persisted: tf feeds TWO actions (the collection-length agg and
-    // writeAugmented's collect) — unpersisted, each would re-run the
-    // full corpus tokenize (the no-repeated-tokenize rule applies
-    // ACROSS actions; ReusedExchange only dedupes within one)
+    // persisted: the collection-length agg and writeAugmented's collect
+    // are two actions, and ReusedExchange only dedupes within one
     val tf = TextOps.termFreqs(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
       val q = Topics.readPlain(spark, topics)
         .groupBy("qid", "term").agg(count(lit(1)).as("qtf"))
-      val tstats = tf.groupBy("term")
-        .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
-      val stats = q.join(tstats, Seq("term"), "left")
+      val stats = q.join(CorpusStats.termStats(tf), Seq("term"), "left")
         .select(col("qid"), col("term"), col("qtf"),
           coalesce(col("df"), lit(0L)).as("df"),
           coalesce(col("cf"), lit(0L)).as("cf"))
@@ -187,7 +184,8 @@ object Jobs {
 
   /** Job 2: four models from the augmented topic file, keys
     * `qid:model` (`nl/utwente/mirex/TrecRunBaselines.java`). Terms
-    * with cf ≤ 0 are dropped (`TrecRunBaselines.java:129-130`).
+    * with cf ≤ 0 are dropped (`TrecRunBaselines.java:129-130`). The
+    * models are ir26's `Retrieval.baselineModels`, parts times qtf.
     */
   def trecRunBaselines(spark: SparkSession, in: String, out: String,
                        augTopics: String): Unit = {
@@ -196,11 +194,8 @@ object Jobs {
     try {
       val docs = loadDocs(spark, in)
       import Retrieval._
-      val models = Seq(
-        ("LMno", s"qtf * ($lmnoPart)", lmnoFinal, true),
-        ("LMs", s"qtf * (${lmjmPart()})", lmjmFinal, false),
-        ("LMdi", s"qtf * ($lmdirPart)", lmdirFinal, false),
-        ("BM25", s"qtf * ($bm25Part)", bm25Final, false))
+      val models = baselineModels.map { case (name, part, fin, conj) =>
+        (name, s"qtf * ($part)", fin, conj) }
       // ONE corpus pass for all four models (the ir26 stack path of
       // Retrieval.scoreModels)
       val ranked = scoreModels(
@@ -232,52 +227,39 @@ object Jobs {
       out, merge)
   }
 
+  /** `#DOCS/#TERMS/#TOKENS` header ([[CorpusStats.collectionStats]],
+    * ir04) + `term<TAB>df,cf` rows ([[CorpusStats.termStats]], ir03).
+    */
   def collectionStats(spark: SparkSession, in: String, out: String,
                       merge: Boolean = false): Unit = {
-    // persisted across the header action and the body write — same
-    // cross-action no-repeated-tokenize rule as queryTermCount
+    import spark.implicits._
+    // persisted: the header action and the body write both read it
     val tf = TextOps.termFreqs(loadDocs(spark, in))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try collectionStatsFrom(spark, tf, out, merge)
-    finally tf.unpersist(blocking = false)
+    try {
+      val h = CorpusStats.collectionStats(tf).head()
+      val lines = CorpusStats.termStats(tf)
+        .select(concat_ws("\t", col("term"),
+          concat_ws(",", col("df"), col("cf"))).as("value"))
+      // unmerged, the 3 header rows are their own (first) partition, so
+      // part files concatenated in name order reproduce the layout
+      writeText(
+        Seq(s"#DOCS:${h.getLong(0)}", s"#TERMS:${h.getLong(1)}",
+          s"#TOKENS:${h.getLong(2)}").toDF("value")
+          .unionByName(lines),
+        out, merge)
+    } finally tf.unpersist(blocking = false)
   }
 
-  private def collectionStatsFrom(spark: SparkSession,
-                                  tf: org.apache.spark.sql.DataFrame,
-                                  out: String, merge: Boolean): Unit = {
-    val header = tf.agg(
-      countDistinct(col("doc_id")).as("docs"),
-      countDistinct(col("term")).as("terms"),
-      sum("tf").as("tokens")).head()
-    val lines = tf.groupBy("term")
-      .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
-      .select(concat_ws("\t", col("term"),
-        concat_ws(",", col("df"), col("cf"))).as("value"))
-    // #DOCS/#TERMS/#TOKENS header + term rows (ClueWebCollectionStats
-    // .java:157-174); header via driver, body via executors.
-    import spark.implicits._
-    // unmerged, the 3 header rows are their own (first) partition, so
-    // part files concatenated in name order reproduce the layout
-    writeText(
-      Seq(s"#DOCS:${header.getLong(0)}", s"#TERMS:${header.getLong(1)}",
-        s"#TOKENS:${header.getLong(2)}").toDF("value")
-        .unionByName(lines),
-      out, merge)
-  }
-
+  /** `w1<TAB>w2<TAB>n11` lines of [[CorpusStats.pairCounts]] (ir09). */
   def mutualInfo(spark: SparkSession, in: String, out: String,
-                 merge: Boolean = false): Unit = {
-    val dt = TextOps.tokens(loadDocs(spark, in)).distinct()
+                 merge: Boolean = false): Unit =
     // pair-count output (quadratic-ish in vocabulary) → never a
     // single-task merge by default
-    writeText(dt.alias("a")
-      .join(dt.alias("b"),
-        col("a.doc_id") === col("b.doc_id") && col("a.term") < col("b.term"))
-      .groupBy(col("a.term").as("w1"), col("b.term").as("w2"))
-      .agg(count(lit(1)).as("n11"))
-      .select(concat_ws("\t", col("w1"), col("w2"), col("n11")).as("value")),
+    writeText(
+      CorpusStats.pairCounts(TextOps.tokens(loadDocs(spark, in)).distinct())
+        .select(concat_ws("\t", col("w1"), col("w2"), col("n11")).as("value")),
       out, merge)
-  }
 
   /** Temporal KDE re-ranked retrieval (`RunQueryKDEHBase`): Dirichlet
     * retrieval over a TREC-SGML collection, re-scored by a native
@@ -392,47 +374,16 @@ object Jobs {
 
   /** RM3 feedback-query generation (the reference's
     * `GenerateFeedbackQueriesHBase` → weighted-topic file → rerun
-    * loop, §3.3): initial Dirichlet retrieval, RM1 over the top
-    * fbDocs, P11 term cleaning, clip to fbTerms, RM3 interpolation,
-    * written in the weighted-topic format `RunQueryHBase` consumes.
+    * loop, §3.3): [[Feedback.rm1]] and [[Feedback.rm3]] (ir18/ir19,
+    * weights not rounded) in the weighted-topic format `RunQueryHBase`
+    * consumes.
     */
   def generateFeedbackQueries(spark: SparkSession, in: String, out: String,
                               topics: String, fbDocs: Int = 10,
                               fbTerms: Int = 10, lambda: Double = 0.5): Unit =
                               withDocs(spark, in) { docs =>
     val q = Topics.readPlain(spark, topics)
-    val fb = Retrieval.scoreFor(docs, q, Retrieval.lmdirPart,
-      Retrieval.lmdirFinal, conjunctive = false, fbDocs)
-      .select("qid", "doc_id", "score")
-    // dl and the clip total as WINDOWS, not groupBy + join-back — the
-    // join-back formulation clones the tokenize/feedback subtree per
-    // branch and Catalyst's pushdowns specialize the clones apart so
-    // ReusedExchange can't merge them (measured on ir19: 24 scans → 5
-    // after the same rewrite in IrQueries.rm1Spark; dl sums longs, so
-    // aggregation order cannot change the values)
-    val tf = TextOps.termFreqs(docs)
-      .withColumn("dl", expr("sum(tf) OVER (PARTITION BY doc_id)"))
-    val fbterm = fb.join(tf, Seq("doc_id"))
-      .filter(expr("length(term) >= 3 AND NOT term RLIKE '[0-9]'"))
-      .withColumn("contrib", expr("(tf / dl) * exp(score)"))
-      .groupBy("qid", "term").agg(sum("contrib").as("w"))
-    val clipn = fbterm
-      .withColumn("frank",
-        expr("row_number() OVER (PARTITION BY qid ORDER BY w DESC, term)"))
-      .filter(col("frank") <= fbTerms)
-      .select(col("qid"), col("term"),
-        expr("w / sum(w) OVER (PARTITION BY qid)").as("wc"))
-    // Query model = λ·qtf/qlen per DISTINCT term (FeatureVector
-    // accumulation): aggregate the per-occurrence rows from readPlain
-    // first, so a repeated query term gets one entry with its count
-    // rather than duplicate term:w lines at weight λ/qlen each.
-    val qlen = Retrieval.qlenOf(q)
-    val qterms = q.groupBy("qid", "term").agg(count(lit(1)).as("qtf"))
-    val rm3 = qterms.join(qlen, Seq("qid"))
-      .join(clipn, Seq("qid", "term"), "full_outer")
-      .select(col("qid"), col("term"),
-        (coalesce(lit(lambda) * (col("qtf") / col("qlen")), lit(0.0)) +
-          coalesce(lit(1 - lambda) * col("wc"), lit(0.0))).as("w3"))
+    val rm3 = Feedback.rm3(Feedback.rm1(docs, q, fbDocs), q, fbTerms, lambda)
     // weighted-topic format: qid<TAB>term:w term:w … (term-sorted so the
     // emitted file is byte-stable across runs/partitionings)
     rm3.groupBy("qid")
@@ -475,25 +426,19 @@ object Jobs {
 
   /** Index inspection, `s` form (reference `DumpIndexHBase.java:21-41`):
     * the documents/terms/tokens triple the reference point-gets from its
-    * `#collstats` HBase row. Here the index IS the doc-vector parquet,
-    * so documents and tokens come from the stored rows/lengths and the
-    * distinct-term count is one explode of the map keys — a single
-    * bounded aggregate, no full-text rescan. One 3-line file, reference
+    * `#collstats` HBase row. Here the index IS the doc-vector parquet:
+    * [[CorpusStats.collectionStats]] (ir04) over its exploded vectors,
+    * one aggregate and no full-text rescan (every indexed doc holds a
+    * token, so n_docs is the row count). One 3-line file, reference
     * layout.
     */
   def dumpIndexStats(spark: SparkSession, idx: String, out: String): Unit = {
     import spark.implicits._
-    val dv = Index.load(spark, idx)
-    val dt = dv.select(explode(map_keys(col("dv"))).as("term"))
-      .agg(countDistinct(col("term")).as("terms")).head().getLong(0)
-    // coalesce: sum() over an EMPTY index is NULL and getLong would
-    // NPE — report zeros instead (the EdgeCaseSpec doctrine)
-    val h = dv.agg(count(lit(1)).as("documents"),
-        coalesce(sum("len"), lit(0L)).as("tokens"))
-      .head()
+    val h = CorpusStats.collectionStats(Index.load(spark, idx)
+      .select(col("doc_id"), explode(col("dv")).as(Seq("term", "tf")))).head()
     writeText(
-      Seq(s"documents: ${h.getLong(0)}", s"terms: $dt",
-        s"tokens: ${h.getLong(1)}").toDF("value"),
+      Seq(s"documents: ${h.getLong(0)}", s"terms: ${h.getLong(1)}",
+        s"tokens: ${h.getLong(2)}").toDF("value"),
       out, merge = true)
   }
 
@@ -1643,27 +1588,20 @@ object Jobs {
   /** Query-term co-occurrence statistics (`TrecQueryStats.java`):
     * per (query term, doc term) pair over co-occurring docs — doc
     * count and Σ min(tf_q, tf_d) — doc side stoplist-filtered; TAB
-    * output `qterm dterm n_docs sum_minf` (FIXTURES §7 shape).
+    * output `qterm dterm n_docs sum_minf` (FIXTURES §7 shape). The
+    * pairs are [[CorpusStats.queryCooccurrence]], ir21's dataflow.
     */
   def queryStats(spark: SparkSession, in: String, out: String,
                  topics: String, merge: Boolean = false,
                  stoplist: Option[String] = None): Unit = {
-    val tf = TextOps.termFreqs(loadDocs(spark, in))
-    val qterms = Topics.readPlain(spark, topics).select("term").distinct()
-    val tq = tf.join(broadcast(qterms), Seq("term"))
-      .select(col("doc_id"), col("term").as("qterm"), col("tf").as("tfq"))
     // side-loaded stoplist file when given (TrecQueryStats parity),
     // built-in default otherwise
     val stop = stoplist.map(TextOps.loadStopwords(spark, _))
       .getOrElse(TextOps.stopwords)
-    val td = tf
-      .filter(!col("term").isin(stop: _*))
-      .select(col("doc_id"), col("term").as("dterm"), col("tf").as("tfd"))
+    val tf = TextOps.termFreqs(loadDocs(spark, in))
+    val qterms = Topics.readPlain(spark, topics).select("term").distinct()
     // |query terms| × vocabulary pairs in the worst case → partitioned
-    writeText(tq.join(td, Seq("doc_id"))
-      .groupBy("qterm", "dterm")
-      .agg(count(lit(1)).as("n_docs"),
-        expr("CAST(sum(least(tfq, tfd)) AS BIGINT)").as("sum_minf"))
+    writeText(CorpusStats.queryCooccurrence(tf, qterms, stop)
       .select(concat_ws("\t", col("qterm"), col("dterm"), col("n_docs"),
         col("sum_minf")).as("value")),
       out, merge)

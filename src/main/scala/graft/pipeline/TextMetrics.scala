@@ -204,20 +204,22 @@ object TextMetrics {
     * they land in the head bucket(s) — the same place Spark's own
     * `ntile(n) OVER (ORDER BY ppl, doc_id)` puts them.
     *
-    * Exact ranks without a per-language window: the frame is
-    * range-partitioned ONCE by (lang, ppl, doc_id), so a language
-    * occupies consecutive slices in rank order. Each row's global rank
-    * is `off + row_number()` within its (lang, slice), where `off` is
-    * the row count of the language's earlier slices; the bucket
-    * follows from the boundary math on [[perplexityBuckets]]. The
-    * per-(lang, slice) counts are at most languages + slices rows, so
-    * their offsets and language totals are a broadcast side. Spark's
-    * range sampler bounds every slice whatever the value
-    * distribution, and `doc_id` in the range key spreads a tie mass
-    * (boilerplate with identical ppl) over many slices, so no sort
-    * task grows with a language's share or a tie's size. Slice
-    * boundaries may move between runs (the sampler), but `off + rank`
-    * is the same global rank, so outputs are partitioning-independent.
+    * Exact ranks without a per-language window or a second shuffle:
+    * the frame is range-partitioned ONCE by (lang, ppl, doc_id) and
+    * each slice sorted by that key, so a language occupies consecutive
+    * slices in rank order and `monotonically_increasing_id()` (`_pb_i`)
+    * numbers each slice's rows in rank order. A row's global rank is
+    * `off + _pb_i − min(_pb_i) + 1` over its (lang, slice), `off` being
+    * the row count of the language's earlier slices; the bucket follows
+    * from the boundary math on [[perplexityBuckets]]. The counts,
+    * minima, offsets and language totals are at most languages + slices
+    * rows, a broadcast side. Spark's range sampler bounds every slice
+    * whatever the value distribution, and `doc_id` in the range key
+    * spreads a tie mass (boilerplate with identical ppl) over many
+    * slices, so no sort task grows with a language's share or a tie's
+    * size. Slice boundaries may move between runs (the sampler), but
+    * the rank is the same global rank, so outputs are
+    * partitioning-independent.
     * SkewProbe measures the shape on a 90%-one-language corpus.
     */
   def perplexityBucketsFromScores(p: DataFrame, nBuckets: Int = 3,
@@ -227,41 +229,42 @@ object TextMetrics {
     if (nBuckets == 1) return p.withColumn("bucket", lit(1L))
     val nPart = p.sparkSession.sessionState.conf.numShufflePartitions
     // lazily checkpointed: the rank and the offsets below both read the
-    // slice ids, and two executions of repartitionByRange can sample
-    // different boundaries (the sampler seeds off the RDD id). The
+    // slice and row ids, and two executions of repartitionByRange can
+    // sample different boundaries (the sampler seeds off the RDD id). The
     // checkpoint freezes one partitioning into the rows, so the
     // (lang, slice) offset join cannot misalign even without exchange
     // reuse. Its blocks hold the whole input frame and live until RDD
     // GC: the returned frame still references them, so they cannot be
     // unpersisted here. Callers looping over many corpora should
     // release each result between iterations.
+    val key = Seq(col(langCol), col("ppl"), col("doc_id"))
     val ranged = p
-      .repartitionByRange(nPart, col(langCol), col("ppl"), col("doc_id"))
+      .repartitionByRange(nPart, key: _*)
+      .sortWithinPartitions(key: _*)
       .withColumn("_pb_pid", spark_partition_id())
+      .withColumn("_pb_i", monotonically_increasing_id())
       .localCheckpoint(false)
-    // rows before each slice within its language, and the language
-    // total: one count row per (lang, slice), at most languages +
-    // slices rows, so the per-language windows run over a tiny frame
+    // rows before each slice within its language, the language total
+    // and the slice's first row id: one row per (lang, slice), at most
+    // languages + slices rows, so the per-language windows run over a
+    // tiny frame
     val offs = ranged.groupBy(col(langCol), col("_pb_pid"))
-      .agg(count(lit(1)).as("_pb_pc"))
+      .agg(count(lit(1)).as("_pb_pc"), min("_pb_i").as("_pb_i0"))
       .withColumn("_pb_off", coalesce(sum("_pb_pc").over(
         Window.partitionBy(langCol).orderBy("_pb_pid")
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .withColumn("_pb_n", sum("_pb_pc").over(Window.partitionBy(langCol)))
       .select(col(langCol).as("_pb_ol"), col("_pb_pid").as("_pb_op"),
-        col("_pb_off"), col("_pb_n"))
+        col("_pb_off"), col("_pb_n"), col("_pb_i0"))
     // NULL-SAFE join: docs with a NULL language are a language of
     // their own, as in the ntile window; a plain equi-join would drop
     // them
     ranged
-      .withColumn("_pb_g", row_number().over(
-        Window.partitionBy(col(langCol), col("_pb_pid"))
-          .orderBy("ppl", "doc_id")))
       .join(broadcast(offs),
         col(langCol) <=> col("_pb_ol") && col("_pb_pid") === col("_pb_op"))
       .withColumn("bucket", expr(
         s"1 + size(filter(sequence(1, ${nBuckets - 1}), b ->" +
-          s" _pb_off + _pb_g > b * (_pb_n div $nBuckets)" +
+          s" _pb_off + _pb_i - _pb_i0 + 1 > b * (_pb_n div $nBuckets)" +
           s" + least(CAST(b AS BIGINT), _pb_n % $nBuckets)))").cast("bigint"))
       .select(p.columns.map(col) :+ col("bucket"): _*)
   }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.ir.Retrieval
+import graft.ir.{CorpusStats, Feedback, Retrieval}
 import graft.text.TextOps
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -21,23 +21,18 @@ object IrQueries {
 
   import Retrieval._
 
-  /** ONE copy of the ir26 four-model list and the ir28 (fb_terms, λ)
-    * grid (review r14): each used to appear verbatim in both the
-    * Spark builder and its DuckDB oracle — editing one copy would
-    * silently test different configurations. λ is carried as an
-    * E-NOTATION STRING: interpolated into the oracle it stays DOUBLE
-    * (a bare `0.7` literal is DECIMAL in DuckDB, so its `(1 - 0.7)`
-    * was exact-decimal 0.3 while Spark computed the IEEE double
-    * 0.30000000000000004 — a 1-ulp divergence under the 6-dp round),
-    * and `.toDouble` gives Spark the identical IEEE value.
+  /** ONE copy of the ir28 (fb_terms, λ) grid (review r14; the ir26
+    * model list is `Retrieval.baselineModels`): each used to appear
+    * verbatim in both the Spark builder and its DuckDB oracle — editing
+    * one copy would silently test different configurations. λ is
+    * carried as an E-NOTATION STRING: interpolated into the oracle it
+    * stays DOUBLE (a bare `0.7` literal is DECIMAL in DuckDB, so its
+    * `(1 - 0.7)` was exact-decimal 0.3 while Spark computed the IEEE
+    * double 0.30000000000000004 — a 1-ulp divergence under the 6-dp
+    * round), and `.toDouble` gives Spark the identical IEEE value.
     */
   private val rm3Grid: Seq[(Int, String)] =
     Seq((5, "3e-1"), (5, "7e-1"), (10, "3e-1"), (10, "7e-1"))
-  private lazy val baselineModels = Seq(
-    ("LMno", lmnoPart, lmnoFinal, true),
-    ("LMs", lmjmPart(), lmjmFinal, false),
-    ("LMdi", lmdirPart, lmdirFinal, false),
-    ("BM25", bm25Part, bm25Final, false))
 
   private def docsT(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents")
@@ -46,20 +41,12 @@ object IrQueries {
     TextOps.tokens(docsT(s, dir))
 
   // Shared pair-statistics builder for EMIM/NPMI: (w1, w2, n11,
-  // df1, df2, n_docs) over distinct per-doc terms.
-  //
-  // Scale note: the within-doc pair self-join is quadratic in distinct
-  // terms per doc — bounded in practice by doc length, and the reference
-  // has the same blowup in its mapper (`TrecMutualInfo.java:139-166`).
-  // The vocabulary df table is broadcast here; for web-scale vocabularies
-  // it would flip to a shuffled join automatically (AQE size check).
+  // df1, df2, n_docs) over distinct per-doc terms. The vocabulary df
+  // table is broadcast; for web-scale vocabularies it would flip to a
+  // shuffled join automatically (AQE size check).
   private def pairStats(s: SparkSession, dir: String): DataFrame = {
     val dt = toks(s, dir).distinct()
-    val pairs = dt.alias("a")
-      .join(dt.alias("b"),
-        col("a.doc_id") === col("b.doc_id") && col("a.term") < col("b.term"))
-      .groupBy(col("a.term").as("w1"), col("b.term").as("w2"))
-      .agg(count(lit(1)).as("n11"))
+    val pairs = CorpusStats.pairCounts(dt)
     val dft = dt.groupBy("term").agg(count(lit(1)).as("df"))
     val nd = dt.agg(countDistinct(col("doc_id")).as("n_docs"))
     pairs
@@ -104,15 +91,15 @@ object IrQueries {
   // per SURVEY §4 "quirk parity decisions".
   private val npmiExpr = s"round(log2($p11 / ($px * $py)) / (-log2($p11)), 6)"
 
-  // RM1/RM3 feedback shared fragments (GenerateFeedbackQueriesHBase).
-  // fbDocs = fbTerms = 10, RM3 λ = 0.5; term cleaner = P11
-  // (len ≥ 3, no digits, `GenerateFeedbackQueriesHBase.java:366-377`).
-  private val rm1Contrib = "(tf / dl) * exp(score)"
+  // RM1/RM3 feedback oracle (GenerateFeedbackQueriesHBase; the Spark
+  // side is graft.ir.Feedback). fbDocs = fbTerms = 10, RM3 λ = 0.5;
+  // term cleaner = P11 (len ≥ 3, no digits,
+  // `GenerateFeedbackQueriesHBase.java:366-377`).
   private def duckRm1Ctes: String =
     duckScoreCtes(lmdirPart, lmdirFinal, conjunctive = false) +
       s""",
          |fb AS (SELECT qid, doc_id, score FROM ranked WHERE rank <= 10),
-         |fbterm AS (SELECT fb.qid, tf.term, sum($rm1Contrib) AS w
+         |fbterm AS (SELECT fb.qid, tf.term, sum(${Feedback.rm1Contrib}) AS w
          |           FROM fb JOIN tf USING (doc_id) JOIN dl USING (doc_id)
          |           WHERE length(term) >= 3 AND NOT regexp_matches(term, '[0-9]')
          |           GROUP BY fb.qid, tf.term),
@@ -122,32 +109,7 @@ object IrQueries {
          |               ORDER BY round(w / tot, 9) DESC, term) AS frank
          |           FROM fbterm JOIN tot USING (qid))""".stripMargin
 
-  private def rm1Spark(s: SparkSession, dir: String): DataFrame = {
-    val fb = score(s, dir, lmdirPart, lmdirFinal, conjunctive = false, 10)
-      .select("qid", "doc_id", "score")
-    // dl as a WINDOW over the tf frame, not groupBy + join-back: the
-    // join-back formulation duplicates the whole tokenize subtree per
-    // branch (Catalyst specializes the copies apart, so ReusedExchange
-    // cannot always dedupe them — the ir30 lesson; measured on ir19,
-    // which multiplies every rm1 branch: 24 scans/24 tokenizes → 6/6
-    // after the window rewrite, 2.5–2.9 s → see BENCH_NOTES r5).
-    // dl sums LONGS, so the window/groupBy orders agree exactly.
-    val tf = TextOps.termFreqs(docsT(s, dir))
-      .withColumn("dl", expr(
-        "sum(tf) OVER (PARTITION BY doc_id)"))
-    val fbterm = fb.join(tf, Seq("doc_id"))
-      .filter(expr("length(term) >= 3 AND NOT term RLIKE '[0-9]'"))
-      .withColumn("contrib", expr(rm1Contrib))
-      .groupBy("qid", "term").agg(sum("contrib").as("w"))
-    // per-query total likewise as a window (one exchange on qid,
-    // shared with frank's window — no second fbterm subtree)
-    fbterm
-      .withColumn("tot", expr("sum(w) OVER (PARTITION BY qid)"))
-      .withColumn("wn", expr("round(w / tot, 6)"))
-      .withColumn("frank",
-        expr("row_number() OVER (PARTITION BY qid ORDER BY round(w / tot, 9) DESC, term)"))
-  }
-  // NOTE (measured, sf0.1): do NOT persist() this or other shared
+  // NOTE (measured, sf0.1): do NOT persist() Feedback.rm1 or other shared
   // subtrees here — Catalyst's ReusedExchange already dedupes the
   // identical exchanges across self-joins/grid branches, and eager
   // columnar caching both costs materialization and blocks AQE
@@ -183,9 +145,7 @@ object IrQueries {
     Decl(
       "ir03_term_stats",
       (s, dir) =>
-        TextOps.termFreqs(docsT(s, dir))
-          .groupBy("term")
-          .agg(count(lit(1)).as("df"), sum("tf").as("cf")),
+        CorpusStats.termStats(TextOps.termFreqs(docsT(s, dir))),
       Some(s"""SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT) AS cf
               |FROM (${TextOps.duckTermFreqs}) tf GROUP BY term""".stripMargin),
       survey = Seq("A2")),
@@ -194,11 +154,7 @@ object IrQueries {
     // ClueWebCollectionStats.java:157-174).
     Decl(
       "ir04_collection_stats",
-      (s, dir) =>
-        toks(s, dir).agg(
-          countDistinct(col("doc_id")).as("n_docs"),
-          countDistinct(col("term")).as("n_terms"),
-          count(lit(1)).as("n_tokens")),
+      (s, dir) => CorpusStats.collectionStats(TextOps.termFreqs(docsT(s, dir))),
       Some(s"""SELECT count(DISTINCT doc_id) AS n_docs,
               |  count(DISTINCT term) AS n_terms, count(*) AS n_tokens
               |FROM (${TextOps.duckTokens}) t""".stripMargin),
@@ -393,8 +349,8 @@ object IrQueries {
     Decl(
       "ir18_rm1",
       (s, dir) =>
-        rm1Spark(s, dir).filter(col("frank") <= 10)
-          .select("qid", "term", "wn", "frank"),
+        Feedback.rm1(docsT(s, dir), queryFrame(s), 10)
+          .filter(col("frank") <= 10).select("qid", "term", "wn", "frank"),
       Some(duckRm1Ctes +
         "\nSELECT qid, term, wn, frank FROM normed WHERE frank <= 10"),
       survey = Seq("RM1", "P11")),
@@ -495,17 +451,8 @@ object IrQueries {
       "ir21_querystats",
       (s, dir) => {
         import s.implicits._
-        val tf = TextOps.termFreqs(docsT(s, dir))
-        val qterms = querySet.flatMap(_._2).distinct.toDF("term")
-        val tq = tf.join(broadcast(qterms), Seq("term"))
-          .select(col("doc_id"), col("term").as("qterm"), col("tf").as("tfq"))
-        val td = tf
-          .filter(!col("term").isin(TextOps.stopwords: _*))
-          .select(col("doc_id"), col("term").as("dterm"), col("tf").as("tfd"))
-        tq.join(td, Seq("doc_id"))
-          .groupBy("qterm", "dterm")
-          .agg(count(lit(1)).as("n_docs"),
-            expr("CAST(sum(least(tfq, tfd)) AS BIGINT)").as("sum_minf"))
+        CorpusStats.queryCooccurrence(TextOps.termFreqs(docsT(s, dir)),
+          querySet.flatMap(_._2).distinct.toDF("term"), TextOps.stopwords)
       },
       Some {
         val stop = TextOps.stopwords.map("'" + _ + "'").mkString(",")
@@ -536,7 +483,8 @@ object IrQueries {
         // normalization is a window over (qid, fb_terms, λ), not an
         // agg + join-back (which would clone the expanded table). Four
         // separate branches re-ran the subtree up to 8×.
-        val rm1 = rm1Spark(s, dir).select("qid", "term", "w", "frank")
+        val rm1 = Feedback.rm1(docsT(s, dir), queryFrame(s), 10)
+          .select("qid", "term", "w", "frank")
         val q = queryFrame(s)
         val qlen = qlenOf(q)
         val grid = rm3Grid.map { case (ft, l) => (ft, l.toDouble) }
@@ -718,20 +666,10 @@ object IrQueries {
     // (FeatureVector.interpolate:173-190, clip:66-84, normalize:86-107).
     Decl(
       "ir19_rm3",
-      (s, dir) => {
-        // clip normalization as a window, for the same
-        // no-duplicated-subtree reason as rm1Spark's tot
-        val clipn = rm1Spark(s, dir).filter(col("frank") <= 10)
-          .select(col("qid"), col("term"),
-            expr("w / sum(w) OVER (PARTITION BY qid)").as("wc"))
-        val q = queryFrame(s)
-        val qlen = qlenOf(q)
-        val qq = q.join(qlen, Seq("qid"))
-        qq.join(clipn, Seq("qid", "term"), "full_outer")
-          .select(col("qid"), col("term"),
-            expr("round(coalesce(5e-1 * (1e0 / qlen), 0) + coalesce(5e-1 * wc, 0), 6)")
-              .as("w3"))
-      },
+      (s, dir) =>
+        Feedback.rm3(Feedback.rm1(docsT(s, dir), queryFrame(s), 10),
+            queryFrame(s), 10, 0.5)
+          .select(col("qid"), col("term"), round(col("w3"), 6).as("w3")),
       Some(duckRm1Ctes +
         """,
           |clip AS (SELECT qid, term, w FROM normed WHERE frank <= 10),

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * r10 per-language window shapes against the de-skewed shapes on wall
   * time, spill, and answer equality. For px68 the de-skewed shape is
   * [[graft.pipeline.TextMetrics.perplexityBucketsFromScores]]: one
-  * range partition by (lang, ppl, doc_id), a rank per (lang, slice)
+  * range partition by (lang, ppl, doc_id), row ids of each sorted slice
   * plus broadcast slice offsets (phase `px68_cutpoints_r11`, name
   * kept so logs stay comparable); for px69 it is
   * [[graft.pipeline.Sharding.temperatureSample]]'s broadcast cut points.

@@ -1200,6 +1200,22 @@ class JobsSpec extends SparkSpec {
     assert(report == "kept=1 filtered=1 missing=1")
   }
 
+  test("CollectionStats: a corpus without tokens writes the all-zero header") {
+    // sum(tf) over zero rows is NULL; the header must read 0, not throw
+    import spark.implicits._
+    val corpora = Seq(
+      "empty" -> Seq.empty[(Long, String)],
+      "punct" -> Seq((1L, "!!! ... ,,,"), (2L, " -- ")))
+    corpora.foreach { case (name, rows) =>
+      rows.toDF("doc_id", "text").write.mode("overwrite")
+        .parquet(s"$work/cs_$name")
+      Jobs.collectionStats(spark, s"parquet:$work/cs_$name",
+        s"$work/cs_${name}_out")
+      assert(runLines(s"$work/cs_${name}_out").sorted ==
+        Seq("#DOCS:0", "#TERMS:0", "#TOKENS:0"), name)
+    }
+  }
+
   test("QueryStats: pair stats match the ir21 aggregation semantics") {
     import spark.implicits._
     Seq((1L, "spark join fast fast"), (2L, "spark the fast"))

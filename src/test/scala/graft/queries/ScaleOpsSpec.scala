@@ -118,7 +118,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("px68 bucketer: one range-partitioned pass, bounded job count") {
     // one range sampler, one slice-id checkpoint and one broadcast: the
-    // assignment of a checkpointed frame runs 7 jobs here (the histogram,
+    // assignment of a checkpointed frame runs 6 jobs here (the histogram,
     // cut search and tie band this shape replaced ran 22)
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
@@ -142,6 +142,37 @@ class ScaleOpsSpec extends SparkSpec {
       org.apache.spark.graft.Listeners.drain(sc)
     } finally sc.removeSparkListener(l)
     assert(jobs.get <= 8, s"${jobs.get} jobs")
+
+    // executed plans (AQE off) of every query the call runs, the slice
+    // checkpoint's included: the range shuffle is the only exchange
+    // that carries corpus rows (doc_id); the offsets' exchange carries
+    // per-(lang, slice) partial counts
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val ql = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        plans.add(qe); ()
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.listenerManager.register(ql)
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      graft.pipeline.TextMetrics.perplexityBucketsFromScores(p, 3).collect()
+      org.apache.spark.graft.Listeners.drain(sc)
+    } finally {
+      spark.listenerManager.unregister(ql)
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
+    import scala.jdk.CollectionConverters._
+    val corpusExchanges = plans.asScala.toSeq.flatMap(_.executedPlan.collect {
+      case e: ShuffleExchangeExec if e.output.exists(_.name == "doc_id") =>
+        e.outputPartitioning.getClass.getSimpleName
+    })
+    assert(corpusExchanges == Seq("RangePartitioning"), corpusExchanges)
   }
 
   test("px68 buckets survive exchange reuse being disabled (checkpointed slice ids)") {
