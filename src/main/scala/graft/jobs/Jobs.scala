@@ -464,15 +464,6 @@ object Jobs {
           col("tf").cast("double").cast("string")).as("value")),
       out, merge = true)
 
-  /** The benchmark k-gram hash set every decontamination path scrubs
-    * or drops against — ONE definition so the standalone job, the
-    * composed job, and any future caller can't drift apart.
-    */
-  def benchShingleHashes(spark: SparkSession, benchSpec: String,
-                         k: Int): DataFrame =
-    TextOps.shingleRows(loadDocs(spark, benchSpec), k)
-      .select(graft.functions.DetHash.h60(col("s")).as("sh")).distinct()
-
   /** Shared core of the admit cycle (used by [[incrementalDedup]] and
     * the streaming twin `NearDupStream.storeAdmitStream`): verdicts
     * for `batch` against the persisted store; with `admit`, novel
@@ -1054,7 +1045,7 @@ object Jobs {
       }
       val n3b = if (sigStore == null) n3 else near.count()
       stage("decontam")
-      val bench = benchShingleHashes(spark, benchSpec, 5)
+      val bench = TextMetrics.benchHashes(loadDocs(spark, benchSpec))
       val scrubbed = TextMetrics.scrubContaminated(near, bench)
         .persist(MEMORY_AND_DISK)
       val nTouched = scrubbed.filter(col("n_removed") > 0).count()
@@ -1344,25 +1335,24 @@ object Jobs {
     * is a plain px24-style anti-join). The benchmark corpus loads via
     * the same scheme specs as the input; output keeps the corpus
     * schema with `text` replaced by the scrubbed text, plus a one-line
-    * report of docs touched / tokens removed.
+    * report of docs touched / tokens removed. `mode` is `scrub` or
+    * `drop`; any other value is refused before anything is read.
     */
   def decontaminateCorpus(spark: SparkSession, in: String, out: String,
                           benchIn: String, k: Int = 5,
                           mode: String = "scrub"): Unit = {
-    import graft.functions.DetHash
     import graft.pipeline.TextMetrics
+    require(mode == "scrub" || mode == "drop",
+      s"decontaminateCorpus mode must be scrub or drop, got '$mode'")
     val docs = loadDocs(spark, in)
-    val bench = benchShingleHashes(spark, benchIn, k)
+    val bench = loadDocs(spark, benchIn)
     mode match {
       case "drop" =>
         // doc-level treatment (the px24 flag as a job): DROP any doc
         // sharing a benchmark k-gram, original text untouched — no
         // position explode, no re-stitch, just the broadcast hash
         // semi-join the flag query runs
-        val dirty = TextOps.shingleRows(docs, k)
-          .select(col("doc_id"), DetHash.h60(col("s")).as("sh"))
-          .join(broadcast(bench), Seq("sh"))
-          .select("doc_id").distinct()
+        val dirty = TextMetrics.contaminatedDocs(docs, bench, k)
         val kept = docs.join(dirty, Seq("doc_id"), "left_anti").persist()
         try {
           kept.write.mode("overwrite").parquet(out)
@@ -1370,8 +1360,8 @@ object Jobs {
           writeReport(spark, out, s"input=$n0 dropped=${n0 - n1} kept=$n1")
         } finally { kept.unpersist(); () }
       case _ =>
-        writeScrubbed(spark, TextMetrics.scrubContaminated(docs, bench, k),
-          out)
+        writeScrubbed(spark, TextMetrics.scrubContaminated(docs,
+          TextMetrics.benchHashes(bench, k), k), out)
     }
   }
 

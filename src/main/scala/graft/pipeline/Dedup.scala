@@ -543,20 +543,13 @@ object Dedup {
     // (review r18: the old docLengths join re-tokenized 100% of docs
     // to fetch dl for the typically tiny duplicated set; same values —
     // docLengths is size() of this same canonical token array)
-    val sh = docs
-      .select(col("doc_id"),
-        graft.text.TextOps.tokArrayCol(col("text"))
-          .as("toks"))
-      .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
-        posexplode(TextOps.shinglesFromToks(col("toks"), n))
-          .as(Seq("pos0", "s")))
-      .select(col("doc_id"), col("dl"), expr("pos0 + 1").as("pos"),
-        DetHash.h60(col("s")).as("h"))
-    val dup = sh.groupBy("h")
+    val sh = TextOps.positionalShingleHashes(
+      tokArrays(docs).withColumn("dl", size(col("tk")).cast("long")), n)
+    val dup = sh.groupBy("sh")
       .agg(min("doc_id").as("dmin"), max("doc_id").as("dmax"))
-      .filter(col("dmin") < col("dmax")).select("h")
+      .filter(col("dmin") < col("dmax")).select("sh")
     val w = "PARTITION BY doc_id ORDER BY pos"
-    val hits = sh.join(dup, Seq("h"))
+    val hits = sh.join(dup, Seq("sh"))
       .withColumn("prev_end", expr(
         s"max(pos + ${n - 1}) OVER ($w ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"))
       .withColumn("is_new", expr(
@@ -723,17 +716,8 @@ object Dedup {
     val candDocs = existing.join(
       broadcast(cand.select(col("oid").as("doc_id")).distinct()),
       Seq("doc_id"), "left_semi")
-    def hashedShingles(docs: DataFrame, id: String): DataFrame =
-      TextOps.shingleRows(docs, 3)
-        .select(col("doc_id").as(id), DetHash.h60(col("s")).as("sh"))
-        .distinct()
-    val shN = hashedShingles(batch, "nid")
-    val shO = hashedShingles(candDocs, "oid")
-    val szN = shN.groupBy("nid").agg(count(lit(1)).as("sa"))
-    val szO = shO.groupBy("oid").agg(count(lit(1)).as("sb"))
-    val inter = cand.join(shN, Seq("nid"))
-      .join(shO, Seq("oid", "sh"))
-      .groupBy("nid", "oid").agg(count(lit(1)).as("inter"))
+    val (inter, szN, szO) =
+      pairShingleOverlap(cand, "nid", batch, "oid", candDocs)
     // round-then-compare pins the FP boundary deterministically
     // (cross-engine rule, same as semDedup's cosine gate)
     val best = inter.join(szN, Seq("nid")).join(szO, Seq("oid"))
@@ -751,6 +735,29 @@ object Dedup {
       .select(col("doc_id"),
         coalesce(col("n_cand"), lit(0L)).as("n_cand"),
         col("dup_of"), col("jac"))
+  }
+
+  /** Exact 3-shingle overlap of candidate `pairs` (id columns `a`,
+    * `b` naming docs of the caller-pruned `docsA`, `docsB`) →
+    * ((a, b, inter) for pairs sharing ≥ 1 distinct hash, (a, sa),
+    * (b, sb) distinct hash counts); Jaccard = inter / (sa + sb − inter).
+    * One frame passed as both sides is hashed once. Join type,
+    * threshold and ranking stay with the caller (px27, admit check).
+    */
+  def pairShingleOverlap(pairs: DataFrame, a: String, docsA: DataFrame,
+                         b: String, docsB: DataFrame)
+      : (DataFrame, DataFrame, DataFrame) = {
+    def hashes(docs: DataFrame) = TextOps.shingleHashes(docs, 3).distinct()
+    val shA = hashes(docsA)
+    val shB = if (docsB eq docsA) shA else hashes(docsB)
+    def side(sh: DataFrame, id: String) =
+      sh.select(col("doc_id").as(id), col("sh"))
+    def sizes(sh: DataFrame, id: String, n: String) =
+      side(sh, id).groupBy(id).agg(count(lit(1)).as(n))
+    val inter = pairs.join(side(shA, a), Seq(a))
+      .join(side(shB, b), Seq(b, "sh"))
+      .groupBy(a, b).agg(count(lit(1)).as("inter"))
+    (inter, sizes(shA, a, "sa"), sizes(shB, b, "sb"))
   }
 
   /** Exact-substring dedup MATERIALIZED (the removal half of
@@ -824,18 +831,13 @@ object Dedup {
     * built once and reused); overlapping covers emit repeats — the
     * consumers dedup (collect_set / distinct). */
   private def coveredPositions(tk: DataFrame, n: Int): DataFrame = {
-    val sh = tk
-      .select(col("doc_id"),
-        posexplode(TextOps.shinglesFromToks(col("tk"), n))
-          .as(Seq("i0", "s")))
-      .select(col("doc_id"), (col("i0") + 1).as("pos"),
-        DetHash.h60(col("s")).as("h"))
-    val firsts = sh.groupBy("h")
+    val sh = TextOps.positionalShingleHashes(tk, n)
+    val firsts = sh.groupBy("sh")
       .agg(count(lit(1)).as("c"),
         min(struct(col("doc_id"), col("pos"))).as("f"))
       .filter(col("c") >= 2)
-      .select(col("h"), col("f.doc_id").as("fdoc"), col("f.pos").as("fpos"))
-    sh.join(firsts, Seq("h"))
+      .select(col("sh"), col("f.doc_id").as("fdoc"), col("f.pos").as("fpos"))
+    sh.join(firsts, Seq("sh"))
       .filter(!(col("doc_id") === col("fdoc") && col("pos") === col("fpos")))
       .select(col("doc_id"),
         explode(sequence(col("pos"), col("pos") + (n - 1))).as("pos"))
@@ -916,17 +918,12 @@ object Dedup {
     */
   def dupRunSpans(docs: DataFrame, n: Int = 5, minLen: Int = 15): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sh = docs
-      .select(col("doc_id"),
-        posexplode(TextOps.shinglesCol(col("text"), n))
-          .as(Seq("i0", "s")))
-      .select(col("doc_id"), (col("i0") + 1).as("pos"),
-        DetHash.h60(col("s")).as("h"))
-    val dupH = sh.groupBy("h").agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2).select("h")
+    val sh = TextOps.positionalShingleHashes(tokArrays(docs), n)
+    val dupH = sh.groupBy("sh").agg(count(lit(1)).as("c"))
+      .filter(col("c") >= 2).select("sh")
     // shared island kernel; one shingle start per position, so no
     // dedup exchange — ends carry the final n-gram's width
-    islandSpans(sh.join(dupH, Seq("h")).select("doc_id", "pos"),
+    islandSpans(sh.join(dupH, Seq("sh")).select("doc_id", "pos"),
       endOffset = n - 1, minLen = minLen, dedupHits = false)
       .select(col("doc_id"),
         col("_ds_s").cast("bigint").as("start_pos"),

@@ -422,19 +422,13 @@ object TextMetrics {
     // makes no k-gram — fail at build like the sibling numeric params
     require(k >= 1, s"winnowing k-gram size must be >= 1, got $k")
     require(w >= 1, s"winnowing window size must be >= 1, got $w")
-    val sh = docs
-      .select(col("doc_id"),
-        graft.text.TextOps.tokArrayCol(col("text"))
-          .as("toks"))
-      .select(col("doc_id"),
-        posexplode(TextOps.shinglesFromToks(col("toks"), k))
-          .as(Seq("pos", "s")))
-      .select(col("doc_id"), col("pos"),
-        graft.functions.DetHash.h60(col("s")).as("h"))
+    val sh = TextOps.positionalShingleHashes(
+      docs.select(col("doc_id"), TextOps.tokArrayCol(col("text")).as("tk")),
+      k)
     val win = s"PARTITION BY doc_id ORDER BY pos" +
       s" ROWS BETWEEN CURRENT ROW AND ${w - 1} FOLLOWING"
     sh.withColumn("wn", expr(s"count(*) OVER ($win)"))
-      .withColumn("wmin", expr(s"min(h) OVER ($win)"))
+      .withColumn("wmin", expr(s"min(sh) OVER ($win)"))
       .filter(col("wn") === w)
       .select("doc_id", "wmin")
   }
@@ -590,12 +584,29 @@ object TextMetrics {
     }
   }
 
+  /** The benchmark k-gram hash set, distinct `sh` of the benchmark
+    * docs `bench` (doc_id, text): the benchmark side of every
+    * decontamination query and job.
+    */
+  def benchHashes(bench: DataFrame, k: Int = 5): DataFrame =
+    TextOps.shingleHashes(bench, k).select("sh").distinct()
+
+  /** Distinct doc_id of `docs` sharing ≥ 1 k-gram hash with the
+    * benchmark docs `bench` (broadcast: bounded by the eval suites).
+    */
+  def contaminatedDocs(docs: DataFrame, bench: DataFrame,
+                       k: Int = 5): DataFrame =
+    TextOps.shingleHashes(docs, k)
+      .join(broadcast(benchHashes(bench, k)), Seq("sh"))
+      .select("doc_id").distinct()
+
   /** Span-level decontamination (the surgical counterpart of the
     * px24/px56 doc-level flag): remove every token covered by a k-gram
-    * whose h60 hash appears in `bench` (one `sh` column), then stitch
-    * the survivors back into `clean_text`. Lee et al. 2022's
-    * exact-substring treatment applied to benchmark overlap — drop the
-    * overlapping SPAN, keep the document.
+    * whose hash appears in `bench` (one `sh` column, normally
+    * [[benchHashes]]), then stitch the survivors back into
+    * `clean_text`. Lee et al. 2022's exact-substring treatment applied
+    * to benchmark overlap — drop the overlapping SPAN, keep the
+    * document.
     *
     * Output: (doc_id, clean_text, n_kept, n_removed), one row per
     * input doc — fully-scrubbed docs stay, with clean_text = ''.
@@ -615,16 +626,10 @@ object TextMetrics {
     // as ('', 0, 0) like empty docs — not a NULL n_removed
     val tk = docs.select(col("doc_id"),
       TextOps.tokArrayCol(col("text")).as("tk"))
-    // 1-based shingle starts, matching the oracle's list indexing
-    val hs = tk
+    val covered = TextOps.positionalShingleHashes(tk, k)
+      .join(broadcast(bench.select("sh").distinct()), Seq("sh"))
       .select(col("doc_id"),
-        posexplode(TextOps.shinglesFromToks(col("tk"), k))
-          .as(Seq("i0", "s")))
-      .select(col("doc_id"), (col("i0") + 1).as("i"),
-        graft.functions.DetHash.h60(col("s")).as("sh"))
-    val covered = hs.join(broadcast(bench.select("sh").distinct()), Seq("sh"))
-      .select(col("doc_id"),
-        explode(sequence(col("i"), col("i") + (k - 1))).as("pos"))
+        explode(sequence(col("pos"), col("pos") + (k - 1))).as("pos"))
     // no distinct(): the kernel's collect_set dedups positions with
     // map-side combine — one exchange fewer on the hit stream
     scrubByCoveredPositions(tk, covered)

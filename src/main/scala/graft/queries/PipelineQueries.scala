@@ -195,11 +195,7 @@ object PipelineQueries {
     * sub-blocks of 16 dims over the 64-dim vectors.
     */
   private def pqBlocked(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir, "embeddings")
-      .select(col("vec_id").as("vid"),
-        posexplode(col("embedding")).as(Seq("i", "x0")))
-      .withColumn("x", col("x0").cast("double")).drop("x0")
-      .withColumn("blk", expr("CAST(i div 16 AS BIGINT)"))
+    explodedEmb(s, dir).withColumn("blk", expr("CAST(i div 16 AS BIGINT)"))
 
   /** PQ codebook: per (label, blk) sub-centroids — the label-partition
     * means (a deterministic, oracle-checkable stand-in for a trained
@@ -469,8 +465,7 @@ object PipelineQueries {
         // untested lever — A/B'd r10 (probes/px04g_r12.log): wash
         // warm, lane-1 "wins" were session codegen. BENCH_NOTES §0c
         // closes the adjudication: irreducible at tiny SF.
-        val raw = TextOps.shingleRows(Tables(s, dir, "documents"), 3)
-          .select(col("doc_id"), DetHash.h60(col("s")).as("sh"))
+        val raw = TextOps.shingleHashes(Tables(s, dir, "documents"), 3)
         val sizes = raw.groupBy("doc_id")
           .agg(size(collect_set(col("sh"))).as("sz"))
         // Hot-shingle cap + pair generation in ONE grouped pass: a
@@ -581,21 +576,14 @@ object PipelineQueries {
         // so let AQE pick broadcast vs shuffle from the measured size)
         val candTexts = Tables(s, dir, "documents")
           .join(candDocs, Seq("doc_id"), "left_semi")
-        val ds = TextOps.shingleRows(candTexts, 3)
-          .select(col("doc_id"), DetHash.h60(col("s")).as("sh"))
-          .distinct() // no persist: see the `wide` note above
-        val sizes = ds.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-        // Intersection per CANDIDATE pair (not per all-pairs key):
-        // expand each pair by d1's shingles, match d2's on (d2, sh).
-        val inter = cands
-          .join(ds.select(col("doc_id").as("d1"), col("sh")), Seq("d1"))
-          .join(ds.select(col("doc_id").as("d2"), col("sh")), Seq("d2", "sh"))
-          .groupBy("d1", "d2")
-          .agg(count(lit(1)).as("inter"))
+        // Intersection per CANDIDATE pair (not per all-pairs key); no
+        // persist of the hashes: see the `wide` note above
+        val (inter, sa, sb) = graft.pipeline.Dedup
+          .pairShingleOverlap(cands, "d1", candTexts, "d2", candTexts)
         agree
           .join(inter, Seq("d1", "d2"), "left")
-          .join(sizes.select(col("doc_id").as("d1"), col("sz").as("sa")), Seq("d1"))
-          .join(sizes.select(col("doc_id").as("d2"), col("sz").as("sb")), Seq("d2"))
+          .join(sa, Seq("d1"))
+          .join(sb, Seq("d2"))
           .select(col("d1"), col("d2"),
             expr("round(n_agree / 16e0, 6)").as("jac_est"),
             expr("round(coalesce(inter, 0) / (sa + sb - coalesce(inter, 0)), 6)")
@@ -1159,11 +1147,10 @@ object PipelineQueries {
     Decl(
       "px24_contamination",
       (s, dir) => {
-        val sh = TextOps.shingleRows(Tables(s, dir, "documents"), 5)
-          .select(col("doc_id"), DetHash.h60(col("s")).as("sh"))
-        val bench = sh.filter(col("doc_id") < 50)
-          .select(col("sh")).distinct()
-        sh.filter(col("doc_id") >= 50)
+        val docs = Tables(s, dir, "documents")
+        val bench = graft.pipeline.TextMetrics
+          .benchHashes(docs.filter(col("doc_id") < 50))
+        TextOps.shingleHashes(docs.filter(col("doc_id") >= 50), 5)
           .join(broadcast(bench), Seq("sh"))
           .groupBy("doc_id")
           .agg(count(lit(1)).as("n_shared"))
@@ -1183,10 +1170,9 @@ object PipelineQueries {
       "px62_decontam_scrub",
       (s, dir) => {
         val docs = Tables(s, dir, "documents")
-        val bench = TextOps.shingleRows(docs.filter(col("doc_id") < 50), 5)
-          .select(DetHash.h60(col("s")).as("sh")).distinct()
         graft.pipeline.TextMetrics.scrubContaminated(
-          docs.filter(col("doc_id") >= 50), bench)
+          docs.filter(col("doc_id") >= 50),
+          graft.pipeline.TextMetrics.benchHashes(docs.filter(col("doc_id") < 50)))
       },
       Some(s"""WITH $duckToksList,
               |st AS (SELECT doc_id,
@@ -1251,8 +1237,8 @@ object PipelineQueries {
     Decl(
       "px28_kmv_distinct",
       (s, dir) => {
-        val hs = TextOps.shingleRows(Tables(s, dir, "documents"), 3)
-          .select(DetHash.h60(col("s")).as("h")).distinct()
+        val hs = TextOps.shingleHashes(Tables(s, dir, "documents"), 3)
+          .select(col("sh").as("h")).distinct()
         val top = hs.orderBy("h").limit(64)
           .agg(max("h").as("hk"), count(lit(1)).as("ksz"))
         val exact = hs.agg(count(lit(1)).as("exact_nd"))
@@ -1352,14 +1338,13 @@ object PipelineQueries {
     Decl(
       "px33_source_overlap",
       (s, dir) => {
-        val hs = TextOps.shingleRows(
+        val hs = TextOps.shingleHashes(
             Tables(s, dir, "documents").select("source", "text"),
             5, idCol = "source")
-          .select(col("source"), DetHash.h60(col("s")).as("h"))
           .distinct()
         hs.alias("a")
           .join(hs.alias("b"),
-            col("a.h") === col("b.h") && col("a.source") < col("b.source"))
+            col("a.sh") === col("b.sh") && col("a.source") < col("b.source"))
           .groupBy(col("a.source").as("s1"), col("b.source").as("s2"))
           .agg(count(lit(1)).as("shared_hashes"))
       },
@@ -2308,11 +2293,11 @@ object PipelineQueries {
     Decl(
       "px56_bloom_contamination",
       (s, dir) => {
-        val sh = TextOps.shingleRows(Tables(s, dir, "documents"), 5)
-          .select(col("doc_id"), DetHash.h60(col("s")).as("sh"))
-        val bench = sh.filter(col("doc_id") < 50).select("sh").distinct()
+        val docs = Tables(s, dir, "documents")
+        val bench = graft.pipeline.TextMetrics
+          .benchHashes(docs.filter(col("doc_id") < 50))
         val bloom = BloomMc.buildLongBloom(bench, "sh", 1L << 20, 0.01)
-        sh.filter(col("doc_id") >= 50)
+        TextOps.shingleHashes(docs.filter(col("doc_id") >= 50), 5)
           .filter(BloomMc.mightContain(bloom, col("sh")))
           .join(bench, Seq("sh"))
           .groupBy("doc_id")
@@ -2678,13 +2663,9 @@ object PipelineQueries {
           .select("doc_id"), Seq("doc_id"), "left_semi")
         val uniq = graft.pipeline.Dedup.exactKeepers(gated)
           .withColumn("uniq", lit(1)).select("doc_id", "uniq")
-        val sh = TextOps.shingleRows(all, 5)
-          .select(col("doc_id"), DetHash.h60(col("s")).as("sh"))
-        val dirty = sh.filter(col("doc_id") >= 50)
-          .join(broadcast(
-            sh.filter(col("doc_id") < 50).select("sh").distinct()),
-            Seq("sh"))
-          .select("doc_id").distinct().withColumn("dirty", lit(1))
+        val dirty = graft.pipeline.TextMetrics
+          .contaminatedDocs(docs, all.filter(col("doc_id") < 50))
+          .withColumn("dirty", lit(1))
         docs.select("doc_id")
           .join(g, Seq("doc_id"))
           .join(uniq, Seq("doc_id"), "left")
@@ -3137,13 +3118,11 @@ object PipelineQueries {
       "px77_contam_fraction",
       (s, dir) => {
         // tiny-input de-skew (guide §2.5; see px71 / Tables.fanOut)
-        val dsh = TextOps.shingleRows(
-            Tables.fanOut(Tables(s, dir, "documents"), col("doc_id")), 5)
-          .select(col("doc_id"), DetHash.h60(col("s")).as("sh"))
-          .distinct()
-        val bench = dsh.filter(col("doc_id") < 50)
-          .select("sh").distinct()
-        val corpus = dsh.filter(col("doc_id") >= 50)
+        val docs = Tables.fanOut(Tables(s, dir, "documents"), col("doc_id"))
+        val bench = graft.pipeline.TextMetrics
+          .benchHashes(docs.filter(col("doc_id") < 50))
+        val corpus = TextOps.shingleHashes(docs, 5).distinct()
+          .filter(col("doc_id") >= 50)
         val tot = corpus.groupBy("doc_id")
           .agg(count(lit(1)).as("n_grams"))
         val hit = corpus.join(bench, Seq("sh"))
@@ -3381,9 +3360,8 @@ object PipelineQueries {
       "px83_contam_attribution",
       (s, dir) => {
         // tiny-input de-skew (guide §2.5; see px71 / Tables.fanOut)
-        val dsh = TextOps.shingleRows(
+        val dsh = TextOps.shingleHashes(
             Tables.fanOut(Tables(s, dir, "documents"), col("doc_id")), 5)
-          .select(col("doc_id"), DetHash.h60(col("s")).as("sh"))
           .distinct()
         val bench = dsh.filter(col("doc_id") < 50)
           .select(concat(lit("b"), pmod(col("doc_id"), lit(2)))

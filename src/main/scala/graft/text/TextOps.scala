@@ -123,6 +123,29 @@ object TextOps {
       .select(col(idCol), filter_tokens(tokensCol(col(textCol))).as("toks"))
       .select(col(idCol), explode(shinglesFromToks(col("toks"), k)).as("s"))
 
+  /** (idCol, sh) k-gram hash rows, `sh` = h60 of each [[shingleRows]]
+    * shingle, one row per occurrence: the ONE k-gram hash format of
+    * decontamination, shingle overlap and Jaccard verification. NULL
+    * or empty text and docs shorter than k emit no row.
+    */
+  def shingleHashes(docs: DataFrame, k: Int,
+                    idCol: String = "doc_id"): DataFrame =
+    shingleRows(docs, k, idCol)
+      .select(col(idCol), graft.functions.DetHash.h60(col("s")).as("sh"))
+
+  /** [[shingleHashes]] with `pos`, the 1-based shingle start (the
+    * oracle's list index), over a frame carrying a [[tokArrayCol]]
+    * array `toksCol`; the array is dropped, other columns ride along.
+    */
+  def positionalShingleHashes(tk: DataFrame, k: Int,
+                              toksCol: String = "tk"): DataFrame = {
+    val keep = tk.columns.toSeq.filter(_ != toksCol).map(col)
+    tk.select(keep :+ posexplode(shinglesFromToks(col(toksCol), k))
+        .as(Seq("_sh_p0", "_sh_s")): _*)
+      .select(keep ++ Seq((col("_sh_p0") + 1).as("pos"),
+        graft.functions.DetHash.h60(col("_sh_s")).as("sh")): _*)
+  }
+
   /** Default stoplist used by the stopword-filter operator (a stand-in
     * for the reference's side-loaded stoplist, `TrecQueryStats.java:40`).
     */

@@ -224,14 +224,13 @@ object ScaleProbe {
       // Broadcast is disabled for both join phases so the shuffle-size
       // cut is the thing actually measured, not hidden behind a
       // broadcast hash join of the small fixture bench set.
-      import graft.functions.{BloomMc, DetHash}
-      import graft.text.TextOps
-      val sh = TextOps.shingleRows(big, 5)
-        .select(col("doc_id"), DetHash.h60(col("s")).as("sh"))
-      val corpus = sh.filter(col("doc_id") % lit(10000000L) >= 50)
+      import graft.functions.BloomMc
+      val corpus = graft.text.TextOps.shingleHashes(big, 5)
+        .filter(col("doc_id") % lit(10000000L) >= 50)
         .localCheckpoint()
       val nsh = corpus.count()
-      val bench = sh.filter(col("doc_id") < 50).select("sh").distinct()
+      val bench = graft.pipeline.TextMetrics
+        .benchHashes(big.filter(col("doc_id") < 50))
         .localCheckpoint()
       val nb = bench.count()
       println(s"""[scale] {"phase":"bloom_sizes","n":$n,"bench_shingles":$nb,"corpus_shingles":$nsh}""")

@@ -19,10 +19,12 @@ import org.apache.spark.sql.functions._
   * linearly with corpus, no parallelism), while the de-skewed
   * assignment stays parallel — so the gap must WIDEN with N.
   *
-  * The perplexity scoring chain (shared by both px68 shapes) is
-  * materialized once up front and excluded from the timings — at real
-  * scale it is a written artifact (px29's output), and the de-skew
-  * verdict concerns only the assignment on top.
+  * The perplexity scoring chain (shared by both px68 shapes) is a lazy
+  * val, so phase `score_chain_shared` builds and times it (under AQE
+  * even a lazy `localCheckpoint` runs its shuffles when it plans) and
+  * the assignment phases reuse it; px69's slim frame is timed as
+  * `slim_frame` the same way. At real scale the chain is a written
+  * artifact (px29's output); the de-skew verdict concerns the assignment.
   *
   * Usage: `sbt "runMain graft.tools.SkewProbe [N]"` (default 500 ⇒
   * 2.5M docs). Results → BENCH_NOTES §0f addendum + probes/skew.log.
@@ -63,10 +65,10 @@ object SkewProbe {
     // only68: skip the px69 half (r12 — fills the 10M-doc px68 cell
     // the r11 run left empty; the score chain dominates wall time at
     // that N, so the px69 half is measured separately)
-    // ---- px68 shapes: shared per-doc scored frame, materialized ----
-    val p = graft.pipeline.TextMetrics.perplexity(big)
+    // ---- px68 shapes: shared per-doc scored frame, lazily checkpointed ----
+    lazy val p = graft.pipeline.TextMetrics.perplexity(big)
       .join(big.select(col("doc_id"), col("lang")), Seq("doc_id"))
-      .localCheckpoint()
+      .localCheckpoint(false)
     t("score_chain_shared")(p.count())
 
     var winB: Map[(String, Long), Long] = null
@@ -95,7 +97,7 @@ object SkewProbe {
     }
 
     // ---- px69 shapes: end-to-end on the slim (doc_id, lang) frame ----
-    val slim = big.select("doc_id", "lang").localCheckpoint()
+    lazy val slim = big.select("doc_id", "lang").localCheckpoint(false)
     t("slim_frame")(slim.count())
     var winS: (Long, Long) = null
     t("px69_window_r10") {

@@ -174,10 +174,8 @@ class ReadmeApiSpec extends SparkSpec {
   }
 
   test("curation quickstart: span-level decontamination") {
-    import graft.text.TextOps
     val evalDocs = docs.filter(col("doc_id") < 20)
-    val bench = TextOps.shingleRows(evalDocs, 5)
-      .select(graft.functions.DetHash.h60(col("s")).as("sh")).distinct()
+    val bench = TextMetrics.benchHashes(evalDocs, 5)
     val scrubbed = TextMetrics.scrubContaminated(
       docs.filter(col("doc_id") >= 20), bench)
     assert(scrubbed.count() ===

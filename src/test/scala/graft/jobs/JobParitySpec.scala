@@ -69,6 +69,35 @@ class JobParitySpec extends SparkSpec {
     assert(ir19.nonEmpty && rows(got) == ir19)
   }
 
+  /** docs >= 50 as the job input, docs < 50 as the benchmark: the
+    * split px24 and px62 use. */
+  private lazy val decontamIn: (String, String) = {
+    val all = spark.read.parquet(s"$sfTiny/documents.parquet")
+      .select("doc_id", "text")
+    all.filter(col("doc_id") >= 50).write.parquet(s"$work/dc_in")
+    all.filter(col("doc_id") < 50).write.parquet(s"$work/dc_bench")
+    (s"parquet:$work/dc_in", s"parquet:$work/dc_bench")
+  }
+
+  test("DecontaminateCorpus scrub: rows == px62") {
+    val (in, bench) = decontamIn
+    Jobs.decontaminateCorpus(spark, in, s"$work/dc_scrub", bench)
+    val got = rows(spark.read.parquet(s"$work/dc_scrub"))
+    val px62 = rows(query("px62_decontam_scrub").select("doc_id", "clean_text"))
+    assert(px62.nonEmpty && got == px62)
+  }
+
+  test("DecontaminateCorpus drop: rows == docs >= 50 outside px24's doc set") {
+    val (in, bench) = decontamIn
+    Jobs.decontaminateCorpus(spark, in, s"$work/dc_drop", bench, mode = "drop")
+    val got = rows(spark.read.parquet(s"$work/dc_drop"))
+    val px24 = query("px24_contamination").select("doc_id")
+    val kept = spark.read.parquet(s"$sfTiny/documents.parquet")
+      .filter(col("doc_id") >= 50).join(px24, Seq("doc_id"), "left_anti")
+      .select("doc_id", "text")
+    assert(!px24.isEmpty && got.nonEmpty && got == rows(kept))
+  }
+
   test("QueryTermCount -> TrecRunBaselines: top-5 per qid:model == ir26") {
     Jobs.queryTermCount(spark, docs, s"$work/aug.topics", topics)
     Jobs.trecRunBaselines(spark, docs, s"$work/baselines", s"$work/aug.topics")

@@ -730,6 +730,21 @@ class JobsSpec extends SparkSpec {
       Seq("input=2 dropped=1 kept=1"))
   }
 
+  test("DecontaminateCorpus: an unknown mode is refused, nothing written") {
+    import spark.implicits._
+    val w = Files.createTempDirectory("decmode").toString
+    Seq((100L, "the quick brown fox jumps")).toDF("doc_id", "text")
+      .write.parquet(s"$w/bench")
+    Seq((1L, "the quick brown fox jumps over")).toDF("doc_id", "text")
+      .write.parquet(s"$w/in")
+    val e = intercept[IllegalArgumentException] {
+      Jobs.decontaminateCorpus(spark, s"parquet:$w/in", s"$w/out",
+        s"parquet:$w/bench", mode = "dorp")
+    }
+    assert(e.getMessage.contains("dorp"), e.getMessage)
+    assert(!new java.io.File(s"$w/out").exists())
+  }
+
   test("TokenizeAndPack: lossless ids, bounded sequences, deterministic shards") {
     import spark.implicits._
     val w = Files.createTempDirectory("tokpack").toString

@@ -54,13 +54,36 @@ class DecontamSpec extends SparkSpec {
     import spark.implicits._
     val bench = benchOf(
       Seq((0L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text"))
-    val out = scrubMap(Seq(
+    val edge = Seq(
       (20L, null.asInstanceOf[String]),
       (21L, ""),
-      (22L, "   \t ")).toDF("doc_id", "text"), bench)
+      (22L, "   \t ")).toDF("doc_id", "text")
+    val out = scrubMap(edge, bench)
     assert(out(20L) === (("", 0L, 0L)))
     assert(out(21L) === (("", 0L, 0L)))
     assert(out(22L) === (("", 0L, 0L)))
+    // the shared k-gram helpers emit no hash row for these docs, nor
+    // for a doc shorter than k
+    val short = edge.union(Seq((23L, "alpha beta gamma delta"))
+      .toDF("doc_id", "text"))
+    val tk = short.select(col("doc_id"),
+      TextOps.tokArrayCol(col("text")).as("tk"))
+    assert(TextOps.shingleHashes(short, 5).isEmpty)
+    assert(TextOps.positionalShingleHashes(tk, 5).isEmpty)
+    assert(TextMetrics.benchHashes(short).isEmpty)
+    assert(TextMetrics.contaminatedDocs(short,
+      Seq((0L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text"))
+      .isEmpty)
+    // positions are 1-based shingle starts
+    val pos = TextOps.positionalShingleHashes(
+      Seq((1L, "Alpha beta gamma delta epsilon zeta"))
+        .toDF("doc_id", "text")
+        .select(col("doc_id"), TextOps.tokArrayCol(col("text")).as("tk")),
+      5).select("pos", "sh").as[(Int, Long)].collect().toSet
+    val h = (s: String) => Seq(s).toDF("s")
+      .select(DetHash.h60(col("s"))).as[Long].head()
+    assert(pos == Set(1 -> h("alpha beta gamma delta epsilon"),
+      2 -> h("beta gamma delta epsilon zeta")))
   }
 
   test("scrubDupSpans: min-(doc, pos) keeper survives, every later occurrence excised") {
