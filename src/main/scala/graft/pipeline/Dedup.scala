@@ -544,7 +544,7 @@ object Dedup {
     // to fetch dl for the typically tiny duplicated set; same values —
     // docLengths is size() of this same canonical token array)
     val sh = TextOps.positionalShingleHashes(
-      tokArrays(docs).withColumn("dl", size(col("tk")).cast("long")), n)
+      TextOps.tokArrays(docs).withColumn("dl", size(col("tk")).cast("long")), n)
     val dup = sh.groupBy("sh")
       .agg(min("doc_id").as("dmin"), max("doc_id").as("dmax"))
       .filter(col("dmin") < col("dmax")).select("sh")
@@ -741,15 +741,15 @@ object Dedup {
     * `b` naming docs of the caller-pruned `docsA`, `docsB`) →
     * ((a, b, inter) for pairs sharing ≥ 1 distinct hash, (a, sa),
     * (b, sb) distinct hash counts); Jaccard = inter / (sa + sb − inter).
-    * One frame passed as both sides is hashed once. Join type,
-    * threshold and ranking stay with the caller (px27, admit check).
+    * Join type, threshold and ranking stay with the caller (px27,
+    * admit check).
     */
   def pairShingleOverlap(pairs: DataFrame, a: String, docsA: DataFrame,
                          b: String, docsB: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
     def hashes(docs: DataFrame) = TextOps.shingleHashes(docs, 3).distinct()
     val shA = hashes(docsA)
-    val shB = if (docsB eq docsA) shA else hashes(docsB)
+    val shB = hashes(docsB)
     def side(sh: DataFrame, id: String) =
       sh.select(col("doc_id").as(id), col("sh"))
     def sizes(sh: DataFrame, id: String, n: String) =
@@ -800,7 +800,7 @@ object Dedup {
     * same in both engines.
     */
   def scrubDupSpans(docs: DataFrame, n: Int, minLen: Int): DataFrame = {
-    val tk = tokArrays(docs)
+    val tk = TextOps.tokArrays(docs)
     val covered = coveredPositions(tk, n)
     // no distinct(): the scrub kernel's collect_set dedups overlapping
     // spans' positions with map-side combine — one exchange fewer
@@ -815,14 +815,6 @@ object Dedup {
       TextMetrics.scrubByCoveredPositions(tk, isl)
     }
   }
-
-  /** (doc_id, tk) token arrays, empty array for token-less docs —
-    * [[graft.text.TextOps.tokArrayCol]], the ONE canonical definition
-    * (review r18: this was a hand-inlined copy of the exact idiom the
-    * r14 consolidation exists to prevent).
-    */
-  private def tokArrays(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), TextOps.tokArrayCol(col("text")).as("tk"))
 
   /** Covered positions per doc: every token position under a
     * NON-FIRST occurrence of a corpus-duplicated n-gram (the
@@ -888,7 +880,7 @@ object Dedup {
     */
   def dupRemovalSpans(docs: DataFrame, n: Int = 5,
                       minLen: Int = 15): DataFrame =
-    coveredIslands(coveredPositions(tokArrays(docs), n), minLen)
+    coveredIslands(coveredPositions(TextOps.tokArrays(docs), n), minLen)
       .select(col("doc_id"),
         col("_ds_s").cast("bigint").as("start_pos"),
         col("_ds_e").cast("bigint").as("end_pos"),
@@ -918,7 +910,7 @@ object Dedup {
     */
   def dupRunSpans(docs: DataFrame, n: Int = 5, minLen: Int = 15): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sh = TextOps.positionalShingleHashes(tokArrays(docs), n)
+    val sh = TextOps.positionalShingleHashes(TextOps.tokArrays(docs), n)
     val dupH = sh.groupBy("sh").agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2).select("sh")
     // shared island kernel; one shingle start per position, so no

@@ -323,8 +323,7 @@ object TextMetrics {
     // positional (doc, pos) exchanges the §0j A/B rejected — unlike
     // tokenizeAndPack's buffer, which was reducible to seqLen because
     // its output never needed the whole doc at once.
-    val tk = docs.select(col("doc_id"),
-      TextOps.tokArrayCol(col("text")).as("tk"))
+    val tk = TextOps.tokArrays(docs)
       .withColumn("tot", expr(
         "aggregate(tk, CAST(0 AS BIGINT), (a, x) -> a + length(x))"))
     val pairs = tk
@@ -422,9 +421,7 @@ object TextMetrics {
     // makes no k-gram — fail at build like the sibling numeric params
     require(k >= 1, s"winnowing k-gram size must be >= 1, got $k")
     require(w >= 1, s"winnowing window size must be >= 1, got $w")
-    val sh = TextOps.positionalShingleHashes(
-      docs.select(col("doc_id"), TextOps.tokArrayCol(col("text")).as("tk")),
-      k)
+    val sh = TextOps.positionalShingleHashes(TextOps.tokArrays(docs), k)
     val win = s"PARTITION BY doc_id ORDER BY pos" +
       s" ROWS BETWEEN CURRENT ROW AND ${w - 1} FOLLOWING"
     sh.withColumn("wn", expr(s"count(*) OVER ($win)"))
@@ -624,8 +621,7 @@ object TextMetrics {
     require(k >= 1, s"scrub shingle size must be >= 1, got $k")
     // null text folds to the empty token array, so null docs come out
     // as ('', 0, 0) like empty docs — not a NULL n_removed
-    val tk = docs.select(col("doc_id"),
-      TextOps.tokArrayCol(col("text")).as("tk"))
+    val tk = TextOps.tokArrays(docs)
     val covered = TextOps.positionalShingleHashes(tk, k)
       .join(broadcast(bench.select("sh").distinct()), Seq("sh"))
       .select(col("doc_id"),

@@ -133,14 +133,20 @@ object TextOps {
     shingleRows(docs, k, idCol)
       .select(col(idCol), graft.functions.DetHash.h60(col("s")).as("sh"))
 
-  /** [[shingleHashes]] with `pos`, the 1-based shingle start (the
-    * oracle's list index), over a frame carrying a [[tokArrayCol]]
-    * array `toksCol`; the array is dropped, other columns ride along.
+  /** (doc_id, tk) token arrays of a (doc_id, text) frame, empty
+    * array for token-less docs — [[tokArrayCol]], the input frame of
+    * [[positionalShingleHashes]] and of the shared scrub kernel.
     */
-  def positionalShingleHashes(tk: DataFrame, k: Int,
-                              toksCol: String = "tk"): DataFrame = {
-    val keep = tk.columns.toSeq.filter(_ != toksCol).map(col)
-    tk.select(keep :+ posexplode(shinglesFromToks(col(toksCol), k))
+  def tokArrays(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), tokArrayCol(col("text")).as("tk"))
+
+  /** [[shingleHashes]] with `pos`, the 1-based shingle start (the
+    * oracle's list index), over a frame with a `tk` token-array column
+    * ([[tokArrays]]); `tk` is dropped, other columns ride along.
+    */
+  def positionalShingleHashes(tk: DataFrame, k: Int): DataFrame = {
+    val keep = tk.columns.toSeq.filter(_ != "tk").map(col)
+    tk.select(keep :+ posexplode(shinglesFromToks(col("tk"), k))
         .as(Seq("_sh_p0", "_sh_s")): _*)
       .select(keep ++ Seq((col("_sh_p0") + 1).as("pos"),
         graft.functions.DetHash.h60(col("_sh_s")).as("sh")): _*)

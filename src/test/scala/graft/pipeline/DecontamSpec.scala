@@ -66,8 +66,7 @@ class DecontamSpec extends SparkSpec {
     // for a doc shorter than k
     val short = edge.union(Seq((23L, "alpha beta gamma delta"))
       .toDF("doc_id", "text"))
-    val tk = short.select(col("doc_id"),
-      TextOps.tokArrayCol(col("text")).as("tk"))
+    val tk = TextOps.tokArrays(short)
     assert(TextOps.shingleHashes(short, 5).isEmpty)
     assert(TextOps.positionalShingleHashes(tk, 5).isEmpty)
     assert(TextMetrics.benchHashes(short).isEmpty)
@@ -75,11 +74,9 @@ class DecontamSpec extends SparkSpec {
       Seq((0L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text"))
       .isEmpty)
     // positions are 1-based shingle starts
-    val pos = TextOps.positionalShingleHashes(
+    val pos = TextOps.positionalShingleHashes(TextOps.tokArrays(
       Seq((1L, "Alpha beta gamma delta epsilon zeta"))
-        .toDF("doc_id", "text")
-        .select(col("doc_id"), TextOps.tokArrayCol(col("text")).as("tk")),
-      5).select("pos", "sh").as[(Int, Long)].collect().toSet
+        .toDF("doc_id", "text")), 5).select("pos", "sh").as[(Int, Long)].collect().toSet
     val h = (s: String) => Seq(s).toDF("s")
       .select(DetHash.h60(col("s"))).as[Long].head()
     assert(pos == Set(1 -> h("alpha beta gamma delta epsilon"),
